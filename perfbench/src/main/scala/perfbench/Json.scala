@@ -1,0 +1,31 @@
+package perfbench
+
+/** Minimal JSON rendering for result lines and files. */
+object Json {
+  private def esc(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
+  def render(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => render(x)
+    case s: String => "\"" + esc(s) + "\""
+    case b: Boolean => b.toString
+    case d: Double =>
+      if (d.isNaN || d.isInfinite) "null" else java.lang.Double.toString(d)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: Metric => render(Map("value" -> m.value, "unit" -> m.unit))
+    case m: scala.collection.Map[_, _] =>
+      m.toSeq.map { case (k, x) => render(k.toString) + ": " + render(x) }
+        .mkString("{", ", ", "}")
+    case xs: Iterable[_] => xs.map(render).mkString("[", ", ", "]")
+    case other => render(other.toString)
+  }
+}
