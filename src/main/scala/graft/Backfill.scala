@@ -119,7 +119,8 @@ object Backfill {
 
   /** Statistics backfill off the real recorder schema: `statistics`
     * carries REAL epoch-seconds start_ts and a metadata_id FK onto
-    * `statistics_meta.id` — both adapted here, then [[statisticsPlan]]. */
+    * `statistics_meta.id` — both adapted here, then [[statisticsPlan]].
+    * Returns the number of points written. */
   def runStatistics(spark: SparkSession, dbPath: String,
                     cfg: InfluxSink.Config): Long = {
     // statistics-sourced watermark ONLY (the ha_type marker tag): the
@@ -132,12 +133,11 @@ object Backfill {
       .withColumn("start_ts_ms", round(col("start_ts") * 1000).cast("long"))
     val meta = Sources.sqliteJdbc(spark, dbPath, "statistics_meta")
       .withColumnRenamed("id", "metadata_id")
-    val points = statisticsPlan(stats, meta, watermark)
-      .observe("graft_stat_backfill", count(lit(1)).as("n_rows"))
-    InfluxSink.write(InfluxSink.asPoints(points), cfg)
-    points.count()
+    InfluxSink.write(InfluxSink.asPoints(statisticsPlan(stats, meta, watermark)), cfg)
   }
 
+  /** The states backfill: one recorder read, returning the number of
+    * points written. */
   def run(spark: SparkSession, dbPath: String, cfg: InfluxSink.Config,
           bugCompatUnitsFilter: Boolean = false): Long = {
     val watermark = InfluxWatermarkSource
@@ -146,27 +146,17 @@ object Backfill {
     val states = Sources.sqliteJdbc(spark, dbPath, "states")
     val meta = Sources.sqliteJdbc(spark, dbPath, "states_meta")
     val attrs = Sources.sqliteJdbc(spark, dbPath, "state_attributes")
-    val points = plan(states, meta, attrs, watermark)
-      .observe("graft_backfill", count(lit(1)).as("n_rows")) // A2 progress
-    InfluxSink.write(InfluxSink.asPoints(points), cfg)
-    points.count()
+    InfluxSink.write(InfluxSink.asPoints(plan(states, meta, attrs, watermark)), cfg)
   }
 
   /** CLI: graft.Backfill <sqlitePath>; Influx connection from env (S4,
-    * fail-fast — quirk Q8). */
+    * fail-fast — quirk Q8). Runs on [[GraftSession]]; a cluster master
+    * comes from `spark-submit --master`. */
   def main(args: Array[String]): Unit = {
     val dbPath = args.headOption.getOrElse(
       sys.error("usage: graft.Backfill <ha-recorder.sqlite>"))
     val cfg = InfluxSink.configFromEnv()
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession()
     val n = run(spark, dbPath, cfg,
       bugCompatUnitsFilter = sys.env.get("BUG_COMPAT_UNITS").exists(_.toBoolean))
     println(s"backfilled $n points")

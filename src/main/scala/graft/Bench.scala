@@ -1,12 +1,49 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import org.apache.spark.graft.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+
+import java.util.concurrent.atomic.AtomicLong
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
   * A failed query is visibly marked: its name lands in `errors` with the
   * exception text and is excluded from the total, so a broken query can
-  * never masquerade as a fast one. */
+  * never masquerade as a fast one.
+  *
+  * The detail file also carries, per query and averaged per pass, the
+  * Spark work the query did: jobs, stages, tasks, summed task time,
+  * shuffle read/write bytes, spill bytes and the longest task. This is
+  * the local stand-in for the Spark UI stage page (the UI is off), so a
+  * query's cost can be attributed to scheduling (many tiny stages),
+  * shuffle volume or compute. */
 object Bench {
+  /** Running totals of the listener bus's job, stage and task events. */
+  private final class Counters extends SparkListener {
+    val jobs, stages, tasks, taskMs, shuffleReadB, shuffleWriteB, spillB,
+      maxTaskMs = new AtomicLong
+    override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      stages.incrementAndGet()
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      val m = t.taskMetrics
+      if (m != null) {
+        taskMs.addAndGet(m.executorRunTime)
+        shuffleReadB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        shuffleWriteB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        spillB.addAndGet(m.memoryBytesSpilled)
+        maxTaskMs.accumulateAndGet(m.executorRunTime, (a, b) => math.max(a, b))
+      }
+    }
+    /** The counters since the last take, in [[counterNames]] order. */
+    def take(): Array[Double] =
+      Array(jobs, stages, tasks, taskMs, shuffleReadB, shuffleWriteB, spillB,
+        maxTaskMs).map(_.getAndSet(0).toDouble)
+  }
+  private val counterNames = Seq("jobs", "stages", "tasks", "task_ms",
+    "shuffle_read_b", "shuffle_write_b", "spill_b", "max_task_ms")
+
   private def esc(s: String): String = s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
@@ -19,17 +56,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // absorb one-time session / codegen / parquet-footer init so the first
     // measured query isn't charged for JVM warm-up (reads 1 row per table)
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -54,19 +81,18 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
       case None        => SparkEntry.queries
     }
-    // diagnostic knob (driver never sets it): SPARK_GRAFT_BENCH_ORDER=desc
-    // reverses the per-pass sweep order. Two quiet runs, one per order at
-    // the same HEAD, separate a family-shaped timing drift into
-    // position-in-suite effects (JIT/code-cache warm-up — the drift
-    // follows the order) vs real per-query cost (it follows the family);
-    // used for the r18 docs/dedup drift experiment (SCALING_r18.md).
-    val ordered0 = selected.toSeq.sortBy(_._1)
-    val ordered =
-      if (sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("desc"))
-        ordered0.reverse
-      else ordered0
+    val ordered = selected.toSeq.sortBy(_._1)
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // per-query counter sums over the passes. The bus is drained after
+    // each timed run, outside the timed region: listener events are
+    // async, so without the drain a run's late events would land on the
+    // next query
+    val work = scala.collection.mutable.Map.empty[String, Array[Double]]
+    val counters = new Counters
+    spark.sparkContext.addSparkListener(counters)
+    ListenerBridge.waitUntilEmpty(spark.sparkContext)
+    counters.take()
     var pass = 0
     while (pass < runs) {
       ordered.foreach { case (name, fn) =>
@@ -80,6 +106,10 @@ object Bench {
             failed(name) = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}"
             samples.remove(name)
           }
+          ListenerBridge.waitUntilEmpty(spark.sparkContext)
+          val c = counters.take()
+          if (samples.contains(name))
+            work(name) = work.get(name).fold(c)(_.zip(c).map { case (a, b) => a + b })
         }
       }
       pass += 1
@@ -109,6 +139,11 @@ object Bench {
     val qsRounded = ok.map { case (k, v) =>
       s""""${esc(k)}":${math.rint(v * 1000) / 1000}""" }
       .mkString("{", ",", "}")
+    val perPass = ok.map { case (name, _) =>
+      val n = samples(name).size
+      counterNames.zip(work(name)).map { case (k, v) => s""""$k":${v / n}""" }
+        .mkString(s""""${esc(name)}":{""", ",", "}")
+    }.mkString("{", ",", "}")
     val errs = failed.map { case (k, m) => s""""${esc(k)}":"${esc(m)}"""" }
       .mkString("{", ",", "}")
     val total = ok.map(_._2).sum
@@ -116,8 +151,9 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json")
     val summary = s"""{"metric":"total","value":$total,"unit":"sec","n_ok":${ok.size},"n_failed":${failed.size},"runs_per_query":$runs,"agg":"median","protocol":"interleaved-median-of-$runs","value_min":$totalMin,"sf":"${esc(sfDir)}","errors":$errs,"queries":$qsRounded,"detail_file":"${esc(outPath)}"}"""
     println(summary)
-    // the loss-proof full artifact: summary fields + both per-query maps
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","n_ok":${ok.size},"n_failed":${failed.size},"runs_per_query":$runs,"agg":"median","protocol":"interleaved-median-of-$runs","value_min":$totalMin,"sf":"${esc(sfDir)}","errors":$errs,"queries":$qs,"queries_min":$qsMin}"""
+    // the loss-proof full artifact: summary fields, both per-query maps
+    // and the per-query counters
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","n_ok":${ok.size},"n_failed":${failed.size},"runs_per_query":$runs,"agg":"median","protocol":"interleaved-median-of-$runs","value_min":$totalMin,"sf":"${esc(sfDir)}","errors":$errs,"queries":$qs,"queries_min":$qsMin,"counters_per_pass":$perPass}"""
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

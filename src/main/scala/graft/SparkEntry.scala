@@ -220,14 +220,10 @@ object SparkEntry {
     s.read.parquet(dir)
   }
 
-  /** Flagship query on sf=0.001; driver smoke-checks rows>0. The observe()
-    * metric is the A2 row counter (reference's rows_fetched progress count,
-    * sqllite2influxdb.py:181,188) — collected by a QueryExecutionListener,
-    * zero cost in the plan. */
+  /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     val d = "/root/testdata/sf0.001"
     Transform.flatPipeline(states(spark, d), meta(spark, d), attrs(spark, d))
-      .observe("graft_entry", count(lit(1)).as("n_rows"))
   }
 
   // ---- queries ----------------------------------------------------------

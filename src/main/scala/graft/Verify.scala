@@ -1,25 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // non-ANSI casts (cast failure → NULL) mirror the reference's
-      // per-field try/except-skip semantics (quirk Q4/Q8)
-      .config("spark.sql.ansi.enabled", "false")
-      // last-writer-wins map concat = reference point.field() overwrite (Q7)
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // local-iteration escape hatch: SPARK_GRAFT_ONLY=q1,q2 restricts the
     // dump to the named queries; the driver never sets it (full run).

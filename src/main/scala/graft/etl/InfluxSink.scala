@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.model.InfluxPoint
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 
 import java.io.OutputStream
 import java.net.{HttpURLConnection, URL}
@@ -12,13 +12,16 @@ import java.nio.charset.StandardCharsets
   * synchronously one 10k batch at a time from a single thread,
   * sqllite2influxdb.py:100-161).
   *
-  * Design: `Dataset[InfluxPoint].foreachPartition` — each executor partition
+  * Design: `Dataset[InfluxPoint].mapPartitions` — each executor partition
   * builds line-protocol strings locally and POSTs straight to
   * `/api/v2/write`, giving N-way parallel writes with bounded memory
   * (O(batchSize) lines resident, mirroring the reference's O(BATCH_SIZE)
-  * pull loop at sqllite2influxdb.py:183-189). Idempotent by Influx point
+  * pull loop at sqllite2influxdb.py:183-189); [[write]] returns the lines
+  * it wrote, from one pass over the input. Idempotent by Influx point
   * overwrite semantics (same measurement+tagset+time ⇒ upsert), so Spark
-  * task retries are safe (SURVEY §2.10-T3).
+  * task retries are safe (SURVEY §2.10-T3). Streaming writes go through
+  * the DSv2 sink ([[graft.sources.InfluxDataSource]],
+  * `writeStream.format("influx")`).
   *
   * `pointByPoint` reproduces the reference's DEBUG per-point write mode
   * (sqllite2influxdb.py:148-153).
@@ -141,15 +144,20 @@ object InfluxSink {
     }
   }
 
-  /** Write a point Dataset. Partition-parallel; within a partition, batches
-    * of `batchSize` exactly like the reference's fetchmany loop. */
+  /** Write a point Dataset and return the number of lines written.
+    * Partition-parallel; within a partition, batches of `batchSize` exactly
+    * like the reference's fetchmany loop. Each partition returns the lines
+    * its transport accepted, summed on the driver in the same job, so only
+    * successful task attempts count and the input is evaluated once. */
   def write(points: Dataset[InfluxPoint], cfg: Config,
-            writerFactory: Config => LineWriter = new HttpLineWriter(_)): Unit = {
+            writerFactory: Config => LineWriter = new HttpLineWriter(_)): Long = {
     val batch = if (cfg.pointByPoint) 1 else cfg.batchSize
-    points.foreachPartition { it: Iterator[InfluxPoint] =>
+    points.mapPartitions { it: Iterator[InfluxPoint] =>
       val w = writerFactory(cfg)
-      it.map(toLine).grouped(batch).foreach(g => w.writeBatch(g))
-    }
+      var n = 0L
+      it.map(toLine).grouped(batch).foreach { g => w.writeBatch(g); n += g.size }
+      Iterator.single(n)
+    }(Encoders.scalaLong).collect().sum
   }
 
   /** points DataFrame (Schemas.influxPoint columns) → typed Dataset. */

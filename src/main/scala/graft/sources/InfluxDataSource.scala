@@ -22,8 +22,9 @@ import scala.collection.mutable.ArrayBuffer
   * (measurement, tagset, time).
   *
   * Options: url, org, bucket, token, batchSize, pointByPoint — same knobs
-  * as the reference's .env (S4). The foreachPartition writer in
-  * [[graft.etl.InfluxSink]] remains as the lightweight v1 path.
+  * as the reference's .env (S4). This is the only streaming write path
+  * (`writeStream.format("influx")`); batch writes can also go through
+  * [[graft.etl.InfluxSink.write]], which returns the lines it wrote.
   */
 class InfluxDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "influx"

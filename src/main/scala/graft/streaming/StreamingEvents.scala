@@ -96,25 +96,6 @@ object StreamingEvents {
       .join(baseFps, Seq("fp"), "left_anti")
   }
 
-  /** T1 streaming load path: drive any streaming point DataFrame
-    * (Schemas.influxPoint columns) into the Influx sink one micro-batch at
-    * a time — the streaming twin of the reference's fetchmany→write loop,
-    * with checkpointed offsets as the resume point (T2). Each micro-batch
-    * reuses the batch sink, so batching/retry/idempotence semantics are
-    * identical in both modes. */
-  def influxSink(points: DataFrame, cfg: graft.etl.InfluxSink.Config,
-                 checkpointDir: String,
-                 writerFactory: graft.etl.InfluxSink.Config => graft.etl.InfluxSink.LineWriter =
-                   new graft.etl.InfluxSink.HttpLineWriter(_)): org.apache.spark.sql.streaming.StreamingQuery =
-    points.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.etl.InfluxSink.write(
-          graft.etl.InfluxSink.asPoints(batch.toDF()), cfg, writerFactory)
-      }
-      .start()
-
   final case class SessionUpdate(user_id: Long, session_start_ms: Long,
                                  session_end_ms: Long, n_events: Long,
                                  closed: Boolean)

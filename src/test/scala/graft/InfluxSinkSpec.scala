@@ -85,7 +85,7 @@ class InfluxSinkSpec extends AnyFunSuite with Matchers {
     val ds = spark.createDataset(points).repartition(2)
     val cfg = InfluxSink.Config("http://x", "o", "b", "tok", batchSize = 10)
     ds.sparkSession.sparkContext.setJobDescription("sink-test")
-    InfluxSink.write(ds, cfg, _ => RecordingWriter)
+    InfluxSink.write(ds, cfg, _ => RecordingWriter) shouldBe 25
     val batches = RecordingWriter.drain()
     batches.map(_.size).sum shouldBe 25
     all(batches.map(_.size)) should be <= 10
@@ -101,10 +101,20 @@ class InfluxSinkSpec extends AnyFunSuite with Matchers {
       InfluxPoint("m", Map(), Map("value" -> 1.0), Map(), 1L),
       InfluxPoint("m", Map(), Map("value" -> 2.0), Map(), 2L))).coalesce(1)
     val cfg = InfluxSink.Config("http://x", "o", "b", "tok", pointByPoint = true)
-    InfluxSink.write(ds, cfg, _ => RecordingWriter)
+    InfluxSink.write(ds, cfg, _ => RecordingWriter) shouldBe 2
     val batches = RecordingWriter.drain()
     batches.size shouldBe 2
     all(batches.map(_.size)) shouldBe 1
+  }
+
+  test("write: an empty Dataset returns 0 and posts nothing") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val ds = spark.createDataset(Seq.empty[InfluxPoint]).repartition(2)
+    val cfg = InfluxSink.Config("http://x", "o", "b", "tok")
+    RecordingWriter.drain()
+    InfluxSink.write(ds, cfg, _ => RecordingWriter) shouldBe 0
+    RecordingWriter.drain() shouldBe empty
   }
 
   test("configFromEnv: fail-fast on missing/invalid values (Q8)") {

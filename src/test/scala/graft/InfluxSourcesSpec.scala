@@ -113,9 +113,10 @@ class InfluxSourcesSpec extends AnyFunSuite with Matchers {
         HaViews.stateAttributes(Tables.events(spark, d))).drop("event_id"))
       val c = cfg(s"http://127.0.0.1:${server.getAddress.getPort}")
         .copy(batchSize = 200)
-      InfluxSink.write(points, c)
+      val written = InfluxSink.write(points, c)
       val lines = received.toArray(Array.empty[String]).flatMap(_.split("\n"))
       lines.length shouldBe points.count()
+      written shouldBe lines.length
       // spot-check line shape: ...fields... <ns-timestamp>
       lines.take(5).foreach { l =>
         l should fullyMatch regex """.* \d{13,}"""

@@ -1,7 +1,6 @@
 package graft
 
-import graft.etl.{HaViews, InfluxSink, Tables, Transform}
-import graft.streaming.StreamingEvents
+import graft.sources.InfluxTransports
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -9,7 +8,8 @@ import org.scalatest.matchers.should.Matchers
 import java.nio.file.Files
 
 /** T1/T2 streaming load: micro-batched points → Influx line protocol via
-  * foreachBatch, with checkpointed offsets. */
+  * the DSv2 streaming sink (`writeStream.format("influx")`), with
+  * checkpointed offsets. */
 class StreamingSinkSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
 
@@ -21,9 +21,12 @@ class StreamingSinkSpec extends AnyFunSuite with Matchers {
     val points = source.toDF()
       .toDF("measurement", "tags", "fields_num", "fields_str", "time_ms")
     val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    InfluxTransports.testOverride = Some(RecordingWriter)
     RecordingWriter.drain() // reset shared recorder
-    val cfg = InfluxSink.Config("http://unused", "o", "b", "t", batchSize = 100)
-    val q = StreamingEvents.influxSink(points, cfg, ckpt, _ => RecordingWriter)
+    val q = points.writeStream.format("influx")
+      .option("url", "http://unused").option("token", "t")
+      .option("batchSize", "100")
+      .option("checkpointLocation", ckpt).outputMode("append").start()
     try {
       source.addData(("C", Map("source" -> "HA"), Map("value" -> 1.5), Map.empty[String, String], 1000L))
       q.processAllAvailable()
@@ -35,6 +38,9 @@ class StreamingSinkSpec extends AnyFunSuite with Matchers {
       lines.length shouldBe 3
       lines.count(_.startsWith("C,")) shouldBe 1
       lines.count(_.startsWith("pct,")) shouldBe 2
-    } finally q.stop()
+    } finally {
+      q.stop()
+      InfluxTransports.testOverride = None
+    }
   }
 }

@@ -2,24 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (same quirk-relevant config as
-  * Verify/Bench: non-ANSI casts, LAST_WIN map concat, UTC). */
+/** One shared local session for all suites: [[GraftSession]] with a fixed
+  * four cores, so the suites plan the same on every host. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(cores = 4, logLevel = "ERROR",
+    warehouseDir = Some("/tmp/graft-test-warehouse"))
 
   /** A session with its OWN SQLConf (same SparkContext, shared state, and
     * extensions). Suites that mutate plan-affecting session confs — AQE
