@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session every entry point starts from: Bench, Verify, Backfill,
-  * PlanAudit, ScaleGen, StreamingVerify and the test suites.
+  * PlanAudit, ScaleGen and the test suites.
   *
   * `local[cores]` with `cores` shuffle partitions, where `cores` defaults
   * to SPARK_GRAFT_CPUS, else the JVM's processor count. A master given

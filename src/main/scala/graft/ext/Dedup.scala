@@ -176,9 +176,13 @@ object Dedup {
     // checkpoint cuts the LSH lineage; the edge count rides the SAME
     // eager action as an observe metric (zero extra jobs) to gate the
     // size-adaptive strategy below
+    // ids are cast to bigint once, so the driver and distributed paths
+    // emit one schema whatever the integral type of the input ids
     val obsE = org.apache.spark.sql.Observation("cc_edges")
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+    val a = col("doc_a").cast("bigint")
+    val b = col("doc_b").cast("bigint")
+    val edges = pairs.select(a.as("src"), b.as("dst"))
+      .union(pairs.select(b.as("src"), a.as("dst")))
       .observe(obsE, count(lit(1)).as("n"))
       .localCheckpoint()
     // r21, size-adaptive strategy (the BPE-trainer pattern, guide §1.2):

@@ -48,10 +48,13 @@ object Graph {
     import spark.implicits._
     val teleport = scale * 15L / 100L
     // the pair list is materialized ONCE (observe rides the eager
-    // checkpoint, so the gate count costs no extra job); both paths below
-    // consume the cached pairs, never the LSH plan again
+    // checkpoint, so the pair count costs no extra job); both paths below
+    // consume the cached pairs, never the LSH plan again. Ids are cast to
+    // bigint once, so both paths emit one schema whatever the input type.
     val obsP = org.apache.spark.sql.Observation("pr_pairs")
-    val pairsCk = pairs.select(col("doc_a"), col("doc_b"))
+    val pairsCk = pairs
+      .select(col("doc_a").cast("bigint").as("doc_a"),
+        col("doc_b").cast("bigint").as("doc_b"))
       .observe(obsP, count(lit(1)).as("n"))
       .localCheckpoint()
     val nPairs = obsP.get("n").asInstanceOf[Long]
@@ -62,11 +65,13 @@ object Graph {
     // (re-proved by the dedup_pagerank oracle hash and GraphSpec's
     // path-equality gate). When the measured node and pair counts are
     // driver-sized, the three rounds run locally after two collects
-    // instead of one join+aggregate+join round each. Past the bound the
-    // distributed loop below is unchanged — at 10⁹ nodes the gate fails
-    // and nothing is collected.
-    if (nodes.count() <= maxDriverGraph && 2 * nPairs <= maxDriverGraph) {
-      val ids = nodes.select(col("doc_id")).as[Long].collect()
+    // instead of one join+aggregate+join round each. The already-observed
+    // pair count is tested first, so past its bound the node count (one
+    // scan of `nodes`) never runs; the distributed loop below is
+    // unchanged — at 10⁹ nodes the gate fails and nothing is collected.
+    val nodeIds = nodes.select(col("doc_id").cast("bigint").as("doc_id"))
+    if (2 * nPairs <= maxDriverGraph && nodes.count() <= maxDriverGraph) {
+      val ids = nodeIds.as[Long].collect()
       val ps = pairsCk.as[(Long, Long)].collect()
       val deg = scala.collection.mutable.HashMap.empty[Long, Long]
       ps.foreach { case (a, b) =>
@@ -92,17 +97,17 @@ object Graph {
     val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // one materialization; every iteration re-joins this, not the LSH plan
     val edgesDeg = edges.join(deg, "src").localCheckpoint()
-    val ids = nodes.select(col("doc_id"))
 
-    var ranks = ids.select(col("doc_id"), lit(scale).as("rank"))
+    var ranks = nodeIds.select(col("doc_id"), lit(scale).as("rank"))
     for (_ <- 1 to iters) {
       val contrib = edgesDeg
         .join(ranks, edgesDeg("src") === ranks("doc_id"))
         .select(col("dst"), expr("rank div outdeg").as("c"))
       val incoming = contrib.groupBy(col("dst"))
         .agg(sum(col("c")).as("m"))
-      ranks = ids.join(incoming, ids("doc_id") === incoming("dst"), "left")
-        .select(ids("doc_id"),
+      ranks = nodeIds
+        .join(incoming, nodeIds("doc_id") === incoming("dst"), "left")
+        .select(nodeIds("doc_id"),
           expr(s"CAST($teleport AS BIGINT) + " +
             s"(85 * coalesce(m, CAST(0 AS BIGINT))) div 100").as("rank"))
     }

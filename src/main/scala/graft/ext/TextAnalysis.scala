@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.unsafe.types.UTF8String
 
 /** X4 + training-data text ops over the `documents` fixture: token counting,
   * quality scoring, language-ID heuristic, fingerprinting. All pure
@@ -489,8 +490,17 @@ object TextAnalysis {
         }
         if (totals.isEmpty) r = nMerges
         else {
-          val ((l, rr), cnt) = totals.minBy { case ((a, b), c) =>
-            (-c, a, b)
+          // ties break in UTF-8 byte (= code-point) order, Spark's string
+          // order in the distributed orderBy — not String.compareTo's
+          // UTF-16 order, which ranks surrogate pairs below U+E000–U+FFFF
+          def utf8(s: String) = UTF8String.fromString(s)
+          val ((l, rr), cnt) = totals.reduce { (x, y) =>
+            if (x._2 != y._2) { if (x._2 > y._2) x else y }
+            else {
+              val c = utf8(x._1._1).compareTo(utf8(y._1._1))
+              if (c < 0 || (c == 0 &&
+                  utf8(x._1._2).compareTo(utf8(y._1._2)) < 0)) x else y
+            }
           }
           merges += ((r + 1L, l, rr, cnt))
           // greedy left-to-right non-overlapping replacement — the same

@@ -13,11 +13,12 @@ class BpeTrainSpec extends AnyFunSuite with Matchers {
   import spark.implicits._
 
   /** Classic sequential BPE (Sennrich et al. 2016) over word counts, with
-    * the production tie-break: (count DESC, left ASC, right ASC). */
+    * the production tie-break: (count DESC, left ASC, right ASC), symbols
+    * split and compared by code point (Spark's UTF-8 string order). */
   private def referenceBpe(wordCounts: Map[String, Long],
                            nMerges: Int): Seq[(Long, String, String, Long)] = {
     var vocab: Map[Seq[String], Long] = wordCounts.map { case (w, n) =>
-      (w.map(_.toString) :+ "</w>") -> n
+      (w.codePoints.toArray.toSeq.map(Character.toString) :+ "</w>") -> n
     }
     val out = Seq.newBuilder[(Long, String, String, Long)]
     var r = 0
@@ -28,8 +29,10 @@ class BpeTrainSpec extends AnyFunSuite with Matchers {
       }.groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
       if (pairCounts.isEmpty) done = true
       else {
+        import scala.math.Ordering.Implicits.seqOrdering
+        def cps(s: String): Seq[Int] = s.codePoints.toArray.toSeq
         val ((l, rr), cnt) = pairCounts.toSeq
-          .minBy { case ((a, b), c) => (-c, a, b) }
+          .minBy { case ((a, b), c) => (-c, cps(a), cps(b)) }
         out += ((r + 1L, l, rr, cnt))
         vocab = vocab.map { case (syms, n) =>
           val acc = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -90,15 +93,22 @@ class BpeTrainSpec extends AnyFunSuite with Matchers {
 
   test("distributed rounds (forced past the driver-size gate) equal the " +
     "reference — pins the >maxDriverWords path the fixtures never reach") {
-    val texts = Seq(
-      "low low low low low",
-      "lower lower newest newest",
-      "newest newest newest newest widest widest widest")
-    val docs = texts.zipWithIndex
-      .map { case (t, i) => (i.toLong, t, "web", "en") }
-      .toDF("doc_id", "text", "source", "lang")
-    val got = TextAnalysis.bpeTrain(docs, 12, maxDriverWords = 0L)
-      .as[(Long, String, String, Long)].collect().sortBy(_._1).toSeq
-    got shouldBe referenceBpe(wordCounts(texts), 12)
+    // the second corpus ties a supplementary character with U+E000: UTF-16
+    // order ranks the surrogate pair first, code-point order ranks it last,
+    // and both gate paths must pick the code-point order
+    Seq(
+      Seq("low low low low low",
+        "lower lower newest newest",
+        "newest newest newest newest widest widest widest"),
+      Seq("\uD835\uDC00 \uE000")).foreach { texts =>
+      val docs = texts.zipWithIndex
+        .map { case (t, i) => (i.toLong, t, "web", "en") }
+        .toDF("doc_id", "text", "source", "lang")
+      def merges(maxDriverWords: Long) =
+        TextAnalysis.bpeTrain(docs, 12, maxDriverWords = maxDriverWords)
+          .as[(Long, String, String, Long)].collect().sortBy(_._1).toSeq
+      merges(0L) shouldBe referenceBpe(wordCounts(texts), 12)
+      merges(Long.MaxValue) shouldBe merges(0L)
+    }
   }
 }

@@ -139,25 +139,42 @@ class ChecksSpec extends AnyFunSuite with Matchers {
     out("nchars_1_10000") shouldBe ((1L, 0L)) // the 0-length doc
   }
 
-  test("eventsRules: retention window, type domain and value sign gated") {
+  private lazy val ruleEvents = {
     val ts0 = java.sql.Timestamp.from(
       java.time.Instant.parse("2024-06-01T00:00:00Z"))
     val tsOld = java.sql.Timestamp.from(
       java.time.Instant.parse("2023-12-31T23:59:59Z"))
-    val events = Seq(
+    Seq(
       (1L, ts0, 3L, "click", 1.0, "{}"),
       (2L, tsOld, 4L, "view", 2.0, "{}"),    // outside retention
       (3L, ts0, 5L, "hover", 3.0, "{}"),     // bad type
       (4L, ts0, 6L, "error", 0.0, "{}"),     // non-positive value
       (5L, ts0, -1L, "signup", 4.0, "{}"))   // negative user
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val out = Checks.eventsRules(events)
+  }
+
+  test("eventsRules: retention window, type domain and value sign gated") {
+    val out = Checks.eventsRules(ruleEvents)
       .collect().map(r => r.getString(0) -> (r.getLong(2), r.getLong(3))).toMap
     out("event_id_not_null") shouldBe ((0L, 1L))
     out("ts_in_retention") shouldBe ((1L, 0L))
     out("event_type_domain") shouldBe ((1L, 0L))
     out("value_positive") shouldBe ((1L, 0L))
     out("user_id_nonneg") shouldBe ((1L, 0L))
+  }
+
+  test("checkRules over three split inputs, summed per rule with pass " +
+    "recomputed, ≡ eventsRules over the whole input") {
+    val parts = Seq(col("event_id") <= 2, col("event_id").between(3, 4),
+      col("event_id") === 5).map(p =>
+      Checks.checkRules(ruleEvents.filter(p), Checks.eventsRuleSet)
+        .as[(String, Long, Long, Long)].collect())
+    val summed = parts.flatten.groupBy(_._1).map { case (id, rs) =>
+      val v = rs.map(_._3).sum
+      (id, rs.map(_._2).sum, v, if (v == 0) 1L else 0L)
+    }.toSet
+    summed shouldBe Checks.eventsRules(ruleEvents)
+      .as[(String, Long, Long, Long)].collect().toSet
   }
 
   test("keyUniqueness: duplicate and NULL keys reported per declared key") {

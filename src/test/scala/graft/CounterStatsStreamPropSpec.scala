@@ -20,7 +20,7 @@ class CounterStatsStreamPropSpec extends AnyFunSuite {
   private val t0 = 1704067200000L
 
   private val genCase
-      : Gen[(List[(Long, Long, Long, Option[Double])], Int, Int)] =
+      : Gen[(List[(Long, Long, Long, Option[Double])], Int, Int, Long)] =
     for {
       n <- Gen.chooseNum(0, 40)
       rows <- Gen.listOfN(n, for {
@@ -35,16 +35,19 @@ class CounterStatsStreamPropSpec extends AnyFunSuite {
       } yield (user, ms, v))
       cut1 <- Gen.chooseNum(0, n)
       cut2 <- Gen.chooseNum(0, n)
+      // hourly, and the 30- and 15-minute grids the half- and
+      // quarter-hour zones' calendar tiers read
+      everyMs <- Gen.oneOf(3600000L, 1800000L, 900000L)
     } yield (rows.zipWithIndex.map { case ((u, ms, v), i) =>
       (i.toLong + 1, u, ms, v)
-    }, math.min(cut1, cut2), math.max(cut1, cut2))
+    }, math.min(cut1, cut2), math.max(cut1, cut2), everyMs)
 
   private type Key = (Long, Long)
   private type Row3 = (Double, Double, Double)
 
   test("counterStatsStream ≡ batch counterStatsHourly under random " +
     "streams and trigger splits, EXACT (property)") {
-    val prop = Prop.forAllNoShrink(genCase) { case (rows0, c1, c2) =>
+    val prop = Prop.forAllNoShrink(genCase) { case (rows0, c1, c2, everyMs) =>
       import spark.implicits._
       implicit val ctx = spark.sqlContext
       val rows = rows0.sortBy(r => (r._3, r._1))
@@ -53,7 +56,7 @@ class CounterStatsStreamPropSpec extends AnyFunSuite {
         .selectExpr("event_id", "user_id", "value",
           "timestamp_millis(ms) AS ts")
       val name = s"cstats_${System.nanoTime()}"
-      val q = StreamingEvents.counterStatsStream(df).toDF()
+      val q = StreamingEvents.counterStatsStream(df, everyMs).toDF()
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       val got: Map[Key, Row3] = try {
@@ -74,7 +77,7 @@ class CounterStatsStreamPropSpec extends AnyFunSuite {
         else EventsExt.counterStatsHourly(
             rows.toDF("event_id", "user_id", "ms", "value")
               .selectExpr("event_id", "user_id", "value",
-                "timestamp_millis(ms) AS ts"))
+                "timestamp_millis(ms) AS ts"), everyMs)
           .as[(Long, Long, Double, Double, Double)].collect()
           .map(r => (r._1, r._2) -> ((r._3, r._4, r._5))).toMap
       val msg = s"counter stream mismatch\n  got= ${got.toSeq.sortBy(_._1)}\n" +

@@ -139,13 +139,21 @@ class DedupSpec extends AnyFunSuite with Matchers {
   test("canonicalClusters: driver union-find equals the distributed " +
     "label-propagation fixpoint") {
     // branchy components + a chain + a singleton pair — both strategies
-    // must emit the identical (doc_id, canonical_id) set
+    // must emit the identical (doc_id, canonical_id) set, and one bigint
+    // schema for Long and Int ids alike
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 9L), (5L, 7L), (4L, 9L),
       (11L, 12L), (10L, 12L), (20L, 21L)).toDF("doc_a", "doc_b")
-    def rows(maxDriverEdges: Long) =
-      Dedup.canonicalClusters(pairs, maxDriverEdges = maxDriverEdges)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    rows(maxDriverEdges = Long.MaxValue) shouldBe rows(maxDriverEdges = 0L)
+    val intPairs = pairs.selectExpr("CAST(doc_a AS INT) AS doc_a",
+      "CAST(doc_b AS INT) AS doc_b")
+    Seq(pairs, intPairs).foreach { p =>
+      val driver = Dedup.canonicalClusters(p, maxDriverEdges = Long.MaxValue)
+      val dist = Dedup.canonicalClusters(p, maxDriverEdges = 0L)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      driver.schema.map(f => (f.name, f.dataType)) shouldBe
+        dist.schema.map(f => (f.name, f.dataType))
+      rows(driver) shouldBe rows(dist)
+    }
   }
 
   test("paragraphDedup: first occurrence wins across docs, in-doc dups die, " +

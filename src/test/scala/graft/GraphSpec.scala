@@ -37,14 +37,23 @@ class GraphSpec extends AnyFunSuite with Matchers {
 
   test("pageRank: driver fold equals the distributed iteration") {
     // branchy graph with a hub, a chain, a 2-cycle and isolated nodes —
-    // both strategies must emit identical exact-integer ranks
+    // both strategies must emit identical exact-integer ranks, and one
+    // bigint schema for Long and Int ids alike
     val nodes = (0L to 12L).toDF("doc_id")
     val pairs = Seq((0L, 1L), (0L, 2L), (0L, 3L), (3L, 4L), (4L, 5L),
       (6L, 7L), (0L, 7L), (8L, 9L)).toDF("doc_a", "doc_b")
-    def ranks(gate: Long) =
-      Graph.pageRank(nodes, pairs, maxDriverGraph = gate).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    ranks(Long.MaxValue) shouldBe ranks(0L)
+    val intNodes = nodes.selectExpr("CAST(doc_id AS INT) AS doc_id")
+    val intPairs = pairs.selectExpr("CAST(doc_a AS INT) AS doc_a",
+      "CAST(doc_b AS INT) AS doc_b")
+    Seq((nodes, pairs), (intNodes, intPairs)).foreach { case (n, p) =>
+      val driver = Graph.pageRank(n, p, maxDriverGraph = Long.MaxValue)
+      val dist = Graph.pageRank(n, p, maxDriverGraph = 0L)
+      def ranks(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      driver.schema.map(f => (f.name, f.dataType)) shouldBe
+        dist.schema.map(f => (f.name, f.dataType))
+      ranks(driver) shouldBe ranks(dist)
+    }
   }
 
   test("pageRank: total mass is conserved minus truncation and leakage") {

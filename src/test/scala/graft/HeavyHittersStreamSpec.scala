@@ -70,6 +70,17 @@ class HeavyHittersStreamSpec extends AnyFunSuite with Matchers {
         rows.size should be <= k
       }
       finalRows.map(_._1).toSet shouldBe Set("en", "de")
+      // and the final summary IS the sequential MG run over the whole
+      // stream in arrival order, resumed from state at each trigger
+      val agg = new graft.functions.HeavyHittersAggregator(k)
+      val sequential = batches.flatten.groupBy(_._1).toSeq.flatMap {
+        case (lang, docs) =>
+          val buf = scala.collection.mutable.Map.empty[String, Long]
+          docs.foreach(d => d._2.split(" ").foreach(agg.reduce(buf, _)))
+          agg.finish(buf).zipWithIndex.map { case ((t, c), i) =>
+            (lang, t, c, i + 1L) }
+      }
+      finalRows.toSet shouldBe sequential.toSet
     } finally query.stop()
   }
 }

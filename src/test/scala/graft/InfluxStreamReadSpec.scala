@@ -856,6 +856,68 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("maintained panels: locf, lerp, moving-average, stddev and " +
+    "Bollinger partials merged over three triggers that each cut a bucket " +
+    "mid-fill, finished over the maintained table ≡ the one-shot batch " +
+    "panel read") {
+    // sensor.a leaves bucket 1 empty (the fills bridge it); sensor.b has a
+    // singleton bucket (the n < 2 NULL guard)
+    val panelCsv =
+      """#datatype,string,long,dateTime:RFC3339,dateTime:RFC3339,dateTime:RFC3339,double,string,string,string
+        |#group,false,false,true,true,false,false,true,true,true
+        |#default,_result,,,,,,,,
+        |,result,table,_start,_stop,_time,_value,_field,_measurement,entity_id
+        |,_result,0,2024-01-01T00:00:00Z,2024-01-02T00:00:00Z,2024-01-01T00:00:07Z,21.5,value,ha_states,sensor.a
+        |,_result,0,2024-01-01T00:00:00Z,2024-01-02T00:00:00Z,2024-01-01T00:30:00Z,10.0,value,ha_states,sensor.a
+        |,_result,0,2024-01-01T00:00:00Z,2024-01-02T00:00:00Z,2024-01-01T01:20:00Z,4.0,value,ha_states,sensor.b
+        |,_result,0,2024-01-01T00:00:00Z,2024-01-02T00:00:00Z,2024-01-01T02:10:00Z,22.5,value,ha_states,sensor.a
+        |,_result,0,2024-01-01T00:00:00Z,2024-01-02T00:00:00Z,2024-01-01T02:45:00Z,30.0,value,ha_states,sensor.a
+        |,_result,0,2024-01-01T00:00:00Z,2024-01-02T00:00:00Z,2024-01-01T02:50:00Z,8.0,value,ha_states,sensor.b
+        |""".stripMargin
+    val R = graft.sources.InfluxRollupRead
+    type DF = org.apache.spark.sql.DataFrame
+    val base = Map("bucket" -> "bkt", "readPartitions" -> "1",
+      "rollup.group" -> "tag:entity_id", "rollup.startMs" -> t0.toString)
+    // (options, finish over the maintained merge, one-shot batch panel)
+    val panels = Seq[(Map[String, String], (DF, R.Spec) => DF,
+        Map[String, String] => DF)](
+      (R.locfOptions(hour, base),
+        (m, _) => graft.ext.EventsExt.locfFill(m, Seq("entity_id"), hour),
+        R.locfRead(spark, _)),
+      (R.lerpOptions(hour, base), R.lerpFillMerged(_, _), R.lerpRead(spark, _)),
+      (R.movingOptions(hour, base), R.movingAvgMerged(_, _, 3),
+        R.movingAvgRead(spark, _, 3)),
+      (R.stddevOptions(hour, base), R.stddevMerged, R.stddevRead(spark, _)),
+      (R.stddevOptions(hour, base), R.bollingerMerged(_, _, 3),
+        R.bollingerRead(spark, _, 3)))
+    def rows(df: DF) = df.collect().map(_.toSeq).toSet
+    panels.zipWithIndex.foreach { case ((opts, finish, read), i) =>
+      @volatile var now = t0
+      withStubs(() => now) { _ =>
+        InfluxReadTransports.testOverride = Some(_ => panelCsv)
+        val spec = rollupSpec(opts)
+        val q = R.finalMerge(opts.foldLeft(spark.readStream.format("influx")) {
+            case (r, (k, v)) => r.option(k, v)
+          }.load(), spec)
+          .writeStream.format("memory").queryName(s"panel_stream_$i")
+          .outputMode("complete").start()
+        try {
+          Seq(20L, 150L, 180L).foreach { m =>
+            now = t0 + m * 60000L; q.processAllAvailable()
+          }
+        } finally q.stop()
+        val maintained = spark.table(s"panel_stream_$i")
+        rows(maintained) shouldBe rows(R.finalMerge(
+          opts.foldLeft(spark.read.format("influx")) {
+            case (r, (k, v)) => r.option(k, v)
+          }.load(), spec))
+        val panel = rows(finish(maintained, spec))
+        panel should not be empty
+        panel shouldBe rows(read(opts))
+      }
+    }
+  }
+
   test("latestOffset clamps to [start, stop] and the offset JSON round-trips") {
     val cfg = graft.etl.InfluxSink.Config("u", "o", "b", "t", 1000, false)
     val s = new InfluxMicroBatchStream(cfg, 1, graft.sources.InfluxScan.schema,

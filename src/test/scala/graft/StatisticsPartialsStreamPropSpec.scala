@@ -22,7 +22,7 @@ class StatisticsPartialsStreamPropSpec extends AnyFunSuite {
   private val hour = 3600000L
 
   private val genCase
-      : Gen[(List[(Long, String, Long, Option[Double])], Int, Int)] =
+      : Gen[(List[(Long, String, Long, Option[Double])], Int, Int, Long)] =
     for {
       n <- Gen.chooseNum(0, 40)
       rows <- Gen.listOfN(n, for {
@@ -39,21 +39,25 @@ class StatisticsPartialsStreamPropSpec extends AnyFunSuite {
       } yield (et, ms, v))
       cut1 <- Gen.chooseNum(0, n)
       cut2 <- Gen.chooseNum(0, n)
+      // hourly, and the 30- and 15-minute grids the half- and
+      // quarter-hour zones' calendar tiers read
+      stepMs <- Gen.oneOf(3600000L, 1800000L, 900000L)
     } yield (rows.zipWithIndex.map { case ((et, ms, v), i) =>
       (i.toLong + 1, et, ms, v)
-    }, math.min(cut1, cut2), math.max(cut1, cut2))
+    }, math.min(cut1, cut2), math.max(cut1, cut2), stepMs)
 
   private type Key = (String, Long)
   private type Slot = (Long, Long, Option[Double], Option[Double])
 
   private def batchPartials(
-      rows: Seq[(Long, String, Long, Option[Double])]): Map[Key, Slot] = {
+      rows: Seq[(Long, String, Long, Option[Double])],
+      stepMs: Long): Map[Key, Slot] = {
     import spark.implicits._
     if (rows.isEmpty) return Map.empty
     EventsExt.statisticsPartialsHourly(
         rows.toDF("event_id", "event_type", "ms", "value")
           .selectExpr("event_id", "event_type", "value",
-            "timestamp_millis(ms) AS ts"))
+            "timestamp_millis(ms) AS ts"), stepMs)
       .collect().map { r =>
         (r.getString(0), r.getLong(1)) ->
           ((if (r.isNullAt(2)) 0L else r.getLong(2),
@@ -66,7 +70,7 @@ class StatisticsPartialsStreamPropSpec extends AnyFunSuite {
   test("statisticsPartialsStream ≡ batch statisticsPartialsHourly under " +
     "random streams and trigger splits, EXACT (property); compacting the " +
     "maintained table ≡ statisticsHourly at the coarse step") {
-    val prop = Prop.forAllNoShrink(genCase) { case (rows0, c1, c2) =>
+    val prop = Prop.forAllNoShrink(genCase) { case (rows0, c1, c2, stepMs) =>
       import spark.implicits._
       implicit val ctx = spark.sqlContext
       // in-order arrival (the family contract): global (ms, event_id) sort
@@ -76,7 +80,7 @@ class StatisticsPartialsStreamPropSpec extends AnyFunSuite {
         .selectExpr("event_id", "event_type", "value",
           "timestamp_millis(ms) AS ts")
       val name = s"statp_${System.nanoTime()}"
-      val q = StreamingEvents.statisticsPartialsStream(df).toDF()
+      val q = StreamingEvents.statisticsPartialsStream(df, stepMs).toDF()
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       val got: Map[Key, Slot] = try {
@@ -98,7 +102,7 @@ class StatisticsPartialsStreamPropSpec extends AnyFunSuite {
           }
       } finally q.stop()
       spark.sql(s"DROP TABLE IF EXISTS $name")
-      val want = batchPartials(rows)
+      val want = batchPartials(rows, stepMs)
       val msg = s"stat partials mismatch\n  got= ${got.toSeq.sortBy(_._1)}\n" +
         s"  want=${want.toSeq.sortBy(_._1)}"
       Prop.propBoolean(got == want) :| msg
