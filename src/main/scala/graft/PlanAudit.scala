@@ -117,10 +117,11 @@ object PlanAudit {
       "docs_split_leakage" -> Seq("HashAggregate"),
       // LOCF gap-fill: map-side grid explode + the one-shuffle as-of window
       "events_resample_locf" -> Seq("Generate", "Window"),
-      // linear lerp sibling: carry-forward and carry-backward share one
-      // partitioning+ordering, so both bracket sides ride the SAME
-      // window shuffle; no join anywhere
-      "events_resample_linear" -> Seq("Generate", "Window", "!Join"),
+      // bucketed lerp: the one user-keyed exchange feeds both aggregates
+      // and the lead window; the grid explode is map-side, and there is
+      // no samples∪grid union and no join
+      "events_resample_linear" -> Seq("Generate", "Window", "!Join", "!Union"),
+      "events_lerp_panel" -> Seq("Generate", "Window", "!Join", "!Union"),
       // bucketed LOCF panel: single-pass lead+explode — the bucket agg is
       // read ONCE (no grid-bounds second branch), no join, the grid
       // explode is map-side after the one keyed window

@@ -691,15 +691,16 @@ object SparkEntry {
     "events_hilbert" -> ((s, d) => EventsExt.hilbertKeys(events(s, d))),
     // hourly LOCF gap-fill (as-of composition over a per-user time grid)
     "events_resample_locf" -> ((s, d) => EventsExt.resampleLocf(events(s, d))),
-    // linear-interpolation sibling: integer-exact lerp, one terminal division
-    "events_resample_linear" -> ((s, d) =>
-      EventsExt.resampleLinear(events(s, d))),
+    // linear-interpolation sibling: integer-exact lerp, one terminal
+    // division, served by the bucketed lerp (only first/last-of-bucket
+    // samples survive the agg, yet the fill reconstructs the as-of
+    // bracket panel the oracle SQL computes directly)
+    "events_resample_linear" -> ((s, d) => EventsExt.lerpPanel(events(s, d))),
     // bucketed-last-observation LOCF panel (strictly-before tick
     // convention) — the parquet twin of the pushed Influx locfRead
     "events_locf_panel" -> ((s, d) => EventsExt.locfPanel(events(s, d))),
-    // bucketed lerp panel: only first/last-of-bucket samples survive the
-    // agg, yet the fill reconstructs the resample_linear panel EXACTLY
-    // (same oracle text) — the pushed lerpRead's decomposition theorem
+    // the same function under the name of the pushed lerpRead's parquet
+    // twin (one oracle text for both names)
     "events_lerp_panel" -> ((s, d) => EventsExt.lerpPanel(events(s, d))),
     // trailing 24h moving average over hourly buckets (RANGE frame over
     // per-bucket sufficient statistics) — the parquet twin of the pushed
@@ -3741,13 +3742,17 @@ object SparkEntry {
         |g AS (SELECT user_id, unnest(range(t0, t1 + 1, 3600000)) AS ms FROM b)
         |SELECT g.user_id, g.ms, cd.locf_value
         |FROM g ASOF LEFT JOIN cd ON g.user_id = cd.user_id AND g.ms >= cd.ms""".stripMargin,
-    // the identical bracket-and-lerp: milli-quantized BIGINT numerator and
-    // denominator, ONE terminal division — bit-exact cross-engine. Grid
-    // origin: sign-safe double-% mirroring Spark's pmod (see resample_locf)
+    // the direct as-of bracket (the second algebra against Spark's
+    // bucketed lerp): milli-quantized BIGINT numerator and denominator,
+    // ONE terminal division — bit-exact cross-engine. Numeric samples
+    // only: a NULL-valued click neither brackets a tick nor widens the
+    // grid. Grid origin: sign-safe double-% mirroring Spark's pmod (see
+    // resample_locf)
     "events_resample_linear" ->
       """WITH c AS (SELECT user_id, epoch_ms(ts) AS ms,
         |             CAST(floor(value * 1000) AS BIGINT) AS vm
-        |           FROM events WHERE event_type = 'click'),
+        |           FROM events
+        |           WHERE event_type = 'click' AND value IS NOT NULL),
         |s AS (SELECT user_id, ms, max(vm) AS vm FROM c GROUP BY 1, 2),
         |b AS (SELECT user_id,
         |        min(ms) - ((min(ms) % 3600000) + 3600000) % 3600000 AS t0,
@@ -4374,8 +4379,8 @@ object SparkEntry {
         |WHERE round(list_dot_product(a.fv, b.fv) / (a.nrm * b.nrm), 6) >= 0.9999""".stripMargin,
     "core_points" -> corePointsSql
     )
-    // the bucketed lerp decomposition must reproduce the direct as-of
-    // bracket EXACTLY — two algebras, one answer, so ONE oracle text
+    // both names run the bucketed lerp; the oracle is the direct as-of
+    // bracket — two algebras, one answer, so ONE oracle text
     m + ("events_lerp_panel" -> m("events_resample_linear"))
   }
 

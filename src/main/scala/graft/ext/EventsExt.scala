@@ -1062,7 +1062,7 @@ object EventsExt {
     * SINGLE-PASS like [[locfFill]]: one keyed window (lead of the next
     * occupied bucket's first sample + lag for first-row detection), a
     * map-side explode; the input is read ONCE. Grid convention matches
-    * [[resampleLinear]] exactly: ticks run from the first occupied
+    * the direct as-of bracket exactly: ticks run from the first occupied
     * bucket's START (back-fill branch) through the LAST occupied
     * bucket's start; a tick ON a sample takes it exactly; `stopMs`
     * extends past the last sample with the carry branch. `point`
@@ -1138,18 +1138,35 @@ object EventsExt {
     locfFill(buckets, Seq("user_id"), stepMs)
   }
 
-  /** Bucketed linear-interpolation panel over clicks — the parquet twin
-    * of the pushed [[graft.sources.InfluxRollupRead.lerpRead]], and the
-    * bucketed-decomposition proof for [[resampleLinear]]: per (user,
-    * hour-bucket) only the FIRST and LAST quantized samples survive the
-    * aggregation, yet [[lerpFill]] reconstructs the IDENTICAL panel —
-    * gated by registering `events_lerp_panel` under the verbatim
-    * `events_resample_linear` oracle (two algebras, one answer). Same
-    * exact BIGINT milli-quantized arithmetic, one terminal division. */
+  /** Linear-interpolation time-grid resample over clicks — the
+    * physically-faithful sibling of [[resampleLocf]] for continuous
+    * sensor signals (a temperature between two readings is BETWEEN them,
+    * not the stale one), and the parquet twin of the pushed
+    * [[graft.sources.InfluxRollupRead.lerpRead]]. Per (user, hour-bucket)
+    * only the FIRST and LAST quantized samples survive the aggregation,
+    * yet [[lerpFill]] reconstructs the panel of the direct as-of bracket
+    * (each tick between its nearest sample on each side) — the oracle
+    * runs that bracket as window SQL, so two algebras give one answer.
+    *
+    * Arithmetic is exact: samples quantize to floor(v·1000) BIGINT (max
+    * per millisecond, so equal-ms clicks are one sample), the lerp
+    * numerator vm_p·(t_n−t) + vm_n·(t−t_p) and denominator (t_n−t_p)·1000
+    * are exact BIGINTs far under 2^53, and the value is ONE terminal
+    * division — bit-exact cross-engine. Grid edges: ticks run from the
+    * first sample's step bucket to the last sample's; a tick before the
+    * first sample back-fills, one ON a sample takes it exactly. Only
+    * numeric samples count: a NULL-valued click is no sample and does
+    * not widen the grid.
+    *
+    * The clicks are hash-partitioned on `user_id` ONCE, before the
+    * per-ms dedup: that partitioning satisfies both aggregates and the
+    * user-keyed fill window, so the plan has one exchange. */
   def lerpPanel(events: DataFrame, stepMs: Long = 3600000L): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
+    val clicks = events
+      .filter(col("event_type") === "click" && col("value").isNotNull)
       .select(col("user_id"), unix_millis(col("ts")).as("ms"),
         floor(col("value") * 1000).cast("long").as("vm"))
+      .repartition(col("user_id"))
     val samples = clicks.groupBy(col("user_id"), col("ms"))
       .agg(max(col("vm")).as("vm"))
     val buckets = samples.groupBy(col("user_id"),
@@ -1546,64 +1563,6 @@ object EventsExt {
                            offsetMs: Long = 0L): DataFrame =
     statFinish(
       statisticsTierPartials(fine, coarse, cutoffMs, coarseStepMs, offsetMs))
-
-  /** Linear-interpolation time-grid resample — the physically-faithful
-    * sibling of [[resampleLocf]] for continuous sensor signals (a
-    * temperature between two readings is BETWEEN them, not the stale
-    * one). Same per-user hourly grid; each grid point brackets between
-    * its nearest sample on each side via ONE window pass (asc
-    * carry-forward + desc carry-backward share a single partitioning and
-    * ordering, so Spark plans one Window operator over the union of
-    * samples and grid rows — the LOCF as-of shuffle, not a join).
-    * Arithmetic is exact: samples quantize to floor(v·1000) BIGINT, the
-    * lerp numerator vm_p·(t_n−t) + vm_n·(t−t_p) and denominator
-    * (t_n−t_p)·1000 are exact BIGINTs far under 2^53, and the value is
-    * ONE terminal division — bit-exact cross-engine, no integer-division
-    * truncation semantics anywhere. Grid edges degrade gracefully: a
-    * point before the first sample back-fills, one ON a sample takes it
-    * exactly (den = 0 branch). */
-  def resampleLinear(events: DataFrame, stepMs: Long = 3600000L): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id"), unix_millis(col("ts")).as("ms"),
-        floor(col("value") * 1000).cast("long").as("vm"))
-    val samples = clicks.groupBy(col("user_id"), col("ms"))
-      .agg(max(col("vm")).as("vm"))
-    val bounds = clicks.groupBy(col("user_id"))
-      .agg((min(col("ms")) - pmod(min(col("ms")), lit(stepMs))).as("t0"),
-        (max(col("ms")) - pmod(max(col("ms")), lit(stepMs))).as("t1"))
-    val grid = bounds.select(col("user_id"),
-      explode(sequence(col("t0"), col("t1"), lit(stepMs))).as("ms"))
-    // union samples (kind 1) and grid points (kind 0); at an equal ms the
-    // kind-desc order puts the sample BEFORE the grid row, so an exact
-    // hit sees itself as its own bracket on both sides
-    val u = samples.select(col("user_id"), col("ms"), lit(1).as("kind"),
-        col("vm"))
-      .unionByName(grid.select(col("user_id"), col("ms"),
-        lit(0).as("kind"), lit(null).cast("long").as("vm")))
-    val wAsc = Window.partitionBy(col("user_id"))
-      .orderBy(col("ms").asc, col("kind").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wDesc = Window.partitionBy(col("user_id"))
-      .orderBy(col("ms").asc, col("kind").desc)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val sampleVm = when(col("kind") === 1, col("vm"))
-    val sampleMs = when(col("kind") === 1, col("ms"))
-    val bracketed = u
-      .withColumn("pvm", last(sampleVm, ignoreNulls = true).over(wAsc))
-      .withColumn("pms", last(sampleMs, ignoreNulls = true).over(wAsc))
-      .withColumn("nvm", first(sampleVm, ignoreNulls = true).over(wDesc))
-      .withColumn("nms", first(sampleMs, ignoreNulls = true).over(wDesc))
-      .filter(col("kind") === 0)
-    val den = col("nms") - col("pms")
-    val num = col("pvm") * (col("nms") - col("ms")) +
-      col("nvm") * (col("ms") - col("pms"))
-    bracketed.select(col("user_id"), col("ms"),
-      when(col("pms").isNull, col("nvm").cast("double") / 1000.0)
-        .when(col("nms").isNull, col("pvm").cast("double") / 1000.0)
-        .when(den === 0L, col("pvm").cast("double") / 1000.0)
-        .otherwise(num.cast("double") / (den * 1000L).cast("double"))
-        .as("interp_value"))
-  }
 
   /** Per-user OLS trend of value over time (the closed-form regression a
     * monitoring pipeline fits per entity): slope/intercept from the five

@@ -47,6 +47,10 @@ object Graph {
     val spark = nodes.sparkSession
     import spark.implicits._
     val teleport = scale * 15L / 100L
+    // one rank row per distinct id on both paths: a duplicated id would
+    // otherwise join its rank into the contributions once per copy
+    val nodeIds = nodes.select(col("doc_id").cast("bigint").as("doc_id"))
+      .distinct()
     // the pair list is materialized ONCE (observe rides the eager
     // checkpoint, so the pair count costs no extra job); both paths below
     // consume the cached pairs, never the LSH plan again. Ids are cast to
@@ -69,7 +73,6 @@ object Graph {
     // pair count is tested first, so past its bound the node count (one
     // scan of `nodes`) never runs; the distributed loop below is
     // unchanged — at 10⁹ nodes the gate fails and nothing is collected.
-    val nodeIds = nodes.select(col("doc_id").cast("bigint").as("doc_id"))
     if (2 * nPairs <= maxDriverGraph && nodes.count() <= maxDriverGraph) {
       val ids = nodeIds.as[Long].collect()
       val ps = pairsCk.as[(Long, Long)].collect()

@@ -603,7 +603,7 @@ class EventsExtSpec extends AnyFunSuite with Matchers {
     out.keySet shouldBe Set(5L, 10L)
   }
 
-  test("resampleLinear: hand-computed lerp, exact hit, edge back-fill") {
+  test("lerpPanel: hand-computed lerp, exact hit, edge back-fill") {
     val h = 3600000L
     // user 10: samples at 00:30 (v=1.0) and 02:30 (v=5.0).
     // grid t0=00:00 .. t1=02:00 →
@@ -617,13 +617,47 @@ class EventsExtSpec extends AnyFunSuite with Matchers {
       (3L, 20L, "click", 7.0, new Timestamp(h)),
       (4L, 10L, "view", 99.0, new Timestamp(0L)) // non-click ignored
     ).toDF("event_id", "user_id", "event_type", "value", "ts")
-    val out = EventsExt.resampleLinear(events).collect()
+    val out = EventsExt.lerpPanel(events).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     out((10L, 0L)) shouldBe 1.0
     out((10L, h)) shouldBe 2.0
     out((10L, 2 * h)) shouldBe 4.0
     out((20L, h)) shouldBe 7.0
     out.keySet should have size 4
+  }
+
+  test("lerpPanel: a NULL-valued click is no sample — it neither " +
+    "brackets a tick nor widens the grid, first or last in its bucket") {
+    // user 1: NULL at 00:10 heads the first bucket; user 2: NULL at 00:40
+    // ends it. Both reduce to the numeric samples 00:20 = 2.0 and
+    // 01:30 = 4.0: 00:00 back-fills 2.0, 01:00 lerps
+    // (2000·30 + 4000·40) / (70·1000)
+    val h = 3600000L
+    val events = Seq(
+      (1L, 1L, "click", None, ts(10)),
+      (2L, 1L, "click", Some(2.0), ts(20)),
+      (3L, 1L, "click", Some(4.0), ts(90)),
+      (4L, 2L, "click", Some(2.0), ts(20)),
+      (5L, 2L, "click", None, ts(40)),
+      (6L, 2L, "click", Some(4.0), ts(90))
+    ).toDF("event_id", "user_id", "event_type", "value", "ts")
+    val out = EventsExt.lerpPanel(events).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val t0 = ts(0).getTime
+    out shouldBe Seq(1L, 2L).flatMap(u => Seq(
+      (u, t0) -> 2.0, (u, t0 + h) -> 220000.0 / 70000.0)).toMap
+  }
+
+  test("lerpPanel: ONE user-keyed exchange feeds both aggregates and the " +
+    "fill window; no samples∪grid union") {
+    val events = Seq((1L, 10L, "click", 1.0, ts(0)),
+      (2L, 10L, "click", 3.0, ts(150)), (3L, 20L, "click", 2.0, ts(30)))
+      .toDF("event_id", "user_id", "event_type", "value", "ts")
+    val df = EventsExt.lerpPanel(events)
+    df.count()
+    val plan = df.queryExecution.executedPlan.toString
+    "Exchange".r.findAllIn(plan).length shouldBe 1
+    plan should not include "Union"
   }
 
   test("downsampleLast: last point per bucket, equal-ms ties collapse to " +

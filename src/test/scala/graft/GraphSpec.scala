@@ -38,8 +38,9 @@ class GraphSpec extends AnyFunSuite with Matchers {
   test("pageRank: driver fold equals the distributed iteration") {
     // branchy graph with a hub, a chain, a 2-cycle and isolated nodes —
     // both strategies must emit identical exact-integer ranks, and one
-    // bigint schema for Long and Int ids alike
-    val nodes = (0L to 12L).toDF("doc_id")
+    // bigint schema for Long and Int ids alike. The hub id is listed
+    // twice: both must count its contributions once and emit one row
+    val nodes = ((0L to 12L) :+ 0L).toDF("doc_id")
     val pairs = Seq((0L, 1L), (0L, 2L), (0L, 3L), (3L, 4L), (4L, 5L),
       (6L, 7L), (0L, 7L), (8L, 9L)).toDF("doc_a", "doc_b")
     val intNodes = nodes.selectExpr("CAST(doc_id AS INT) AS doc_id")
@@ -53,6 +54,7 @@ class GraphSpec extends AnyFunSuite with Matchers {
       driver.schema.map(f => (f.name, f.dataType)) shouldBe
         dist.schema.map(f => (f.name, f.dataType))
       ranks(driver) shouldBe ranks(dist)
+      ranks(driver).map(_._1) shouldBe (0L to 12L)
     }
   }
 
