@@ -260,99 +260,6 @@ object PlanAudit {
       "events_energy_range_tiered" ->
         Seq("Union", "PushedFilters", "HashAggregate", "!Window", "!Join",
           "!events.parquet"),
-      // r18: the monthly view across the tier seam — two partials scans
-      // (hourly recency + calendar-day history) unioned, calendar-keyed,
-      // ONE partial-aggregated groupBy; no window, no join, no raw events
-      "events_energy_bars_monthly_tiered" ->
-        Seq("Union", "HashAggregate", "!Window", "!Join",
-          "!events.parquet"),
-      // r18: the statistics sibling of the tiered monthly view — same
-      // two-partials-scan union, one calendar-keyed groupBy, the finish
-      // is a projection (twa division), never a window or raw events
-      "events_statistics_monthly_tiered" ->
-        Seq("Union", "HashAggregate", "!Window", "!Join",
-          "!events.parquet"),
-      // r18: the half-hour-offset calendar gate runs the SAME shape as
-      // the whole-hour monthly query — the zone changes only the
-      // codegen'd calendar-key projection, never the plan
-      "events_energy_bars_monthly_kolkata" ->
-        Seq("HashAggregate", "Window", "!Join", "!CartesianProduct"),
-      // r18: the statistics sibling of the Kolkata gate — the LOCF hold
-      // split dominates; the calendar regroup stays one exchange
-      "events_statistics_monthly_kolkata" ->
-        Seq("HashAggregate", "!CartesianProduct"),
-      // r19: the midnight-gap zone runs the identical shape as every
-      // other calendar-bars query — the gap resolution lives entirely
-      // inside the codegen'd calendar-key projection (the +245d shift
-      // is a projection too), never a new operator
-      "events_energy_bars_monthly_santiago" ->
-        Seq("HashAggregate", "Window", "!Join", "!CartesianProduct"),
-      "events_energy_bars_daily_santiago" ->
-        Seq("HashAggregate", "Window", "!Join", "!CartesianProduct"),
-      "events_statistics_monthly_santiago" ->
-        Seq("HashAggregate", "!CartesianProduct"),
-      "events_statistics_daily_santiago" ->
-        Seq("HashAggregate", "!CartesianProduct"),
-      // r19: the fractional-hour-DST zone (Lord Howe) — same shapes
-      "events_energy_bars_monthly_lordhowe" ->
-        Seq("HashAggregate", "Window", "!Join", "!CartesianProduct"),
-      "events_energy_bars_daily_lordhowe" ->
-        Seq("HashAggregate", "Window", "!Join", "!CartesianProduct"),
-      "events_statistics_monthly_lordhowe" ->
-        Seq("HashAggregate", "!CartesianProduct"),
-      "events_statistics_daily_lordhowe" ->
-        Seq("HashAggregate", "!CartesianProduct"),
-      // r19: the COMPOSED gates — half-hour zone THROUGH the calendar
-      // tier stitch: same two-partials-scan union + ONE calendar-keyed
-      // groupBy as their NY siblings; no window, no join, no raw events
-      "events_energy_bars_monthly_kolkata_tiered" ->
-        Seq("Union", "HashAggregate", "!Window", "!Join",
-          "!events.parquet"),
-      "events_statistics_monthly_kolkata_tiered" ->
-        Seq("Union", "HashAggregate", "!Window", "!Join",
-          "!events.parquet"),
-      // r19: the gap zone through the tier stitch (seam AT the gap day)
-      "events_energy_bars_monthly_santiago_tiered" ->
-        Seq("Union", "HashAggregate", "!Window", "!Join",
-          "!events.parquet"),
-      // r20: the AMBIGUOUS-midnight zone (Havana) — identical shapes as
-      // every other calendar query; the earlier-offset resolution lives
-      // entirely inside the codegen'd calendar-key projection
-      "events_energy_bars_monthly_havana" ->
-        Seq("HashAggregate", "Window", "!Join", "!CartesianProduct"),
-      "events_energy_bars_daily_havana" ->
-        Seq("HashAggregate", "Window", "!Join", "!CartesianProduct"),
-      "events_statistics_monthly_havana" ->
-        Seq("HashAggregate", "!CartesianProduct"),
-      "events_statistics_daily_havana" ->
-        Seq("HashAggregate", "!CartesianProduct"),
-      // r20: the ambiguous zone through the tier stitch (seam AT the
-      // 25-hour day) and Lord Howe composed with the tier stitch (the
-      // seam's UTC alignment changes across the DST transition) — the
-      // same two-partials-scan union + ONE calendar-keyed groupBy
-      "events_energy_bars_monthly_havana_tiered" ->
-        Seq("Union", "HashAggregate", "!Window", "!Join",
-          "!events.parquet"),
-      "events_energy_bars_monthly_lordhowe_tiered" ->
-        Seq("Union", "HashAggregate", "!Window", "!Join",
-          "!events.parquet"),
-      "events_statistics_monthly_lordhowe_tiered" ->
-        Seq("Union", "HashAggregate", "!Window", "!Join",
-          "!events.parquet"),
-      // r20: the QUARTER-hour zone (Chatham, 15-minute fine grid) —
-      // identical shapes again; the finer grid changes only bucket
-      // counts, never an operator
-      "events_energy_bars_monthly_chatham" ->
-        Seq("HashAggregate", "Window", "!Join", "!CartesianProduct"),
-      "events_energy_bars_daily_chatham" ->
-        Seq("HashAggregate", "Window", "!Join", "!CartesianProduct"),
-      "events_statistics_monthly_chatham" ->
-        Seq("HashAggregate", "!CartesianProduct"),
-      "events_statistics_daily_chatham" ->
-        Seq("HashAggregate", "!CartesianProduct"),
-      "events_energy_bars_monthly_chatham_tiered" ->
-        Seq("Union", "HashAggregate", "!Window", "!Join",
-          "!events.parquet"),
       // kNN graph scale path: multi-probe assignment is the codegen'd
       // nearest_centroids projection; candidates meet in an EQUI-join on
       // the bucket key and rank through the bounded heap — never a
@@ -475,7 +382,24 @@ object PlanAudit {
       // counter compaction: bucket-row regroup + ONE bucket-level
       // cumulative window; the sample window lives in the partials side
       "events_counter_stats_daily" -> Seq("Window", "HashAggregate",
-        "!SinglePartition", "!Join"))
+        "!SinglePartition", "!Join")) ++
+      // the calendar-zone queries, one shape per family: the zone, its gap
+      // or overlap resolution and the fixture shift live entirely inside
+      // codegen'd projections, and a finer grid changes only bucket
+      // counts, never an operator. Tiered: fine recency ∪ calendar-day
+      // history, two partials scans unioned into ONE calendar-keyed
+      // groupBy — no window, no join, no raw events; raw energy bars: the
+      // user-keyed lag window under the calendar groupBy; raw statistics:
+      // the LOCF hold split, one calendar regroup
+      SparkEntry.zoneQueries.map { q =>
+        q.name -> (
+          if (q.tiered)
+            Seq("Union", "HashAggregate", "!Window", "!Join",
+              "!events.parquet")
+          else if (q.energy)
+            Seq("HashAggregate", "Window", "!Join", "!CartesianProduct")
+          else Seq("HashAggregate", "!CartesianProduct"))
+      }
 
     val sb = new StringBuilder
     sb.append("# Physical plan audit\n\n")

@@ -226,8 +226,169 @@ object SparkEntry {
     Transform.flatPipeline(states(spark, d), meta(spark, d), attrs(spark, d))
   }
 
+  // ---- calendar zones ---------------------------------------------------
+
+  /** One zone the energy dashboard's calendar views are gated in. Each
+    * row generates its queries ([[zoneQueries]]), their oracle SQL
+    * ([[energyBarsTwoOffsetSql]], [[statisticsTwoOffsetSql]]) and
+    * PlanAudit's shape tokens. Spark runs the real named zone `tz`; the
+    * oracle emulates it with the hand-written signed UTC offsets before
+    * and after the transition instant `tMs` (None: a fixed offset over
+    * the span) and never asks java.time — ZoneTableSpec checks those
+    * literals against the zone rules over the shifted fixture span. Both
+    * sides move the January fixture `shiftDays` forward onto the
+    * transition. `cutoffDate` is the local day the tiered queries' coarse
+    * calendar-day tier hands over to the fine partials; `daily` adds the
+    * per-local-day forms, `statsTiered` the tiered monthly statistics. */
+  private[graft] final case class CalendarZone(
+      key: String, tz: String, shiftDays: Int, tMs: Option[Long],
+      offBeforeMs: Long, offAfterMs: Long, cutoffDate: String,
+      daily: Boolean, statsTiered: Boolean) {
+    /** Query-name suffix: the home zone's names carry none. */
+    def suffix: String = if (key == "ny") "" else s"_$key"
+    def shiftMs: Long = shiftDays * 86400000L
+    /** Fine-partials grid: the calendar regroup is exact only when every
+      * local midnight lands on a fine-bucket boundary — hourly for
+      * whole-hour offsets, 30 minutes for half-hour ones, 15 for
+      * quarter-hour ones. */
+    def gridMs: Long = Seq(offBeforeMs, offAfterMs)
+      .foldLeft(BigInt(3600000L))((g, o) => g.gcd(BigInt(o))).toLong
+    /** First wall instant that maps unambiguously at the new offset. */
+    def wMs: Long = tMs.getOrElse(0L) + math.max(offBeforeMs, offAfterMs)
+    /** The tier seam: the first instant of the local `cutoffDate`. */
+    def cutoffMs: Long = java.time.LocalDate.parse(cutoffDate)
+      .atStartOfDay(java.time.ZoneId.of(tz)).toInstant.toEpochMilli
+  }
+
+  private[graft] val calendarZones: Seq[CalendarZone] = Seq(
+    // the home zone: America/New_York is a constant -5 h (EST) over the
+    // January fixture, so the oracle's fixed offset is exact; its DST
+    // transitions are pinned by EnergyCalendarSpec
+    CalendarZone("ny", "America/New_York", 0, None, -18000000L, -18000000L,
+      "2024-01-15", daily = false, statsTiered = true),
+    // a HALF-HOUR offset (+05:30, no DST): local midnight is a :30-UTC
+    // instant, which hourly partials would misattribute to the
+    // month-straddling bucket (EnergyCalendarSpec pins the divergence)
+    CalendarZone("kolkata", "Asia/Kolkata", 0, None, 19800000L, 19800000L,
+      "2024-01-15", daily = false, statsTiered = true),
+    // the midnight GAP: the 2024-09-08 spring-forward lands AT local
+    // midnight (00:00 -04 jumps to 01:00 -03), so the gap day truncates
+    // to a midnight that does not exist; java.time (and so calendarBucket)
+    // shifts it into the later offset and the 23-hour day keys at its true
+    // first instant, 04:00Z — also the tier seam, which a literal
+    // local-midnight check would wrongly reject
+    CalendarZone("santiago", "America/Santiago", 245, Some(1725768000000L),
+      -14400000L, -10800000L, "2024-09-08", daily = true,
+      statsTiered = false),
+    // a half-hour offset WITH a 30-MINUTE DST shift (+10:30 → +11 on
+    // 2024-10-06): the spring-forward day spans 23.5 hours and local
+    // midnights sit at :30 UTC before the transition, :00 after; the Oct
+    // 10 tier seam is a :00 midnight while every coarse day before the
+    // transition starts at :30 — the alignment change a fixed offset
+    // cannot exercise
+    CalendarZone("lordhowe", "Australia/Lord_Howe", 273,
+      Some(1728142200000L), 37800000L, 39600000L, "2024-10-10",
+      daily = true, statsTiered = true),
+    // the AMBIGUOUS midnight, the mirror of the Santiago gap: the
+    // 2024-11-03 fall-back lands 01:00 -04 → 00:00 -05, so the 25-hour
+    // day's first wall hour occurs twice and java.time resolves its
+    // midnight to the EARLIER offset (04:00Z) — also the tier seam
+    CalendarZone("havana", "America/Havana", 301, Some(1730610000000L),
+      -14400000L, -18000000L, "2024-11-03", daily = true,
+      statsTiered = false),
+    // a QUARTER-hour offset (+12:45 → +13:45 on 2024-09-29, a 02:45→03:45
+    // skip away from midnight): local midnights are :15-UTC instants
+    // (11:15Z before, 10:15Z after) that neither hourly nor 30-minute
+    // partials contain, and the Oct 5 tier seam is one of them
+    CalendarZone("chatham", "Pacific/Chatham", 265, Some(1727532000000L),
+      45900000L, 49500000L, "2024-10-05", daily = true,
+      statsTiered = false))
+
+  /** A query generated from a [[CalendarZone]] row. `energy` and
+    * `tiered` pick its plan shape in PlanAudit. */
+  private[graft] final case class ZoneQuery(
+      name: String, run: (SparkSession, String) => DataFrame,
+      oracle: String, energy: Boolean, tiered: Boolean)
+
+  /** Every row registers, on its named zone:
+    *  - energy bars per local month (and per local day): per-sample
+    *    deltas over the row's fine grid, regrouped onto calendar periods;
+    *  - the statistics row per local month (and day): fine partials
+    *    re-bucketed onto the period — every slot mergeable, so the row is
+    *    bit-equal to the oracle's direct pieces → period fold;
+    *  - the TIERED monthly energy bars (and statistics): persisted fine
+    *    partials for recency ∪ a persisted LOCAL-CALENDAR-DAY tier compacted
+    *    from them for history (fixed 24 h buckets would straddle calendar
+    *    boundaries at a transition), stitched at the row's local-midnight
+    *    seam and regrouped onto months. The oracle is the untiered
+    *    monthly text, so the gate proves tiering never changes the view. */
+  private[graft] lazy val zoneQueries: Seq[ZoneQuery] =
+    calendarZones.flatMap { z =>
+      def ev(s: SparkSession, d: String) =
+        if (z.shiftDays == 0) events(s, d)
+        else events(s, d)
+          .withColumn("ts", col("ts") + expr(s"INTERVAL ${z.shiftDays} DAYS"))
+      val forms = Seq("monthly" -> "MONTH") ++
+        (if (z.daily) Seq("daily" -> "DAY") else Nil)
+      val raw = forms.flatMap { case (form, unit) =>
+        val period = unit.toLowerCase
+        Seq(
+          ZoneQuery(s"events_energy_bars_$form${z.suffix}", (s, d) =>
+            EventsExt.energyBarsCalendar(ev(s, d), unit = unit, tz = z.tz,
+              everyMs = z.gridMs),
+            energyBarsTwoOffsetSql(z, period), energy = true, tiered = false),
+          // the home zone's monthly statistics predate the table's naming
+          ZoneQuery(s"events_statistics_$form" +
+              (if (z.suffix.isEmpty) "_local" else z.suffix), (s, d) =>
+            EventsExt.statisticsCalendarCompact(
+              EventsExt.statisticsPartialsHourly(ev(s, d), stepMs = z.gridMs),
+              unit = unit, tz = z.tz),
+            statisticsTwoOffsetSql(z, period), energy = false, tiered = false))
+      }
+      val energyTiered = ZoneQuery(
+        s"events_energy_bars_monthly${z.suffix}_tiered", (s, d) => {
+          val fine = persistedPartials(s, d, s"counter_fine_${z.key}")(
+            EventsExt.counterStatsPartialsHourly(ev(s, d), everyMs = z.gridMs))
+          val day = persistedPartials(s, d, s"counter_day_${z.key}")(
+            EventsExt.counterStatsCalendarPartials(fine, unit = "DAY",
+              tz = z.tz))
+          EventsExt.energyBarsCalendarOfPartials(
+            EventsExt.counterStatsCalendarTierPartials(fine, day,
+              cutoffMs = z.cutoffMs, tz = z.tz),
+            unit = "MONTH", tz = z.tz)
+        }, energyBarsTwoOffsetSql(z, "month"), energy = true, tiered = true)
+      val statsTiered = ZoneQuery(
+        s"events_statistics_monthly${z.suffix}_tiered", (s, d) => {
+          val fine = persistedPartials(s, d, s"stat_fine_${z.key}")(
+            EventsExt.statisticsPartialsHourly(ev(s, d), stepMs = z.gridMs))
+          val day = persistedPartials(s, d, s"stat_day_${z.key}")(
+            EventsExt.statisticsCalendarPartials(fine, unit = "DAY",
+              tz = z.tz))
+          EventsExt.statisticsCalendarCompact(
+            EventsExt.statisticsCalendarTierPartials(fine, day,
+              cutoffMs = z.cutoffMs, tz = z.tz),
+            unit = "MONTH", tz = z.tz)
+        }, statisticsTwoOffsetSql(z, "month"), energy = false,
+        tiered = true)
+      raw ++ Seq(energyTiered) ++ (if (z.statsTiered) Seq(statsTiered) else Nil)
+    }
+
+  /** `literal` ∪ one entry per zone query. A Scala Map merge silently
+    * drops a duplicate key, so a generated name that collides with a
+    * literal one — or with another generated one — fails loudly. */
+  private def withZoneQueries[V](literal: Map[String, V])
+                                (value: ZoneQuery => V): Map[String, V] = {
+    val names = zoneQueries.map(_.name)
+    require(names.distinct.size == names.size &&
+      !names.exists(literal.contains),
+      s"zone-table names collide: ${names.diff(names.distinct) ++
+        names.filter(literal.contains)}")
+    literal ++ zoneQueries.map(q => q.name -> value(q))
+  }
+
   // ---- queries ----------------------------------------------------------
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    withZoneQueries[(SparkSession, String) => DataFrame](Map(
     // === core HA pipeline (SURVEY §2.1-2.7) ===
     "core_pipeline" -> ((s, d) =>
       Transform.flatPipeline(states(s, d), meta(s, d), attrs(s, d))),
@@ -804,14 +965,6 @@ object SparkEntry {
         persistedPartials(s, d, "counter_hourly")(
           EventsExt.counterStatsPartialsHourly(events(s, d))),
         startMs = 1704672000000L, endMs = 1705881600000L)),
-    // CALENDAR energy bars — the dashboard's monthly long view: TRUE
-    // calendar months (28-31 days, no fixed gridMs) in the home zone.
-    // America/New_York is a constant -5 h within the fixture span, so the
-    // oracle emulates the zone with the fixed offset while Spark runs the
-    // real named-zone path (DST transitions pinned by EnergyCalendarSpec)
-    "events_energy_bars_monthly" -> ((s, d) =>
-      EventsExt.energyBarsCalendar(events(s, d), unit = "MONTH",
-        tz = "America/New_York")),
     // the monthly view served OFF THE PERSISTED counter partials — the
     // incremental form a dashboard runs (one partials table on disk
     // serves the range read, the fixed-grid bars, AND the calendar bars)
@@ -820,13 +973,6 @@ object SparkEntry {
         persistedPartials(s, d, "counter_hourly")(
           EventsExt.counterStatsPartialsHourly(events(s, d))),
         unit = "MONTH", tz = "America/New_York")),
-    // CALENDAR statistics compaction: hourly partials re-bucketed onto
-    // local-calendar months — every slot mergeable, so the month row is
-    // bit-equal to the oracle's direct hourly-pieces -> month fold
-    "events_statistics_monthly_local" -> ((s, d) =>
-      EventsExt.statisticsCalendarCompact(
-        EventsExt.statisticsPartialsHourly(events(s, d)), unit = "MONTH",
-        tz = "America/New_York")),
     // TIER-STITCHED statistics read — the query a retention ladder serves
     // once fine partials age out: [Jan 8, Jan 22) spanning the Jan 15
     // retention cutoff, DAILY rows from the coarse tier before it, HOURLY
@@ -866,335 +1012,6 @@ object SparkEntry {
         EventsExt.counterStatsTierPartials(hourly, daily,
           cutoffMs = 1705276800000L, coarseStepMs = 86400000L),
         startMs = 1704672000000L, endMs = 1705881600000L)
-    }),
-    // CALENDAR bars in a HALF-HOUR-offset zone — the documented exactness
-    // boundary of calendarBucket made executable: Asia/Kolkata (+05:30,
-    // no DST) needs 30-MINUTE fine partials so local midnight lands on a
-    // fine-bucket boundary (hourly partials would misattribute the
-    // month-straddling bucket — EnergyCalendarSpec pins the divergence);
-    // the oracle emulates the zone with the fixed +05:30 offset
-    "events_energy_bars_monthly_kolkata" -> ((s, d) =>
-      EventsExt.energyBarsCalendar(events(s, d), unit = "MONTH",
-        tz = "Asia/Kolkata", everyMs = 1800000L)),
-    // the monthly long view served ACROSS the retention seam: hourly
-    // partials for recency, LOCAL-CALENDAR-DAY partials (the DST-proof
-    // coarse tier — fixed 24h buckets would straddle calendar boundaries
-    // at a transition) for history, stitched at the Jan 15 LOCAL midnight
-    // and re-grouped onto calendar months; both tiers persisted parquet
-    // (the day tier compacted FROM the persisted hourly), the oracle
-    // computes the months straight from raw events — the hash gate proves
-    // tiering never changes the calendar view
-    "events_energy_bars_monthly_tiered" -> ((s, d) => {
-      val hourly = persistedPartials(s, d, "counter_hourly")(
-        EventsExt.counterStatsPartialsHourly(events(s, d)))
-      val dayLocal = persistedPartials(s, d, "counter_day_ny")(
-        EventsExt.counterStatsCalendarPartials(hourly, unit = "DAY",
-          tz = "America/New_York"))
-      EventsExt.energyBarsCalendarOfPartials(
-        EventsExt.counterStatsCalendarTierPartials(hourly, dayLocal,
-          cutoffMs = 1705294800000L, tz = "America/New_York"),
-        unit = "MONTH", tz = "America/New_York")
-    }),
-    // the STATISTICS monthly view in the HALF-HOUR-offset zone — the
-    // mean-family sibling of the Kolkata energy gate: 30-MINUTE fine
-    // partials make the IST month boundary (a :30 UTC instant) a fine
-    // boundary, so the calendar regroup stays exact; the oracle emulates
-    // the constant +05:30 with fixed-offset date_trunc over 30-min
-    // LOCF pieces while Spark runs the real named-zone path
-    "events_statistics_monthly_kolkata" -> ((s, d) =>
-      EventsExt.statisticsCalendarCompact(
-        EventsExt.statisticsPartialsHourly(events(s, d), stepMs = 1800000L),
-        unit = "MONTH", tz = "Asia/Kolkata")),
-    // the STATISTICS monthly view across the same calendar-tier seam —
-    // the mean-family sibling of the tiered energy bars: persisted hourly
-    // recency ∪ persisted local-calendar-day history, regrouped onto
-    // months; oracle = the UNTIERED monthly statistics from raw events
-    "events_statistics_monthly_tiered" -> ((s, d) => {
-      val hourly = persistedPartials(s, d, "stat_hourly")(
-        EventsExt.statisticsPartialsHourly(events(s, d)))
-      val dayLocal = persistedPartials(s, d, "stat_day_ny")(
-        EventsExt.statisticsCalendarPartials(hourly, unit = "DAY",
-          tz = "America/New_York"))
-      EventsExt.statisticsCalendarCompact(
-        EventsExt.statisticsCalendarTierPartials(hourly, dayLocal,
-          cutoffMs = 1705294800000L, tz = "America/New_York"),
-        unit = "MONTH", tz = "America/New_York")
-    }),
-    // CALENDAR bars in the MIDNIGHT-GAP zone — the last documented
-    // calendar domain boundary made executable: America/Santiago's 2024
-    // spring-forward lands exactly AT local midnight (2024-09-08 00:00
-    // -04 jumps to 01:00 -03), so the gap day's calendar key truncates
-    // to a local midnight that DOES NOT EXIST; java.time (and therefore
-    // calendarBucket's to_utc_timestamp) resolves it by shifting into
-    // the gap's later offset — the key becomes the day's true first
-    // instant, 2024-09-08T04:00:00Z. The fixture spans January, so both
-    // sides shift ts by the same +245 days to straddle the transition
-    // (Jan 1→Sep 2, Jan 30→Oct 1); Santiago's offsets are whole hours
-    // (-04/-03), so HOURLY fine partials stay exact. The oracle emulates
-    // the two-offset year with explicit CASE boundaries at the
-    // transition instant (1725768000000 = 2024-09-08T04:00Z) while
-    // Spark runs the real named-zone path.
-    "events_energy_bars_monthly_santiago" -> ((s, d) =>
-      EventsExt.energyBarsCalendar(
-        events(s, d).withColumn("ts", col("ts") + expr("INTERVAL 245 DAYS")),
-        unit = "MONTH", tz = "America/Santiago")),
-    // the per-LOCAL-DAY sibling gates the GAP DAY ITSELF through the
-    // oracle: date_trunc('day') of any wall clock on 2024-09-08 yields
-    // the nonexistent local midnight, and the oracle's wall→instant CASE
-    // reproduces java.time's gap resolution (+4 h for wall instants
-    // before the gap's END at 01:00 local), so the 23-hour day's bar is
-    // keyed at 04:00Z on both engines — hash-exact or nothing
-    "events_energy_bars_daily_santiago" -> ((s, d) =>
-      EventsExt.energyBarsCalendar(
-        events(s, d).withColumn("ts", col("ts") + expr("INTERVAL 245 DAYS")),
-        unit = "DAY", tz = "America/Santiago")),
-    // the STATISTICS family through the same midnight-gap boundary —
-    // monthly (two-offset months) and per-local-day (the gap day's
-    // 23-hour statistics row keyed at its resolved first instant);
-    // hourly partials stay exact (Santiago's offsets are whole hours)
-    "events_statistics_monthly_santiago" -> ((s, d) =>
-      EventsExt.statisticsCalendarCompact(
-        EventsExt.statisticsPartialsHourly(
-          events(s, d).withColumn("ts",
-            col("ts") + expr("INTERVAL 245 DAYS"))),
-        unit = "MONTH", tz = "America/Santiago")),
-    "events_statistics_daily_santiago" -> ((s, d) =>
-      EventsExt.statisticsCalendarCompact(
-        EventsExt.statisticsPartialsHourly(
-          events(s, d).withColumn("ts",
-            col("ts") + expr("INTERVAL 245 DAYS"))),
-        unit = "DAY", tz = "America/Santiago")),
-    // the MIDNIGHT-GAP zone THROUGH the calendar tier stitch, with the
-    // seam AT the gap day itself: the cutoff 1725768000000 is
-    // 2024-09-08's first instant (local 01:00 -03 — the resolved
-    // nonexistent midnight), the exact seam a literal local-midnight
-    // check would wrongly reject; hourly fine partials + SCL
-    // calendar-day tier + monthly regroup, oracle = the untiered
-    // Santiago months
-    "events_energy_bars_monthly_santiago_tiered" -> ((s, d) => {
-      val shifted = events(s, d)
-        .withColumn("ts", col("ts") + expr("INTERVAL 245 DAYS"))
-      val hourly = persistedPartials(s, d, "counter_hourly_scl")(
-        EventsExt.counterStatsPartialsHourly(shifted))
-      val dayScl = persistedPartials(s, d, "counter_day_scl")(
-        EventsExt.counterStatsCalendarPartials(hourly, unit = "DAY",
-          tz = "America/Santiago"))
-      EventsExt.energyBarsCalendarOfPartials(
-        EventsExt.counterStatsCalendarTierPartials(hourly, dayScl,
-          cutoffMs = 1725768000000L, tz = "America/Santiago"),
-        unit = "MONTH", tz = "America/Santiago")
-    }),
-    // the LAST calendar domain point: Australia/Lord_Howe is BOTH
-    // boundary families at once — a half-hour-offset zone (+10:30) WITH
-    // DST, and its DST shift is itself 30 MINUTES (+11 in summer), so
-    // the 2024-10-06 spring-forward local day spans 23.5 hours and the
-    // fall-back day 24.5. Local midnights sit at :30 UTC before the
-    // transition and :00 after — both on the 30-MINUTE fine grid, so
-    // 30-minute partials keep the calendar regroup exact (hourly could
-    // not, same argument as Kolkata). Fixture shifted +273 days to
-    // straddle the transition (Jan 1→Sep 30); the oracle emulates the
-    // two-offset year with CASE boundaries at 2024-10-05T15:30Z.
-    "events_energy_bars_monthly_lordhowe" -> ((s, d) =>
-      EventsExt.energyBarsCalendar(
-        events(s, d).withColumn("ts", col("ts") + expr("INTERVAL 273 DAYS")),
-        unit = "MONTH", tz = "Australia/Lord_Howe", everyMs = 1800000L)),
-    // the per-LOCAL-DAY form puts the 23.5-hour day itself under the
-    // hash gate (its bars sum 47 half-hour fine buckets)
-    "events_energy_bars_daily_lordhowe" -> ((s, d) =>
-      EventsExt.energyBarsCalendar(
-        events(s, d).withColumn("ts", col("ts") + expr("INTERVAL 273 DAYS")),
-        unit = "DAY", tz = "Australia/Lord_Howe", everyMs = 1800000L)),
-    // the mean family through the same fractional-hour-DST boundary
-    "events_statistics_monthly_lordhowe" -> ((s, d) =>
-      EventsExt.statisticsCalendarCompact(
-        EventsExt.statisticsPartialsHourly(
-          events(s, d).withColumn("ts",
-            col("ts") + expr("INTERVAL 273 DAYS")), stepMs = 1800000L),
-        unit = "MONTH", tz = "Australia/Lord_Howe")),
-    "events_statistics_daily_lordhowe" -> ((s, d) =>
-      EventsExt.statisticsCalendarCompact(
-        EventsExt.statisticsPartialsHourly(
-          events(s, d).withColumn("ts",
-            col("ts") + expr("INTERVAL 273 DAYS")), stepMs = 1800000L),
-        unit = "DAY", tz = "Australia/Lord_Howe")),
-    // the AMBIGUOUS-midnight zone — the mirror of the Santiago gap gate
-    // and the last calendar domain point: America/Havana's 2024-11-03
-    // fall-back lands 01:00 -04 → 00:00 -05, so the 25-hour day's
-    // 00:00–01:00 wall hour occurs TWICE and date_trunc('day')'s local
-    // midnight is AMBIGUOUS; java.time (and therefore calendarBucket's
-    // to_utc_timestamp) resolves it to the EARLIER offset — the key is
-    // the day's true first instant, 2024-11-03T04:00:00Z (-04). Havana's
-    // offsets are whole hours (-04/-05), so HOURLY fine partials stay
-    // exact. Fixture shifted +301 days to straddle the transition
-    // (Jan 1→Oct 28, Jan 30→Nov 26); the oracle emulates the two-offset
-    // year with CASE boundaries at 2024-11-03T05:00Z and maps the
-    // repeated wall hour at the earlier offset.
-    "events_energy_bars_monthly_havana" -> ((s, d) =>
-      EventsExt.energyBarsCalendar(
-        events(s, d).withColumn("ts", col("ts") + expr("INTERVAL 301 DAYS")),
-        unit = "MONTH", tz = "America/Havana")),
-    // the per-LOCAL-DAY form puts the 25-hour day ITSELF under the hash
-    // gate: every wall clock on 2024-11-03 truncates to the ambiguous
-    // local midnight, and the oracle's wall→instant CASE reproduces
-    // java.time's earlier-offset resolution, so the day's bar is keyed
-    // at 04:00Z on both engines — hash-exact or nothing
-    "events_energy_bars_daily_havana" -> ((s, d) =>
-      EventsExt.energyBarsCalendar(
-        events(s, d).withColumn("ts", col("ts") + expr("INTERVAL 301 DAYS")),
-        unit = "DAY", tz = "America/Havana")),
-    // the STATISTICS family through the same ambiguous-midnight boundary
-    "events_statistics_monthly_havana" -> ((s, d) =>
-      EventsExt.statisticsCalendarCompact(
-        EventsExt.statisticsPartialsHourly(
-          events(s, d).withColumn("ts",
-            col("ts") + expr("INTERVAL 301 DAYS"))),
-        unit = "MONTH", tz = "America/Havana")),
-    "events_statistics_daily_havana" -> ((s, d) =>
-      EventsExt.statisticsCalendarCompact(
-        EventsExt.statisticsPartialsHourly(
-          events(s, d).withColumn("ts",
-            col("ts") + expr("INTERVAL 301 DAYS"))),
-        unit = "DAY", tz = "America/Havana")),
-    // the AMBIGUOUS-midnight zone THROUGH the calendar tier stitch, with
-    // the seam AT the 25-hour day itself: the cutoff 1730606400000 is
-    // 2024-11-03's first instant (the AMBIGUOUS local midnight at its
-    // earlier offset, -04) — the overlap mirror of the Santiago gap-day
-    // seam; hourly fine partials + Havana calendar-day tier + monthly
-    // regroup, oracle = the untiered Havana months
-    "events_energy_bars_monthly_havana_tiered" -> ((s, d) => {
-      val shifted = events(s, d)
-        .withColumn("ts", col("ts") + expr("INTERVAL 301 DAYS"))
-      val hourly = persistedPartials(s, d, "counter_hourly_hav")(
-        EventsExt.counterStatsPartialsHourly(shifted))
-      val dayHav = persistedPartials(s, d, "counter_day_hav")(
-        EventsExt.counterStatsCalendarPartials(hourly, unit = "DAY",
-          tz = "America/Havana"))
-      EventsExt.energyBarsCalendarOfPartials(
-        EventsExt.counterStatsCalendarTierPartials(hourly, dayHav,
-          cutoffMs = 1730606400000L, tz = "America/Havana"),
-        unit = "MONTH", tz = "America/Havana")
-    }),
-    // LORD HOWE COMPOSED with the tier stitch — the r19 Kolkata
-    // composition extended through a DST transition: the cutoff
-    // 1728478800000 (2024-10-10 00:00 +11 = Oct 9 13:00Z) is a :00-UTC
-    // local midnight while every coarse-tier day BEFORE the Oct 6
-    // spring-forward starts at a :30-UTC one — the seam's UTC alignment
-    // CHANGES across the transition, the case Kolkata's fixed offset
-    // cannot exercise; 30-minute fine partials + Lord Howe calendar-day
-    // tier + monthly regroup, oracle = the untiered Lord Howe months
-    "events_energy_bars_monthly_lordhowe_tiered" -> ((s, d) => {
-      val shifted = events(s, d)
-        .withColumn("ts", col("ts") + expr("INTERVAL 273 DAYS"))
-      val fine30 = persistedPartials(s, d, "counter_30min_lhi")(
-        EventsExt.counterStatsPartialsHourly(shifted, everyMs = 1800000L))
-      val dayLhi = persistedPartials(s, d, "counter_day_lhi")(
-        EventsExt.counterStatsCalendarPartials(fine30, unit = "DAY",
-          tz = "Australia/Lord_Howe"))
-      EventsExt.energyBarsCalendarOfPartials(
-        EventsExt.counterStatsCalendarTierPartials(fine30, dayLhi,
-          cutoffMs = 1728478800000L, tz = "Australia/Lord_Howe"),
-        unit = "MONTH", tz = "Australia/Lord_Howe")
-    }),
-    // the mean-family sibling of the Lord Howe composition
-    "events_statistics_monthly_lordhowe_tiered" -> ((s, d) => {
-      val shifted = events(s, d)
-        .withColumn("ts", col("ts") + expr("INTERVAL 273 DAYS"))
-      val fine30 = persistedPartials(s, d, "stat_30min_lhi")(
-        EventsExt.statisticsPartialsHourly(shifted, stepMs = 1800000L))
-      val dayLhi = persistedPartials(s, d, "stat_day_lhi")(
-        EventsExt.statisticsCalendarPartials(fine30, unit = "DAY",
-          tz = "Australia/Lord_Howe"))
-      EventsExt.statisticsCalendarCompact(
-        EventsExt.statisticsCalendarTierPartials(fine30, dayLhi,
-          cutoffMs = 1728478800000L, tz = "Australia/Lord_Howe"),
-        unit = "MONTH", tz = "Australia/Lord_Howe")
-    }),
-    // the QUARTER-hour rung of the granularity ladder: Pacific/Chatham
-    // is the inhabited +12:45 zone, and it observes a ONE-HOUR DST
-    // (+13:45 from the last Sunday of September), so local midnights sit
-    // at 11:15 UTC before the 2024-09-29 spring-forward and 10:15 UTC
-    // after — :15-UTC instants on the 15-MINUTE fine grid that NEITHER
-    // hourly nor 30-minute partials contain. The zone forces the
-    // ladder's next step exactly the way Kolkata forced 30 minutes; the
-    // spring-forward local day spans 23 hours (02:45→03:45 skip, away
-    // from midnight, so every local midnight stays unambiguous and
-    // existent). Fixture shifted +265 days to straddle the transition
-    // (Jan 1→Sep 22); the oracle emulates the two-offset year with CASE
-    // boundaries at 2024-09-28T14:00Z on a 15-minute LOCF grid.
-    "events_energy_bars_monthly_chatham" -> ((s, d) =>
-      EventsExt.energyBarsCalendar(
-        events(s, d).withColumn("ts", col("ts") + expr("INTERVAL 265 DAYS")),
-        unit = "MONTH", tz = "Pacific/Chatham", everyMs = 900000L)),
-    // the per-LOCAL-DAY form puts the 23-hour day itself under the hash
-    // gate (its bars sum 92 quarter-hour fine buckets)
-    "events_energy_bars_daily_chatham" -> ((s, d) =>
-      EventsExt.energyBarsCalendar(
-        events(s, d).withColumn("ts", col("ts") + expr("INTERVAL 265 DAYS")),
-        unit = "DAY", tz = "Pacific/Chatham", everyMs = 900000L)),
-    // the mean family through the same quarter-hour boundary
-    "events_statistics_monthly_chatham" -> ((s, d) =>
-      EventsExt.statisticsCalendarCompact(
-        EventsExt.statisticsPartialsHourly(
-          events(s, d).withColumn("ts",
-            col("ts") + expr("INTERVAL 265 DAYS")), stepMs = 900000L),
-        unit = "MONTH", tz = "Pacific/Chatham")),
-    "events_statistics_daily_chatham" -> ((s, d) =>
-      EventsExt.statisticsCalendarCompact(
-        EventsExt.statisticsPartialsHourly(
-          events(s, d).withColumn("ts",
-            col("ts") + expr("INTERVAL 265 DAYS")), stepMs = 900000L),
-        unit = "DAY", tz = "Pacific/Chatham")),
-    // CHATHAM composed with the tier stitch: the seam is a QUARTER-hour
-    // UTC instant (cutoff 1728036900000 = 2024-10-05 00:00 +13:45 =
-    // Oct 4 10:15Z) that no hourly or 30-minute grid contains — the
-    // stitch itself needs the 15-minute fine grid — and every
-    // coarse-tier day BEFORE the Sep 29 transition starts at a
-    // different :15 alignment (11:15Z) than the cutoff's 10:15Z; oracle
-    // = the untiered Chatham months
-    "events_energy_bars_monthly_chatham_tiered" -> ((s, d) => {
-      val shifted = events(s, d)
-        .withColumn("ts", col("ts") + expr("INTERVAL 265 DAYS"))
-      val fine15 = persistedPartials(s, d, "counter_15min_cht")(
-        EventsExt.counterStatsPartialsHourly(shifted, everyMs = 900000L))
-      val dayCht = persistedPartials(s, d, "counter_day_cht")(
-        EventsExt.counterStatsCalendarPartials(fine15, unit = "DAY",
-          tz = "Pacific/Chatham"))
-      EventsExt.energyBarsCalendarOfPartials(
-        EventsExt.counterStatsCalendarTierPartials(fine15, dayCht,
-          cutoffMs = 1728036900000L, tz = "Pacific/Chatham"),
-        unit = "MONTH", tz = "Pacific/Chatham")
-    }),
-    // the r18 pair COMPOSED: the half-hour zone run THROUGH the calendar
-    // tier stitch — 30-MINUTE fine partials (IST local midnight is a :30
-    // UTC instant) + Asia/Kolkata LOCAL-CALENDAR-DAY coarse tier +
-    // monthly regroup, stitched at the Jan 15 IST midnight
-    // (1705257000000 = 2024-01-14T18:30Z); oracle = the UNTIERED Kolkata
-    // months, so the hash gate proves the composition is lossless
-    "events_energy_bars_monthly_kolkata_tiered" -> ((s, d) => {
-      val fine30 = persistedPartials(s, d, "counter_30min")(
-        EventsExt.counterStatsPartialsHourly(events(s, d),
-          everyMs = 1800000L))
-      val dayIst = persistedPartials(s, d, "counter_day_ist")(
-        EventsExt.counterStatsCalendarPartials(fine30, unit = "DAY",
-          tz = "Asia/Kolkata"))
-      EventsExt.energyBarsCalendarOfPartials(
-        EventsExt.counterStatsCalendarTierPartials(fine30, dayIst,
-          cutoffMs = 1705257000000L, tz = "Asia/Kolkata"),
-        unit = "MONTH", tz = "Asia/Kolkata")
-    }),
-    // the mean-family sibling of the composed gate: 30-minute statistics
-    // partials + IST calendar-day tier + monthly regroup; oracle = the
-    // UNTIERED Kolkata monthly statistics
-    "events_statistics_monthly_kolkata_tiered" -> ((s, d) => {
-      val fine30 = persistedPartials(s, d, "stat_30min")(
-        EventsExt.statisticsPartialsHourly(events(s, d), stepMs = 1800000L))
-      val dayIst = persistedPartials(s, d, "stat_day_ist")(
-        EventsExt.statisticsCalendarPartials(fine30, unit = "DAY",
-          tz = "Asia/Kolkata"))
-      EventsExt.statisticsCalendarCompact(
-        EventsExt.statisticsCalendarTierPartials(fine30, dayIst,
-          cutoffMs = 1705257000000L, tz = "Asia/Kolkata"),
-        unit = "MONTH", tz = "Asia/Kolkata")
     }),
     // per-user OLS trend from DECIMAL-exact sufficient statistics
     "events_user_trend" -> ((s, d) => EventsExt.userTrend(events(s, d))),
@@ -1553,7 +1370,7 @@ object SparkEntry {
     // it finds exactly the all-pairs baseline's pairs on the fixture)
     "media_feature_neardup_lsh" -> ((s, d) =>
       Multimodal.featureNearDupsBucketed(Multimodal.asMediaTable(docs(s, d))))
-  )
+  ))(_.run)
 
   // ---- oracle SQL -------------------------------------------------------
 
@@ -1693,186 +1510,89 @@ object SparkEntry {
         |  CAST(n_in_range AS BIGINT) AS n_buckets
         |FROM a WHERE n_in_range > 0""".stripMargin
 
-  // CALENDAR-month energy bars, zone emulated with the fixed -5 h offset
-  // (America/New_York is EST for the whole fixture span — no transition)
-  // while Spark runs the real named-zone calendar path: per-sample deltas
-  // grouped straight onto the LOCAL month of the later sample
-  private val energyBarsMonthlySql: String =
-    """WITH s0 AS (SELECT user_id, epoch_ms(ts) AS ms,
-        |              CAST(value AS DECIMAL(18,2)) AS v0 FROM events
-        |            WHERE value IS NOT NULL),
-        |s AS (SELECT user_id, ms, max(v0) AS v FROM s0 GROUP BY 1, 2),
-        |d AS (SELECT user_id, ms, v, lag(v) OVER w AS pv
-        |      FROM s WINDOW w AS (PARTITION BY user_id ORDER BY ms)),
-        |g AS (SELECT user_id,
-        |        epoch_ms(date_trunc('month',
-        |          make_timestamp((ms - 18000000) * 1000))) + 18000000
-        |          AS bucket_start_ms,
-        |        SUM(CASE WHEN pv IS NULL THEN CAST(0 AS DECIMAL(18,2))
-        |                 WHEN v >= pv THEN v - pv ELSE v END) AS inc_d
-        |      FROM d GROUP BY 1, 2)
-        |SELECT user_id, bucket_start_ms,
-        |  CAST(inc_d AS DOUBLE) AS energy
-        |FROM g""".stripMargin
+  // Row `z`'s emulated zone as SQL: `wall(x)` is the naive local wall
+  // clock of instant `x`, `instant(x)` the instant of naive wall `x`. The
+  // row's signed UTC offsets apply before/after its transition instant
+  // `tMs` (a fixed-offset zone has before = after, so both arms agree).
+  // `instant` switches at `wMs`, the first wall that maps UNAMBIGUOUSLY
+  // at the new offset — `tMs + max(offBefore, offAfter)`: any wall before
+  // it maps at the pre-transition offset, which reproduces BOTH java.time
+  // resolutions at once. Spring-forward (offAfter > offBefore): wMs is
+  // the gap's end, so a NONEXISTENT wall that date_trunc synthesizes
+  // (Santiago's gap sits exactly AT midnight) maps at the old offset —
+  // java.time's shift into the later offset — and the gap day keys at its
+  // true first instant. Fall-back (offAfter < offBefore): wMs is the
+  // overlap's end, so an AMBIGUOUS wall inside the repeated hour
+  // (Havana's overlap REACHES midnight) maps at the old offset —
+  // java.time's EARLIER-offset resolution — and the 25-hour day keys at
+  // its first occurrence.
+  private def zoneSql(z: CalendarZone): (String => String, String => String) = {
+    def offset(x: String, switchMs: Long) =
+      s"(CASE WHEN $x < $switchMs THEN (${z.offBeforeMs}) " +
+        s"ELSE (${z.offAfterMs}) END)"
+    (x => s"$x + ${offset(x, z.tMs.getOrElse(0L))}",
+      x => s"$x - ${offset(x, z.wMs)}")
+  }
 
-  // CALENDAR-month bars in the HALF-HOUR-offset zone, emulated with the
-  // fixed +05:30 (Asia/Kolkata has no DST): per-sample deltas grouped
-  // straight onto the LOCAL month of the later sample — Spark's named-
-  // zone path over 30-MINUTE fine partials must reproduce it exactly
-  // (hourly partials could not: local midnight is a :30 UTC instant)
-  private val energyBarsMonthlyKolkataSql: String =
-    """WITH s0 AS (SELECT user_id, epoch_ms(ts) AS ms,
-        |              CAST(value AS DECIMAL(18,2)) AS v0 FROM events
-        |            WHERE value IS NOT NULL),
-        |s AS (SELECT user_id, ms, max(v0) AS v FROM s0 GROUP BY 1, 2),
-        |d AS (SELECT user_id, ms, v, lag(v) OVER w AS pv
-        |      FROM s WINDOW w AS (PARTITION BY user_id ORDER BY ms)),
-        |g AS (SELECT user_id,
-        |        epoch_ms(date_trunc('month',
-        |          make_timestamp((ms + 19800000) * 1000))) - 19800000
-        |          AS bucket_start_ms,
-        |        SUM(CASE WHEN pv IS NULL THEN CAST(0 AS DECIMAL(18,2))
-        |                 WHEN v >= pv THEN v - pv ELSE v END) AS inc_d
-        |      FROM d GROUP BY 1, 2)
-        |SELECT user_id, bucket_start_ms,
-        |  CAST(inc_d AS DOUBLE) AS energy
-        |FROM g""".stripMargin
-
-  // CALENDAR bars in a TWO-OFFSET year, emulated with explicit CASE
-  // boundaries while Spark runs the real named-zone path. `offBeforeMs`/
-  // `offAfterMs` are the zone's SIGNED UTC offsets before/after the
-  // transition instant `tMs`; `shiftMs` moves the January fixture onto
-  // the transition; `wMs` is the first wall instant that maps
-  // UNAMBIGUOUSLY at the new offset, as a naive epoch — always
-  // `tMs + max(offBeforeMs, offAfterMs)`. The wall→instant mapping uses
-  // `wMs`: any wall before it maps at the pre-transition offset, which
-  // reproduces BOTH java.time resolutions at once. Spring-forward
-  // (offAfter > offBefore): wMs is the gap's end, so a NONEXISTENT wall
-  // that date_trunc synthesizes (Santiago's gap sits exactly AT
-  // midnight) maps at the old offset — java.time's shift into the later
-  // offset — and the gap day keys at its true first instant.
-  // Fall-back (offAfter < offBefore): wMs is the overlap's end, so an
-  // AMBIGUOUS wall inside the repeated hour (Havana's overlap REACHES
-  // midnight) maps at the old offset — java.time's EARLIER-offset
-  // resolution — and the 25-hour day keys at its first occurrence.
-  private def energyBarsTwoOffsetSql(unit: String, shiftMs: Long, tMs: Long,
-                                     wMs: Long, offBeforeMs: Long,
-                                     offAfterMs: Long): String =
+  // CALENDAR bars for a [[CalendarZone]] row while Spark runs the real
+  // named-zone path: per-sample deltas grouped straight onto the LOCAL
+  // period of the later sample; `shiftMs` moves the January fixture onto
+  // the row's transition
+  private def energyBarsTwoOffsetSql(z: CalendarZone, unit: String): String = {
+    val (wall, instant) = zoneSql(z)
     s"""WITH s0 AS (SELECT user_id,
-        |              epoch_ms(ts) + $shiftMs AS ms,
+        |              epoch_ms(ts) + ${z.shiftMs} AS ms,
         |              CAST(value AS DECIMAL(18,2)) AS v0 FROM events
         |            WHERE value IS NOT NULL),
         |s AS (SELECT user_id, ms, max(v0) AS v FROM s0 GROUP BY 1, 2),
         |d AS (SELECT user_id, ms, v, lag(v) OVER w AS pv
         |      FROM s WINDOW w AS (PARTITION BY user_id ORDER BY ms)),
-        |l AS (SELECT user_id, v, pv,
-        |        ms + (CASE WHEN ms < $tMs THEN ($offBeforeMs)
-        |                   ELSE ($offAfterMs) END) AS lms
-        |      FROM d),
+        |l AS (SELECT user_id, v, pv, ${wall("ms")} AS lms FROM d),
         |g AS (SELECT user_id,
         |        epoch_ms(date_trunc('$unit', make_timestamp(lms * 1000)))
         |          AS tms,
         |        SUM(CASE WHEN pv IS NULL THEN CAST(0 AS DECIMAL(18,2))
         |                 WHEN v >= pv THEN v - pv ELSE v END) AS inc_d
         |      FROM l GROUP BY 1, 2)
-        |SELECT user_id,
-        |  tms - (CASE WHEN tms < $wMs THEN ($offBeforeMs)
-        |              ELSE ($offAfterMs) END) AS bucket_start_ms,
+        |SELECT user_id, ${instant("tms")} AS bucket_start_ms,
         |  CAST(inc_d AS DOUBLE) AS energy
         |FROM g""".stripMargin
+  }
 
-  // America/Santiago 2024 (-04 → -03 at 2024-09-08T04:00Z, the
-  // spring-forward AT midnight; fixture shifted +245 days)
-  private def energyBarsSantiagoSql(unit: String): String =
-    energyBarsTwoOffsetSql(unit, shiftMs = 21168000000L,
-      tMs = 1725768000000L, wMs = 1725757200000L,
-      offBeforeMs = -14400000L, offAfterMs = -10800000L)
-
-  private val energyBarsMonthlySantiagoSql: String =
-    energyBarsSantiagoSql("month")
-  private val energyBarsDailySantiagoSql: String =
-    energyBarsSantiagoSql("day")
-
-  // Australia/Lord_Howe 2024 (+10:30 → +11 at 2024-10-05T15:30Z — the
-  // HALF-HOUR-offset zone WITH a 30-MINUTE DST shift: the spring-forward
-  // local day spans 23.5 hours; fixture shifted +273 days)
-  private def energyBarsLordHoweSql(unit: String): String =
-    energyBarsTwoOffsetSql(unit, shiftMs = 23587200000L,
-      tMs = 1728142200000L, wMs = 1728181800000L,
-      offBeforeMs = 37800000L, offAfterMs = 39600000L)
-
-  private val energyBarsMonthlyLordHoweSql: String =
-    energyBarsLordHoweSql("month")
-  private val energyBarsDailyLordHoweSql: String =
-    energyBarsLordHoweSql("day")
-
-  // America/Havana 2024 (-04 → -05 at 2024-11-03T05:00Z — the fall-back
-  // TO midnight: the 00:00–01:00 wall hour repeats, so the 25-hour
-  // day's local midnight is AMBIGUOUS and resolves to the earlier
-  // offset; fixture shifted +301 days)
-  private def energyBarsHavanaSql(unit: String): String =
-    energyBarsTwoOffsetSql(unit, shiftMs = 26006400000L,
-      tMs = 1730610000000L, wMs = 1730595600000L,
-      offBeforeMs = -14400000L, offAfterMs = -18000000L)
-
-  private val energyBarsMonthlyHavanaSql: String =
-    energyBarsHavanaSql("month")
-  private val energyBarsDailyHavanaSql: String =
-    energyBarsHavanaSql("day")
-
-  // Pacific/Chatham 2024 (+12:45 → +13:45 at 2024-09-28T14:00Z — the
-  // QUARTER-hour-offset zone with a one-hour DST: local midnights are
-  // :15-UTC instants, so exactness needs the 15-minute fine grid;
-  // fixture shifted +265 days)
-  private def energyBarsChathamSql(unit: String): String =
-    energyBarsTwoOffsetSql(unit, shiftMs = 22896000000L,
-      tMs = 1727532000000L, wMs = 1727581500000L,
-      offBeforeMs = 45900000L, offAfterMs = 49500000L)
-
-  private val energyBarsMonthlyChathamSql: String =
-    energyBarsChathamSql("month")
-  private val energyBarsDailyChathamSql: String =
-    energyBarsChathamSql("day")
-
-  // the STATISTICS family in a TWO-OFFSET year — LOCF pieces on a
-  // `gridMs` grid and per-sample extremes truncated through the same
-  // signed-offset CASE emulation as [[energyBarsTwoOffsetSql]]; exact
-  // whenever the grid contains every local midnight of the zone
-  // (Santiago's whole-hour offsets → hourly grid; Lord Howe's
-  // half-hour offsets → 30-minute grid)
-  private def statisticsTwoOffsetSql(unit: String, gridMs: Long,
-                                     shiftMs: Long, tMs: Long, wMs: Long,
-                                     offBeforeMs: Long,
-                                     offAfterMs: Long): String =
+  // the STATISTICS family for a [[CalendarZone]] row — LOCF pieces on
+  // the row's fine grid and per-sample extremes truncated through the
+  // same emulated zone as [[energyBarsTwoOffsetSql]]; exact because the
+  // grid contains every local midnight of the zone
+  private def statisticsTwoOffsetSql(z: CalendarZone, unit: String): String = {
+    val (wall, instant) = zoneSql(z)
+    val g = z.gridMs
     s"""WITH s0 AS (SELECT event_type,
-        |              epoch_ms(ts) + $shiftMs AS ms,
+        |              epoch_ms(ts) + ${z.shiftMs} AS ms,
         |              CAST(floor(value * 1000) AS BIGINT) AS vm FROM events
         |            WHERE value IS NOT NULL),
         |s AS (SELECT event_type, ms, max(vm) AS vm FROM s0 GROUP BY 1, 2),
         |p AS (SELECT event_type, ms, vm, lead(ms) OVER w AS nms
         |      FROM s WINDOW w AS (PARTITION BY event_type ORDER BY ms)),
         |x AS (SELECT event_type, ms, vm, nms,
-        |        unnest(generate_series(ms - ms % $gridMs,
-        |          (nms - 1) - (nms - 1) % $gridMs, $gridMs)) AS b
+        |        unnest(generate_series(ms - ms % $g,
+        |          (nms - 1) - (nms - 1) % $g, $g)) AS b
         |      FROM p WHERE nms IS NOT NULL),
         |pieces AS (
         |  SELECT event_type,
-        |    epoch_ms(date_trunc('$unit', make_timestamp(
-        |      (b + (CASE WHEN b < $tMs THEN ($offBeforeMs)
-        |                 ELSE ($offAfterMs) END)) * 1000))) AS tb,
-        |    vm * (least(nms, b + $gridMs) - greatest(ms, b)) AS num,
-        |    least(nms, b + $gridMs) - greatest(ms, b) AS cov
+        |    epoch_ms(date_trunc('$unit',
+        |      make_timestamp((${wall("b")}) * 1000))) AS tb,
+        |    vm * (least(nms, b + $g) - greatest(ms, b)) AS num,
+        |    least(nms, b + $g) - greatest(ms, b) AS cov
         |  FROM x),
         |twa AS (SELECT event_type, tb,
         |          CAST(SUM(num) AS DOUBLE)
         |            / CAST(SUM(cov) * 1000 AS DOUBLE) AS twa
         |        FROM pieces GROUP BY 1, 2),
-        |mm0 AS (SELECT event_type, epoch_ms(ts) + $shiftMs AS ms, value
+        |mm0 AS (SELECT event_type, epoch_ms(ts) + ${z.shiftMs} AS ms, value
         |        FROM events WHERE value IS NOT NULL),
         |mm AS (SELECT event_type,
-        |         epoch_ms(date_trunc('$unit', make_timestamp(
-        |           (ms + (CASE WHEN ms < $tMs THEN ($offBeforeMs)
-        |                       ELSE ($offAfterMs) END)) * 1000))) AS tb,
+        |         epoch_ms(date_trunc('$unit',
+        |           make_timestamp((${wall("ms")}) * 1000))) AS tb,
         |         min(value) AS min_value, max(value) AS max_value
         |       FROM mm0 GROUP BY 1, 2),
         |j AS (SELECT COALESCE(t.event_type, m.event_type) AS event_type,
@@ -1880,131 +1600,10 @@ object SparkEntry {
         |        m.min_value AS min_value, m.max_value AS max_value
         |      FROM twa t FULL OUTER JOIN mm m
         |        ON t.event_type = m.event_type AND t.tb = m.tb)
-        |SELECT event_type,
-        |  tb - (CASE WHEN tb < $wMs THEN ($offBeforeMs)
-        |             ELSE ($offAfterMs) END) AS bucket_ms,
+        |SELECT event_type, ${instant("tb")} AS bucket_ms,
         |  twa, min_value, max_value
         |FROM j""".stripMargin
-
-  private def statisticsSantiagoSql(unit: String): String =
-    statisticsTwoOffsetSql(unit, gridMs = 3600000L,
-      shiftMs = 21168000000L, tMs = 1725768000000L, wMs = 1725757200000L,
-      offBeforeMs = -14400000L, offAfterMs = -10800000L)
-
-  private val statisticsMonthlySantiagoSql: String =
-    statisticsSantiagoSql("month")
-  private val statisticsDailySantiagoSql: String =
-    statisticsSantiagoSql("day")
-
-  private def statisticsLordHoweSql(unit: String): String =
-    statisticsTwoOffsetSql(unit, gridMs = 1800000L,
-      shiftMs = 23587200000L, tMs = 1728142200000L, wMs = 1728181800000L,
-      offBeforeMs = 37800000L, offAfterMs = 39600000L)
-
-  private val statisticsMonthlyLordHoweSql: String =
-    statisticsLordHoweSql("month")
-  private val statisticsDailyLordHoweSql: String =
-    statisticsLordHoweSql("day")
-
-  private def statisticsHavanaSql(unit: String): String =
-    statisticsTwoOffsetSql(unit, gridMs = 3600000L,
-      shiftMs = 26006400000L, tMs = 1730610000000L, wMs = 1730595600000L,
-      offBeforeMs = -14400000L, offAfterMs = -18000000L)
-
-  private val statisticsMonthlyHavanaSql: String =
-    statisticsHavanaSql("month")
-  private val statisticsDailyHavanaSql: String =
-    statisticsHavanaSql("day")
-
-  private def statisticsChathamSql(unit: String): String =
-    statisticsTwoOffsetSql(unit, gridMs = 900000L,
-      shiftMs = 22896000000L, tMs = 1727532000000L, wMs = 1727581500000L,
-      offBeforeMs = 45900000L, offAfterMs = 49500000L)
-
-  private val statisticsMonthlyChathamSql: String =
-    statisticsChathamSql("month")
-  private val statisticsDailyChathamSql: String =
-    statisticsChathamSql("day")
-
-  // calendar-month statistics row at the same emulated fixed offset:
-  // hourly LOCF pieces re-grouped onto the local month (hour buckets
-  // align with the EST month boundary, so the regroup is exact)
-  private val statisticsMonthlyLocalSql: String =
-    """WITH s0 AS (SELECT event_type, epoch_ms(ts) AS ms,
-        |              CAST(floor(value * 1000) AS BIGINT) AS vm FROM events
-        |            WHERE value IS NOT NULL),
-        |s AS (SELECT event_type, ms, max(vm) AS vm FROM s0 GROUP BY 1, 2),
-        |p AS (SELECT event_type, ms, vm, lead(ms) OVER w AS nms
-        |      FROM s WINDOW w AS (PARTITION BY event_type ORDER BY ms)),
-        |x AS (SELECT event_type, ms, vm, nms,
-        |        unnest(generate_series(ms - ms % 3600000,
-        |          (nms - 1) - (nms - 1) % 3600000, 3600000)) AS b
-        |      FROM p WHERE nms IS NOT NULL),
-        |pieces AS (
-        |  SELECT event_type,
-        |    epoch_ms(date_trunc('month',
-        |      make_timestamp((b - 18000000) * 1000))) + 18000000
-        |      AS bucket_ms,
-        |    vm * (least(nms, b + 3600000) - greatest(ms, b)) AS num,
-        |    least(nms, b + 3600000) - greatest(ms, b) AS cov
-        |  FROM x),
-        |twa AS (SELECT event_type, bucket_ms,
-        |          CAST(SUM(num) AS DOUBLE)
-        |            / CAST(SUM(cov) * 1000 AS DOUBLE) AS twa
-        |        FROM pieces GROUP BY 1, 2),
-        |mm AS (SELECT event_type,
-        |         epoch_ms(date_trunc('month',
-        |           make_timestamp((epoch_ms(ts) - 18000000) * 1000)))
-        |           + 18000000 AS bucket_ms,
-        |         min(value) AS min_value, max(value) AS max_value
-        |       FROM events WHERE value IS NOT NULL GROUP BY 1, 2)
-        |SELECT COALESCE(t.event_type, m.event_type) AS event_type,
-        |       COALESCE(t.bucket_ms, m.bucket_ms) AS bucket_ms,
-        |       t.twa AS twa, m.min_value AS min_value,
-        |       m.max_value AS max_value
-        |FROM twa t FULL OUTER JOIN mm m
-        |  ON t.event_type = m.event_type AND t.bucket_ms = m.bucket_ms""".stripMargin
-
-  // calendar-month statistics in the HALF-HOUR-offset zone (constant
-  // +05:30, no DST): 30-minute LOCF pieces and per-sample extremes
-  // grouped onto the emulated-fixed-offset month — 30-min buckets align
-  // with the IST month boundary (a :30 UTC instant), so the regroup is
-  // exact and Spark's named-zone path must hash-match
-  private val statisticsMonthlyKolkataSql: String =
-    """WITH s0 AS (SELECT event_type, epoch_ms(ts) AS ms,
-        |              CAST(floor(value * 1000) AS BIGINT) AS vm FROM events
-        |            WHERE value IS NOT NULL),
-        |s AS (SELECT event_type, ms, max(vm) AS vm FROM s0 GROUP BY 1, 2),
-        |p AS (SELECT event_type, ms, vm, lead(ms) OVER w AS nms
-        |      FROM s WINDOW w AS (PARTITION BY event_type ORDER BY ms)),
-        |x AS (SELECT event_type, ms, vm, nms,
-        |        unnest(generate_series(ms - ms % 1800000,
-        |          (nms - 1) - (nms - 1) % 1800000, 1800000)) AS b
-        |      FROM p WHERE nms IS NOT NULL),
-        |pieces AS (
-        |  SELECT event_type,
-        |    epoch_ms(date_trunc('month',
-        |      make_timestamp((b + 19800000) * 1000))) - 19800000
-        |      AS bucket_ms,
-        |    vm * (least(nms, b + 1800000) - greatest(ms, b)) AS num,
-        |    least(nms, b + 1800000) - greatest(ms, b) AS cov
-        |  FROM x),
-        |twa AS (SELECT event_type, bucket_ms,
-        |          CAST(SUM(num) AS DOUBLE)
-        |            / CAST(SUM(cov) * 1000 AS DOUBLE) AS twa
-        |        FROM pieces GROUP BY 1, 2),
-        |mm AS (SELECT event_type,
-        |         epoch_ms(date_trunc('month',
-        |           make_timestamp((epoch_ms(ts) + 19800000) * 1000)))
-        |           - 19800000 AS bucket_ms,
-        |         min(value) AS min_value, max(value) AS max_value
-        |       FROM events WHERE value IS NOT NULL GROUP BY 1, 2)
-        |SELECT COALESCE(t.event_type, m.event_type) AS event_type,
-        |       COALESCE(t.bucket_ms, m.bucket_ms) AS bucket_ms,
-        |       t.twa AS twa, m.min_value AS min_value,
-        |       m.max_value AS max_value
-        |FROM twa t FULL OUTER JOIN mm m
-        |  ON t.event_type = m.event_type AND t.bucket_ms = m.bucket_ms""".stripMargin
+  }
 
   // TIER-STITCHED statistics oracle: MIXED granularity computed straight
   // from raw events — hourly LOCF pieces keyed daily before the Jan 15
@@ -2186,7 +1785,7 @@ object SparkEntry {
        |FROM documents""".stripMargin
 
   def oracleSql: Map[String, String] = {
-    val m = Map(
+    val m = withZoneQueries(Map(
     "core_pipeline" -> corePipelineSql,
     // the JDBC roundtrip must reproduce the parquet pipeline bit-for-bit
     "core_pipeline_jdbc" -> corePipelineSql,
@@ -3384,79 +2983,6 @@ object SparkEntry {
         |FROM g
         |WHERE bucket_start_ms >= 1704672000000
         |  AND bucket_start_ms < 1705881600000""".stripMargin,
-    // CALENDAR gates: true calendar months in the home zone (the oracle
-    // emulates America/New_York's constant in-span EST offset; Spark runs
-    // the real named-zone path) and the tier-stitched retention reads
-    "events_energy_bars_monthly" -> energyBarsMonthlySql,
-    "events_energy_bars_monthly_persisted" -> energyBarsMonthlySql,
-    "events_energy_bars_monthly_kolkata" -> energyBarsMonthlyKolkataSql,
-    // the MIDNIGHT-GAP zone gates (America/Santiago across the 2024-09-08
-    // spring-forward AT midnight; the daily form puts the gap day itself
-    // — a 23-hour day keyed at a midnight that does not exist — under
-    // the hash gate)
-    "events_energy_bars_monthly_santiago" -> energyBarsMonthlySantiagoSql,
-    "events_energy_bars_daily_santiago" -> energyBarsDailySantiagoSql,
-    "events_statistics_monthly_santiago" -> statisticsMonthlySantiagoSql,
-    "events_statistics_daily_santiago" -> statisticsDailySantiagoSql,
-    // the gap zone through the tier stitch with the seam AT the gap
-    // day: oracle = the untiered Santiago months, so the hash gate
-    // proves the gap-day seam is lossless
-    "events_energy_bars_monthly_santiago_tiered" ->
-      energyBarsMonthlySantiagoSql,
-    // the fractional-hour-DST zone (Australia/Lord_Howe: +10:30→+11,
-    // a 23.5-hour spring-forward day on the 30-minute fine grid)
-    "events_energy_bars_monthly_lordhowe" -> energyBarsMonthlyLordHoweSql,
-    "events_energy_bars_daily_lordhowe" -> energyBarsDailyLordHoweSql,
-    "events_statistics_monthly_lordhowe" -> statisticsMonthlyLordHoweSql,
-    "events_statistics_daily_lordhowe" -> statisticsDailyLordHoweSql,
-    // the AMBIGUOUS-midnight zone gates (America/Havana across the
-    // 2024-11-03 fall-back TO midnight; the daily form puts the 25-hour
-    // day itself — keyed at an ambiguous midnight java.time resolves to
-    // the EARLIER offset — under the hash gate)
-    "events_energy_bars_monthly_havana" -> energyBarsMonthlyHavanaSql,
-    "events_energy_bars_daily_havana" -> energyBarsDailyHavanaSql,
-    "events_statistics_monthly_havana" -> statisticsMonthlyHavanaSql,
-    "events_statistics_daily_havana" -> statisticsDailyHavanaSql,
-    // the ambiguous zone through the tier stitch with the seam AT the
-    // 25-hour day: oracle = the untiered Havana months, so the hash
-    // gate proves the ambiguous-day seam is lossless
-    "events_energy_bars_monthly_havana_tiered" ->
-      energyBarsMonthlyHavanaSql,
-    // Lord Howe COMPOSED with the tier stitch (the seam's UTC alignment
-    // changes across the DST transition): oracle = the untiered Lord
-    // Howe months / monthly statistics
-    "events_energy_bars_monthly_lordhowe_tiered" ->
-      energyBarsMonthlyLordHoweSql,
-    "events_statistics_monthly_lordhowe_tiered" ->
-      statisticsMonthlyLordHoweSql,
-    // the QUARTER-hour zone gates (Pacific/Chatham: +12:45→+13:45, a
-    // 23-hour spring-forward day whose local midnights are :15-UTC
-    // instants only the 15-minute fine grid contains)
-    "events_energy_bars_monthly_chatham" -> energyBarsMonthlyChathamSql,
-    "events_energy_bars_daily_chatham" -> energyBarsDailyChathamSql,
-    "events_statistics_monthly_chatham" -> statisticsMonthlyChathamSql,
-    "events_statistics_daily_chatham" -> statisticsDailyChathamSql,
-    // Chatham COMPOSED with the tier stitch (the seam is a quarter-hour
-    // UTC instant no coarser grid contains): oracle = the untiered
-    // Chatham months
-    "events_energy_bars_monthly_chatham_tiered" ->
-      energyBarsMonthlyChathamSql,
-    // the COMPOSED r18 gates: the half-hour zone THROUGH the calendar
-    // tier stitch — oracle = the untiered Kolkata months, so the hash
-    // gate proves the 30-min fine ∪ IST-calendar-day tier regroup is
-    // lossless
-    "events_energy_bars_monthly_kolkata_tiered" -> energyBarsMonthlyKolkataSql,
-    "events_statistics_monthly_kolkata_tiered" -> statisticsMonthlyKolkataSql,
-    // the tiered monthly view must equal the UNTIERED months computed
-    // straight from raw events — the oracle IS the untiered form, so the
-    // hash gate proves the calendar-day tier regroup is lossless
-    "events_energy_bars_monthly_tiered" -> energyBarsMonthlySql,
-    "events_statistics_monthly_local" -> statisticsMonthlyLocalSql,
-    // the tiered monthly statistics must equal the UNTIERED months
-    // computed straight from raw events — same oracle as the untiered
-    // query, so the hash gate proves the day-tier regroup is lossless
-    "events_statistics_monthly_tiered" -> statisticsMonthlyLocalSql,
-    "events_statistics_monthly_kolkata" -> statisticsMonthlyKolkataSql,
     "events_statistics_range_tiered" -> statisticsRangeTieredSql,
     "events_counter_stats_tiered" -> counterStatsTieredSql,
     "events_energy_range_tiered" -> energyRangeTieredSql,
@@ -4378,10 +3904,12 @@ object SparkEntry {
         |FROM e a JOIN e b ON a.doc_id < b.doc_id
         |WHERE round(list_dot_product(a.fv, b.fv) / (a.nrm * b.nrm), 6) >= 0.9999""".stripMargin,
     "core_points" -> corePointsSql
-    )
+    ))(_.oracle)
     // both names run the bucketed lerp; the oracle is the direct as-of
-    // bracket — two algebras, one answer, so ONE oracle text
-    m + ("events_lerp_panel" -> m("events_resample_linear"))
+    // bracket — two algebras, one answer, so ONE oracle text; likewise the
+    // persisted monthly bars and the raw ones compute the same months
+    m ++ Seq("events_lerp_panel" -> m("events_resample_linear"),
+      "events_energy_bars_monthly_persisted" -> m("events_energy_bars_monthly"))
   }
 
   /** The map-typed point build as oracle SQL: DuckDB rebuilds the exact

@@ -4,7 +4,7 @@ import graft.model.InfluxPoint
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 
 import java.io.OutputStream
-import java.net.{HttpURLConnection, URL}
+import java.net.{HttpURLConnection, URL, URLEncoder}
 import java.nio.charset.StandardCharsets
 
 /** S3: the InfluxDB batch sink, rebuilt as an executor-parallel
@@ -53,6 +53,15 @@ object InfluxSink {
     require(cfg.url.startsWith("http"), s"INFLUXDB_URL must be http(s): ${cfg.url}")
     cfg
   }
+
+  /** `cfg.url` + `path` with URL-encoded query parameters. Org and
+    * bucket are free text from the environment: raw, a `#` in a bucket
+    * name starts a URL fragment (the write lands in the truncated
+    * bucket) and a `&` in an org name splits the query. */
+  def endpoint(cfg: Config, path: String, params: (String, String)*): URL =
+    new URL(cfg.url + path + params.map { case (k, v) =>
+      s"$k=${URLEncoder.encode(v, StandardCharsets.UTF_8)}"
+    }.mkString("?", "&", ""))
 
   /** Line-protocol escaping per the InfluxDB v2 reference:
     * measurement: escape ',' and ' '; tag key/value and field key: escape
@@ -105,10 +114,11 @@ object InfluxSink {
         finally s.close()
     }
 
+    private val writeUrl = endpoint(cfg, "/api/v2/write", "org" -> cfg.org,
+      "bucket" -> cfg.bucket, "precision" -> "ns")
+
     private def post(body: Array[Byte]): Int = {
-      val url = new URL(
-        s"${cfg.url}/api/v2/write?org=${cfg.org}&bucket=${cfg.bucket}&precision=ns")
-      val conn = url.openConnection().asInstanceOf[HttpURLConnection]
+      val conn = writeUrl.openConnection().asInstanceOf[HttpURLConnection]
       conn.setConnectTimeout(cfg.connectTimeoutMs)
       conn.setReadTimeout(cfg.readTimeoutMs)
       conn.setRequestMethod("POST")

@@ -4,7 +4,7 @@ import graft.model.InfluxPoint
 import graft.sources.{InfluxScan, InfluxWatermarkSource}
 
 import java.io.OutputStream
-import java.net.{HttpURLConnection, URL}
+import java.net.HttpURLConnection
 import java.nio.charset.StandardCharsets
 import java.time.Instant
 
@@ -154,8 +154,8 @@ object MarkerCleanup {
       * would silently parse as double and a states point's string field
       * would be dropped from the replay. */
     override def queryAnnotated(flux: String): String = {
-      val url = new URL(s"${cfg.url}/api/v2/query?org=${cfg.org}")
-      val conn = url.openConnection().asInstanceOf[HttpURLConnection]
+      val conn = InfluxSink.endpoint(cfg, "/api/v2/query", "org" -> cfg.org)
+        .openConnection().asInstanceOf[HttpURLConnection]
       conn.setConnectTimeout(cfg.connectTimeoutMs)
       conn.setReadTimeout(cfg.readTimeoutMs)
       conn.setRequestMethod("POST")
@@ -184,9 +184,9 @@ object MarkerCleanup {
     override def write(lines: Seq[String]): Unit = writer.writeBatch(lines)
     override def delete(startIso: String, stopIso: String,
                         predicate: String): Unit = {
-      val url = new URL(
-        s"${cfg.url}/api/v2/delete?org=${cfg.org}&bucket=${cfg.bucket}")
-      val conn = url.openConnection().asInstanceOf[HttpURLConnection]
+      val conn = InfluxSink.endpoint(cfg, "/api/v2/delete", "org" -> cfg.org,
+        "bucket" -> cfg.bucket).openConnection()
+        .asInstanceOf[HttpURLConnection]
       conn.setConnectTimeout(cfg.connectTimeoutMs)
       conn.setReadTimeout(cfg.readTimeoutMs)
       conn.setRequestMethod("POST")

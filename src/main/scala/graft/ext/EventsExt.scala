@@ -608,34 +608,18 @@ object EventsExt {
     * EnergyCalendarSpec). A half-hour-offset zone (e.g. Asia/Kolkata)
     * needs 30-minute fine partials for the same guarantee; otherwise a
     * fine bucket straddling local midnight attributes wholly to the
-    * calendar bucket containing its START. Both sides of this boundary
-    * are executable: `events_energy_bars_monthly_kolkata` oracle-gates
-    * the 30-minute path and EnergyCalendarSpec pins the hourly
-    * divergence to the exact misattributed delta. Zones that transition exactly
-    * AT midnight (e.g. America/Santiago) truncate the 23-hour day to a
-    * local midnight that does not exist; Spark resolves it by shifting
-    * into the gap's later offset — the bucket key is then the day's true
-    * first instant, which is exactly what the dashboard renders
-    * (oracle-gated both monthly and per-local-day by
-    * `events_energy_bars_{monthly,daily}_santiago`, the daily form
-    * putting the gap day itself under the hash gate). The mirror
-    * anomaly — a fall-back whose repeated hour REACHES midnight
-    * (America/Havana: 01:00 -04 → 00:00 -05), making the 25-hour day's
-    * local midnight AMBIGUOUS — resolves to the EARLIER offset (again
-    * java.time's rule), so that day keys at the midnight's first
-    * occurrence (oracle-gated by
-    * `events_energy_bars_{monthly,daily}_havana`). The union of both
-    * boundary families — a half-hour base offset whose DST shift is
-    * itself 30 minutes (Australia/Lord_Howe: 23.5-/24.5-hour local
-    * days) — stays exact on 30-minute fine partials and is gated by
-    * `events_energy_bars_{monthly,daily}_lordhowe`. The ladder's
-    * QUARTER-hour rung is Pacific/Chatham (+12:45 base, one-hour DST to
-    * +13:45): every local midnight is a :15-UTC instant that neither
-    * hourly nor 30-minute partials contain, so exactness needs the
-    * 15-minute fine grid — gated by
-    * `events_energy_bars_{monthly,daily}_chatham`, with
-    * EnergyCalendarSpec pinning the 30-minute divergence to the exact
-    * misattributed delta. */
+    * calendar bucket containing its START (EnergyCalendarSpec pins that
+    * divergence to the exact misattributed delta). In general the fine
+    * grid must divide gcd(1 h, every UTC offset of the zone): 30 minutes
+    * for half-hour zones, 15 for quarter-hour ones (Pacific/Chatham).
+    * Where a zone transitions AT midnight, the truncated local midnight
+    * does not exist (America/Santiago) or occurs twice
+    * (America/Havana); Spark resolves it like java.time — into the
+    * gap's later offset, or to the earlier of the two — so the bucket
+    * key is the day's true first instant, which is what the dashboard
+    * renders. Each of these zones is oracle-gated monthly (and per local
+    * day) by the queries SparkEntry.calendarZones generates, one row per
+    * zone with its derived fine grid. */
   def counterStatsCalendarPartials(partials: DataFrame, unit: String,
                                    tz: String): DataFrame =
     partials

@@ -3,7 +3,7 @@ package graft.sources
 import graft.etl.InfluxSink
 
 import java.io.OutputStream
-import java.net.{HttpURLConnection, URL}
+import java.net.HttpURLConnection
 import java.nio.charset.StandardCharsets
 import java.time.Instant
 
@@ -78,8 +78,8 @@ object InfluxWatermarkSource {
     * reference exit(1)s on watermark-fetch failure). Shared by the
     * watermark scalar and the DSv2 read path. */
   private[graft] def postFlux(cfg: InfluxSink.Config, flux: String): String = {
-    val url = new URL(s"${cfg.url}/api/v2/query?org=${cfg.org}")
-    val conn = url.openConnection().asInstanceOf[HttpURLConnection]
+    val conn = InfluxSink.endpoint(cfg, "/api/v2/query", "org" -> cfg.org)
+      .openConnection().asInstanceOf[HttpURLConnection]
     conn.setConnectTimeout(cfg.connectTimeoutMs)
     conn.setReadTimeout(cfg.readTimeoutMs)
     conn.setRequestMethod("POST")

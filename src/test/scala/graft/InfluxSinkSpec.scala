@@ -131,6 +131,51 @@ class InfluxSinkSpec extends AnyFunSuite with Matchers {
     an[IllegalArgumentException] should be thrownBy
       InfluxSink.configFromEnv(good + ("INFLUXDB_URL" -> "ftp://x"))
   }
+
+  test("org and bucket are URL-encoded on every endpoint: a write, a " +
+    "Flux query, an annotated query and a delete each decode to exactly " +
+    "the configured org and bucket ('#' and '&' included)") {
+    import com.sun.net.httpserver.HttpServer
+    import java.net.{InetSocketAddress, URLDecoder}
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/api/v2/", exchange => {
+      exchange.getRequestBody.readAllBytes()
+      seen.add((exchange.getRequestURI.getPath,
+        exchange.getRequestURI.getRawQuery))
+      val resp = "_time\n".getBytes(utf8)
+      exchange.sendResponseHeaders(200, resp.length)
+      exchange.getResponseBody.write(resp)
+      exchange.close()
+    })
+    server.start()
+    try {
+      val (org, bucket) = ("Home Lab & Co", "ha#2024")
+      val cfg = InfluxSink.Config(
+        s"http://127.0.0.1:${server.getAddress.getPort}", org, bucket, "tok",
+        maxRetries = 0)
+      new InfluxSink.HttpLineWriter(cfg).writeBatch(Seq("m value=1 1"))
+      graft.sources.InfluxWatermarkSource.postFlux(cfg, "buckets()")
+      val transport = new graft.etl.MarkerCleanup.HttpTransport(cfg)
+      transport.queryAnnotated("buckets()")
+      transport.delete("1970-01-01T00:00:00Z", "2024-01-01T00:00:00Z",
+        "_measurement=\"m\"")
+      def params(raw: String): Map[String, String] =
+        raw.split("&").map { kv =>
+          val Array(k, v) = kv.split("=", 2)
+          URLDecoder.decode(k, utf8) -> URLDecoder.decode(v, utf8)
+        }.toMap
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toList.map { case (path, raw) => path -> params(raw) } shouldBe
+        List(
+          "/api/v2/write" ->
+            Map("org" -> org, "bucket" -> bucket, "precision" -> "ns"),
+          "/api/v2/query" -> Map("org" -> org),
+          "/api/v2/query" -> Map("org" -> org),
+          "/api/v2/delete" -> Map("org" -> org, "bucket" -> bucket))
+    } finally server.stop(0)
+  }
 }
 
 /** Collects batches across executor threads (local mode shares the JVM). */

@@ -66,87 +66,79 @@ class TieredReadSpec extends AnyFunSuite with Matchers {
       energies(SparkEntry.queries("events_energy_range")(spark, d))
   }
 
-  test("events_energy_bars_monthly_tiered: two partials scans (hourly " +
-    "recency + calendar-day history), no raw events; keys are true NY " +
-    "month starts and the bars equal the untiered monthly view") {
-    val s = spark
-    import s.implicits._
-    val (df, plan) = planOf("events_energy_bars_monthly_tiered")
-    plan should include("graft_partials_")
-    (plan should not).include("events.parquet")
-    "FileScan parquet".r.findAllIn(plan).size shouldBe 2
-    def bars(frame: org.apache.spark.sql.DataFrame) = frame
-      .select(col("user_id"), col("bucket_start_ms"), col("energy"))
-      .as[(Long, Long, Double)].collect()
-      .map(r => (r._1, r._2) -> r._3).toMap
-    val tiered = bars(df)
-    tiered should not be empty
-    val ny = java.time.ZoneId.of("America/New_York")
-    tiered.keys.map(_._2).foreach { k =>
-      val local = java.time.Instant.ofEpochMilli(k).atZone(ny)
-      local.toLocalTime shouldBe java.time.LocalTime.MIDNIGHT
-      local.getDayOfMonth shouldBe 1
+  // the tiered calendar-zone reads: (title, query, its untiered sibling,
+  // zone, UTC phase of a local month start within the hour — the :30 and
+  // :15 instants no hourly grid contains)
+  private val zoneTiered = Seq(
+    ("events_energy_bars_monthly_tiered: two partials scans (hourly " +
+      "recency + calendar-day history), no raw events; keys are true NY " +
+      "month starts and the bars equal the untiered monthly view",
+      "events_energy_bars_monthly_tiered", "events_energy_bars_monthly",
+      "America/New_York", 0L),
+    ("events_statistics_monthly_tiered: the mean-family sibling — two " +
+      "partials scans, no raw events, bit-equal to the untiered monthly " +
+      "statistics view",
+      "events_statistics_monthly_tiered", "events_statistics_monthly_local",
+      "America/New_York", 0L),
+    ("events_energy_bars_monthly_kolkata_tiered: the half-hour zone " +
+      "THROUGH the tier stitch — two partials scans, no raw events, keys " +
+      "are true IST month starts (:30 UTC instants), bars equal the " +
+      "untiered Kolkata view",
+      "events_energy_bars_monthly_kolkata_tiered",
+      "events_energy_bars_monthly_kolkata", "Asia/Kolkata", 1800000L),
+    ("events_statistics_monthly_kolkata_tiered: the mean-family " +
+      "composed gate — two partials scans, no raw events, bit-equal to " +
+      "the untiered Kolkata monthly statistics",
+      "events_statistics_monthly_kolkata_tiered",
+      "events_statistics_monthly_kolkata", "Asia/Kolkata", 1800000L),
+    ("events_energy_bars_monthly_santiago_tiered: the midnight-gap zone " +
+      "with the seam AT the gap day — two partials scans, no raw events, " +
+      "keys are true Santiago month starts, bars equal the untiered view",
+      "events_energy_bars_monthly_santiago_tiered",
+      "events_energy_bars_monthly_santiago", "America/Santiago", 0L),
+    ("events_energy_bars_monthly_lordhowe_tiered: the half-hour DST zone " +
+      "whose seam alignment changes across the transition — two partials " +
+      "scans, no raw events, keys are true Lord Howe month starts (:30 " +
+      "UTC instants), bars equal the untiered view",
+      "events_energy_bars_monthly_lordhowe_tiered",
+      "events_energy_bars_monthly_lordhowe", "Australia/Lord_Howe",
+      1800000L),
+    ("events_statistics_monthly_lordhowe_tiered: the mean-family sibling " +
+      "in the half-hour DST zone — two partials scans, no raw events, " +
+      "bit-equal to the untiered Lord Howe monthly statistics",
+      "events_statistics_monthly_lordhowe_tiered",
+      "events_statistics_monthly_lordhowe", "Australia/Lord_Howe", 1800000L),
+    ("events_energy_bars_monthly_havana_tiered: the ambiguous-midnight " +
+      "zone with the seam AT the 25-hour day — two partials scans, no raw " +
+      "events, keys are true Havana month starts, bars equal the untiered " +
+      "view",
+      "events_energy_bars_monthly_havana_tiered",
+      "events_energy_bars_monthly_havana", "America/Havana", 0L),
+    ("events_energy_bars_monthly_chatham_tiered: the quarter-hour zone " +
+      "with a :15-UTC seam — two partials scans, no raw events, keys are " +
+      "true Chatham month starts (:15 UTC instants), bars equal the " +
+      "untiered view",
+      "events_energy_bars_monthly_chatham_tiered",
+      "events_energy_bars_monthly_chatham", "Pacific/Chatham", 900000L))
+
+  zoneTiered.foreach { case (title, name, untiered, tz, phaseMs) =>
+    test(title) {
+      val (df, plan) = planOf(name)
+      plan should include("graft_partials_")
+      (plan should not).include("events.parquet")
+      "FileScan parquet".r.findAllIn(plan).size shouldBe 2
+      val tiered = df.collect()
+      tiered should not be empty
+      val key = df.columns.indexWhere(Set("bucket_ms", "bucket_start_ms"))
+      val zone = java.time.ZoneId.of(tz)
+      tiered.map(_.getLong(key)).foreach { k =>
+        val local = java.time.Instant.ofEpochMilli(k).atZone(zone)
+        local.toLocalTime shouldBe java.time.LocalTime.MIDNIGHT
+        local.getDayOfMonth shouldBe 1
+        k % 3600000L shouldBe phaseMs
+      }
+      tiered.map(_.toSeq).toSet shouldBe
+        SparkEntry.queries(untiered)(spark, d).collect().map(_.toSeq).toSet
     }
-    tiered shouldBe
-      bars(SparkEntry.queries("events_energy_bars_monthly")(spark, d))
-  }
-
-  test("events_statistics_monthly_tiered: the mean-family sibling — two " +
-    "partials scans, no raw events, bit-equal to the untiered monthly " +
-    "statistics view") {
-    val (df, plan) = planOf("events_statistics_monthly_tiered")
-    plan should include("graft_partials_")
-    (plan should not).include("events.parquet")
-    "FileScan parquet".r.findAllIn(plan).size shouldBe 2
-    def rows(frame: org.apache.spark.sql.DataFrame) = frame
-      .collect().map(_.toSeq).toSet
-    val tiered = rows(df)
-    tiered should not be empty
-    tiered shouldBe
-      rows(SparkEntry.queries("events_statistics_monthly_local")(spark, d))
-  }
-
-  test("events_energy_bars_monthly_kolkata_tiered: the half-hour zone " +
-    "THROUGH the tier stitch — two partials scans, no raw events, keys " +
-    "are true IST month starts (:30 UTC instants), bars equal the " +
-    "untiered Kolkata view") {
-    val s = spark
-    import s.implicits._
-    val (df, plan) = planOf("events_energy_bars_monthly_kolkata_tiered")
-    plan should include("graft_partials_")
-    (plan should not).include("events.parquet")
-    "FileScan parquet".r.findAllIn(plan).size shouldBe 2
-    def bars(frame: org.apache.spark.sql.DataFrame) = frame
-      .select(col("user_id"), col("bucket_start_ms"), col("energy"))
-      .as[(Long, Long, Double)].collect()
-      .map(r => (r._1, r._2) -> r._3).toMap
-    val tiered = bars(df)
-    tiered should not be empty
-    val ist = java.time.ZoneId.of("Asia/Kolkata")
-    tiered.keys.map(_._2).foreach { k =>
-      val local = java.time.Instant.ofEpochMilli(k).atZone(ist)
-      local.toLocalTime shouldBe java.time.LocalTime.MIDNIGHT
-      local.getDayOfMonth shouldBe 1
-      // the month boundary really is a half-hour UTC instant — the
-      // boundary no hourly grid contains
-      k % 3600000L shouldBe 1800000L
-    }
-    tiered shouldBe
-      bars(SparkEntry.queries("events_energy_bars_monthly_kolkata")(spark, d))
-  }
-
-  test("events_statistics_monthly_kolkata_tiered: the mean-family " +
-    "composed gate — two partials scans, no raw events, bit-equal to " +
-    "the untiered Kolkata monthly statistics") {
-    val (df, plan) = planOf("events_statistics_monthly_kolkata_tiered")
-    plan should include("graft_partials_")
-    (plan should not).include("events.parquet")
-    "FileScan parquet".r.findAllIn(plan).size shouldBe 2
-    def rows(frame: org.apache.spark.sql.DataFrame) = frame
-      .collect().map(_.toSeq).toSet
-    val tiered = rows(df)
-    tiered should not be empty
-    tiered shouldBe
-      rows(SparkEntry.queries("events_statistics_monthly_kolkata")(spark, d))
   }
 }

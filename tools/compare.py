@@ -3,6 +3,9 @@
 
 Usage: python3 tools/compare.py <sfDir> <verifyOutDir>
 
+Exits 1 when oracle_sql.json is missing, when any query FAILs, or when any
+rows-only result is ** EMPTY **; 0 otherwise, so scripts can gate on it.
+
 Reads each <outDir>/<name>/ parquet (Spark result), runs the matching
 oracle SQL from <outDir>/oracle_sql.json in DuckDB (tables = parquet files
 of <sfDir> registered as views), sorts columns by name and rows by all
@@ -19,7 +22,11 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
 
-oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+try:
+    oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+except FileNotFoundError:
+    print(f"FAIL: {outdir}/oracle_sql.json is missing")
+    sys.exit(1)
 
 def canon(rows, cols):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
@@ -49,7 +56,7 @@ def values_eq(a, b):
         return fa == fb or abs(fa - fb) <= 1e-12 * max(1.0, abs(fa), abs(fb))
     return a == b
 
-ok = fail = 0
+ok = fail = empty = 0
 import glob
 names = sorted(x.split("/")[-1] for x in glob.glob(f"{outdir}/*") if not x.endswith(".json"))
 for name in names:
@@ -63,6 +70,7 @@ for name in names:
         continue
     if name not in oracle:
         print(f"rows {name}: rows-only ({len(srows)} rows)" + ("  ** EMPTY **" if not srows else ""))
+        empty += not srows
         continue
     try:
         odf = con.execute(oracle[name])
@@ -94,3 +102,4 @@ for name in names:
         print(f"OK   {name}: {len(sr)} rows")
         ok += 1
 print(f"\n{ok} ok, {fail} fail, {len(names) - ok - fail} rows-only")
+sys.exit(1 if fail or empty else 0)
