@@ -120,7 +120,9 @@ object Backfill {
   /** Statistics backfill off the real recorder schema: `statistics`
     * carries REAL epoch-seconds start_ts and a metadata_id FK onto
     * `statistics_meta.id` — both adapted here, then [[statisticsPlan]].
-    * Returns the number of points written. */
+    * `statistics` is read range-partitioned on `start_ts` and cut at the
+    * watermark in the database, like `states` in [[run]]. Returns the
+    * number of points written. */
   def runStatistics(spark: SparkSession, dbPath: String,
                     cfg: InfluxSink.Config): Long = {
     // statistics-sourced watermark ONLY (the ha_type marker tag): the
@@ -129,21 +131,25 @@ object Backfill {
     // every statistics row at or newer than the oldest states point
     val watermark = InfluxWatermarkSource.oldestStatisticsTimestamp(cfg)
       .map(_.toEpochMilli)
-    val stats = Sources.sqliteJdbc(spark, dbPath, "statistics")
+    val stats = Sources.rangedJdbc(spark, Sources.sqliteUrl(dbPath),
+        "statistics", "start_ts", watermark)
       .withColumn("start_ts_ms", round(col("start_ts") * 1000).cast("long"))
     val meta = Sources.sqliteJdbc(spark, dbPath, "statistics_meta")
       .withColumnRenamed("id", "metadata_id")
     InfluxSink.write(InfluxSink.asPoints(statisticsPlan(stats, meta, watermark)), cfg)
   }
 
-  /** The states backfill: one recorder read, returning the number of
-    * points written. */
+  /** The states backfill: one recorder read, range-partitioned on
+    * `last_updated_ts` and cut at the watermark in the database
+    * ([[graft.etl.Sources.rangedJdbc]]), returning the number of points
+    * written. */
   def run(spark: SparkSession, dbPath: String, cfg: InfluxSink.Config,
           bugCompatUnitsFilter: Boolean = false): Long = {
     val watermark = InfluxWatermarkSource
       .oldestTimestamp(cfg, bugCompatUnitsFilter)
       .map(_.toEpochMilli)
-    val states = Sources.sqliteJdbc(spark, dbPath, "states")
+    val states = Sources.rangedJdbc(spark, Sources.sqliteUrl(dbPath),
+      "states", "last_updated_ts", watermark)
     val meta = Sources.sqliteJdbc(spark, dbPath, "states_meta")
     val attrs = Sources.sqliteJdbc(spark, dbPath, "state_attributes")
     InfluxSink.write(InfluxSink.asPoints(plan(states, meta, attrs, watermark)), cfg)

@@ -397,13 +397,11 @@ object SparkEntry {
     // as disjoint range-partitioned JDBC queries on last_updated_ms, fed
     // through the SAME pipeline, hash-gated against the parquet oracle
     "core_pipeline_jdbc" -> ((s, d) => {
-      val (url, lo, hi) = Sources.derbyRecorder(s, d,
-        states(s, d), meta(s, d), attrs(s, d))
+      val url = Sources.derbyRecorder(s, d, states(s, d), meta(s, d), attrs(s, d))
       def low(df: DataFrame) = df.select(df.columns.toSeq.map(c =>
         col(c).as(c.toLowerCase(java.util.Locale.ROOT))): _*)
       Transform.flatPipeline(
-        low(Sources.jdbc(s, url, "states", Some("LAST_UPDATED_MS"),
-          Some(lo.toDouble), Some(hi.toDouble + 1), 8)),
+        low(Sources.rangedJdbc(s, url, "states", "LAST_UPDATED_MS", None)),
         low(Sources.jdbc(s, url, "states_meta")),
         low(Sources.jdbc(s, url, "state_attributes")))
     }),

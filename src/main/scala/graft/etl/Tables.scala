@@ -1,6 +1,8 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.jdbc.JDBCOptions
+import org.apache.spark.sql.jdbc.JdbcDialects
 
 /** Fixture table readers (TESTDATA.md). Parquet scans are the rebuild's
   * stand-in for the reference's SQLite scan (S1, sqllite2influxdb.py:33-42);
@@ -130,26 +132,78 @@ object Sources {
         upperBound, numPartitions))
       .load()
 
-  /** JDBC read of one recorder table. At scale a single SQLite file is an
-    * inherently serial source (SURVEY.md §7.4.5) — partition on
-    * `last_updated_ts` ranges via the lower/upper bound options so executors
-    * issue disjoint range queries instead of one full scan.
+  /** The JDBC url of a recorder database file. */
+  def sqliteUrl(dbPath: String): String = s"jdbc:sqlite:$dbPath"
+
+  /** JDBC read of one recorder table: a single-partition scan unless the
+    * caller passes a partition column and both bounds. The backfill reads
+    * its two fact tables through [[rangedJdbc]] instead, which finds the
+    * bounds itself.
     */
   def sqliteJdbc(spark: SparkSession, dbPath: String, table: String,
                  partitionColumn: Option[String] = None,
                  lowerBound: Option[Double] = None,
                  upperBound: Option[Double] = None,
                  numPartitions: Int = 8): DataFrame =
-    jdbc(spark, s"jdbc:sqlite:$dbPath", table, partitionColumn, lowerBound,
+    jdbc(spark, sqliteUrl(dbPath), table, partitionColumn, lowerBound,
       upperBound, numPartitions)
+
+  /** A recorder fact table read range-partitioned on its time column into
+    * the session's `defaultParallelism` partitions, so executors issue
+    * disjoint range queries instead of one full scan (a single SQLite file
+    * is otherwise an inherently serial source, SURVEY.md §7.4.5). The
+    * bounds come from one pushed `SELECT MIN, MAX` ([[timeBounds]]); an
+    * empty table or a NULL bound keeps the single-partition scan.
+    *
+    * With a watermark (epoch ms; `timeCol` then holds epoch seconds) both
+    * the bounds query and the scan keep only `timeCol < (w + 1) / 1000.0`:
+    * a superset of the exact `round(ts * 1000) < w` filter, which the
+    * pipeline still applies in Spark, so the recorder returns only the rows
+    * near or below the watermark.
+    */
+  def rangedJdbc(spark: SparkSession, url: String, table: String,
+                 timeCol: String, watermarkMs: Option[Long]): DataFrame = {
+    val below = watermarkMs.map(w => (w + 1) / 1000.0)
+    val bounds = timeBounds(url, table, timeCol, below)
+    val df = jdbc(spark, url, table, Some(timeCol), bounds.map(_._1),
+      bounds.map(_._2), spark.sparkContext.defaultParallelism)
+    below.fold(df)(b =>
+      df.filter(org.apache.spark.sql.functions.col(timeCol) < b))
+  }
+
+  /** `SELECT MIN(c), MAX(c) FROM table [WHERE c < below]`, run on one
+    * driver-side connection opened the way Spark's own JDBC scan opens
+    * them. None when the table (or the part below the watermark) is empty.
+    */
+  def timeBounds(url: String, table: String, timeCol: String,
+                 below: Option[Double]): Option[(Double, Double)] = {
+    val dialect = JdbcDialects.get(url)
+    val c = dialect.quoteIdentifier(timeCol)
+    val sql = s"SELECT MIN($c), MAX($c) FROM $table" +
+      below.fold("")(_ => s" WHERE $c < ?")
+    val conn = dialect.createConnectionFactory(
+      new JDBCOptions(url, table, Map.empty[String, String]))(-1)
+    try {
+      val ps = conn.prepareStatement(sql)
+      below.foreach(ps.setDouble(1, _))
+      val rs = ps.executeQuery()
+      if (!rs.next()) None
+      else {
+        val lo = rs.getDouble(1)
+        val loNull = rs.wasNull()
+        val hi = rs.getDouble(2)
+        Option.when(!loNull && !rs.wasNull())((lo, hi))
+      }
+    } finally conn.close()
+  }
 
   // --- embedded-Derby recorder stand-in (core_pipeline_jdbc) -------------
 
   private val derbySeeded =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long, Long)]()
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Seed a GENERATED on-disk recorder database from the trio frames and
-    * return (jdbc url, min last_updated_ms, max last_updated_ms) — the
+    * return its jdbc url — the
     * sandbox ships no SQLite driver jar (documented, JdbcSourceSpec), so
     * the real-database roundtrip runs against embedded Derby from Spark's
     * own classpath: write the trio through Spark's JDBC writer, read it
@@ -158,11 +212,10 @@ object Sources {
     * strings and integrals, no floats to drift). Identifiers are written
     * UPPERCASE so both quoted and unquoted references resolve in Derby
     * regardless of how Spark renders the partition predicate. Seeding is
-    * once per (JVM × fixture dir); the min/max bounds are computed from
-    * the frame at seed time (one tiny agg job, bounded). */
+    * once per (JVM × fixture dir). */
   def derbyRecorder(spark: SparkSession, dir: String,
                     states: DataFrame, meta: DataFrame,
-                    attrs: DataFrame): (String, Long, Long) =
+                    attrs: DataFrame): String =
     derbySeeded.computeIfAbsent(dir, { _ =>
       // keep Derby's home (derby.log, db directories) out of the repo CWD
       val home = java.nio.file.Files
@@ -189,9 +242,6 @@ object Sources {
         up(df).write.mode("overwrite")
           .option("createTableColumnTypes", colTypes(t)).jdbc(url, t, props)
       }
-      val b = states.agg(
-        org.apache.spark.sql.functions.min("last_updated_ms"),
-        org.apache.spark.sql.functions.max("last_updated_ms")).head()
-      (url, b.getLong(0), b.getLong(1))
+      url
     })
 }

@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{MapType, StringType}
+import org.apache.spark.sql.types.{DoubleType, MapType, StringType}
 
 /** The core relational pipeline: every operator of SURVEY.md §2 (P1-P6,
   * J1-J2, F1-F9, O1) as composable Column functions plus the joined →
@@ -10,8 +10,11 @@ import org.apache.spark.sql.types.{MapType, StringType}
   *
   * Scale posture: states_meta and state_attributes are deduplicated
   * dimension tables (one row per entity / per distinct attr blob) — both are
-  * broadcast-joined so the fact scan of `states` never shuffles; the
-  * reference's global ORDER BY (sqllite2influxdb.py:89-90) is *not* applied
+  * broadcast-joined so the fact scan of `states` never shuffles. The JSON
+  * attribute blob is parsed on the `state_attributes` side, once per
+  * distinct blob before the broadcast (`attrColumns`), so a state row only
+  * picks up the parsed columns and coalesces a join miss to the defaults.
+  * The reference's global ORDER BY (sqllite2influxdb.py:89-90) is *not* applied
   * here because the sink is order-insensitive (SURVEY §2.6 O1) — callers who
   * want bug-compat ordering sort explicitly.
   */
@@ -129,8 +132,25 @@ object Transform {
       .join(broadcast(meta), Seq("metadata_id"), "inner")
       .join(broadcast(attrs), Seq("attributes_id"), "left")
 
+  /** The attribute-derived columns, computed on `state_attributes` itself:
+    * one JSON parse (F2, blocklist P5) per distinct blob, before the
+    * broadcast, instead of one per state row after the join — the recorder
+    * deduplicates blobs precisely so that rows share them. `extra` adds
+    * further columns over the same parsed map. A state row whose blob is
+    * missing gets NULLs here; [[corePipeline]] / [[flatPipeline]] coalesce
+    * them to the empty-attrs defaults.
+    */
+  private def attrColumns(attrs: DataFrame,
+                          extra: Column => Seq[Column] = _ => Nil): DataFrame = {
+    val a = withoutBlocked(parseAttrs(col("shared_attrs")))
+    attrs.select(Seq(col("attributes_id"),
+      measurement(a).as("attr_measurement"),
+      element_at(a, "friendly_name").as("attr_friendly_name")) ++ extra(a): _*)
+  }
+
   /** Full pipeline to the typed point struct (SURVEY §1.4): filter junk,
-    * split entity, parse+flatten attrs, dispatch field types, assemble tags.
+    * split entity, parse+flatten attrs once per blob ([[attrColumns]]),
+    * dispatch field types, assemble tags.
     * `state` itself becomes field "value" (numeric) or "state" (string)
     * (sqllite2influxdb.py:122-125); attr fields are concatenated AFTER so an
     * attr literally named "value"/"state" wins — last-writer-wins exactly as
@@ -139,27 +159,28 @@ object Transform {
     */
   def corePipeline(states: DataFrame, meta: DataFrame, attrs: DataFrame,
                    watermarkMs: Option[Long] = None): DataFrame = {
-    val base0 = filterJunk(joined(states, meta, attrs))
+    val blobs = attrColumns(attrs, a => Seq(
+      numericFields(a).as("attr_num"), stringFields(a).as("attr_str")))
+    val base0 = filterJunk(joined(states, meta, blobs))
     val base = watermarkMs.fold(base0)(w => base0.filter(olderThan(col("last_updated_ms"), w)))
-    val a = withoutBlocked(parseAttrs(col("shared_attrs")))
     val eShort = entityShort(col("entity_id"))
     val stateNum = when(isNumericLike(col("state")), col("state").try_cast("double"))
+    val noNum = map().cast(MapType(StringType, DoubleType))
+    val noStr = map().cast(MapType(StringType, StringType))
     base.select(
       col("event_id"),
-      measurement(a).as("measurement"),
+      coalesce(col("attr_measurement"), lit("default_measurement")).as("measurement"),
       map(
         lit("source"), lit("HA"),                         // F8 constant tag
         lit("domain"), entityDomain(col("entity_id")),
         lit("entity_id"), eShort,
-        lit("friendly_name"), friendlyName(a, eShort)).as("tags"),
+        lit("friendly_name"), coalesce(col("attr_friendly_name"), eShort)).as("tags"),
       map_concat(
-        when(stateNum.isNotNull, map(lit("value"), stateNum))
-          .otherwise(map().cast(MapType(StringType, org.apache.spark.sql.types.DoubleType))),
-        numericFields(a)).as("fields_num"),
+        when(stateNum.isNotNull, map(lit("value"), stateNum)).otherwise(noNum),
+        coalesce(col("attr_num"), noNum)).as("fields_num"),
       map_concat(
-        when(stateNum.isNull, map(lit("state"), col("state")))
-          .otherwise(map().cast(MapType(StringType, StringType))),
-        stringFields(a)).as("fields_str"),
+        when(stateNum.isNull, map(lit("state"), col("state"))).otherwise(noStr),
+        coalesce(col("attr_str"), noStr)).as("fields_str"),
       col("last_updated_ms").as("time_ms"))
   }
 
@@ -242,29 +263,29 @@ object Transform {
       .filter(size(col("fields_num")) > 0)
   }
 
-  private val DoubleType = org.apache.spark.sql.types.DoubleType
-
   /** Oracle-friendly flat projection of the same pipeline: well-known columns
     * only, no map types, so DuckDB can reproduce it with json_extract.
     * `withEventId=false` serves the real recorder shape, which carries no
     * row id (Schemas.states) — output is then a multiset keyed by content. */
   def flatPipeline(states: DataFrame, meta: DataFrame, attrs: DataFrame,
                    withEventId: Boolean = true): DataFrame = {
-    val base = filterJunk(joined(states, meta, attrs))
-    val a = withoutBlocked(parseAttrs(col("shared_attrs")))
+    val blobs = attrColumns(attrs, a => Seq(
+      element_at(a, "temperature").try_cast("double").as("attr_temperature"),
+      when(isNumericLike(element_at(a, "battery")),
+        element_at(a, "battery").try_cast("double")).as("attr_battery")))
+    val base = filterJunk(joined(states, meta, blobs))
     val eShort = entityShort(col("entity_id"))
     val idCols = if (withEventId) Seq(col("event_id")) else Seq.empty
     base.select(idCols ++ Seq(
-      measurement(a).as("measurement"),
+      coalesce(col("attr_measurement"), lit("default_measurement")).as("measurement"),
       entityDomain(col("entity_id")).as("domain"),
       eShort.as("entity_id_short"),
-      friendlyName(a, eShort).as("friendly_name"),
+      coalesce(col("attr_friendly_name"), eShort).as("friendly_name"),
       when(isNumericLike(col("state")), col("state").try_cast("double"))
         .as("value_num"),
       when(!isNumericLike(col("state")), col("state")).as("state_str"),
-      element_at(a, "temperature").try_cast("double").as("temperature"),
-      when(isNumericLike(element_at(a, "battery")),
-        element_at(a, "battery").try_cast("double")).as("battery"),
+      col("attr_temperature").as("temperature"),
+      col("attr_battery").as("battery"),
       col("last_updated_ms").as("time_ms")): _*)
   }
 }

@@ -8,7 +8,9 @@ import java.nio.charset.StandardCharsets
 import java.time.Instant
 
 /** S2: the InfluxDB watermark *read* path — the reference POSTs a Flux
-  * pipeline (`from |> range |> filter |> sort |> limit 1`) to
+  * pipeline (`from |> range |> filter |> sort |> limit 1`; here with
+  * `keep |> group` before the sort, so the limit picks the bucket's oldest
+  * point rather than each series' oldest) to
   * `/api/v2/query` and takes the first record's `_time`
   * (sqllite2influxdb.py:54-69). A 1-row result needs no Spark connector:
   * this is a driver-side scalar folded into the main plan as a literal
@@ -19,6 +21,16 @@ import java.time.Instant
   * the default filters on the `source == "HA"` tag (intended semantics).
   */
 object InfluxWatermarkSource {
+
+  /** `sort` and `limit` act per table and `range` yields one table per
+    * series, so the tables are merged first. `group()` errors when it
+    * merges tables whose `_value` types differ, and a bucket holds both
+    * float and string fields (InfluxSink writes both): `keep` drops every
+    * column but `_time` before the merge. */
+  private val oldestOfBucket = Seq(
+    """keep(columns: ["_time"])""", "group()",
+    """sort(columns: ["_time"], desc: false)""", "limit(n: 1)"
+  ).map("  |> " + _).mkString("\n")
 
   /** The states half's watermark query. `r["source"] == "HA"` alone would
     * ALSO match the statistics half's points (statisticsPoints writes the
@@ -34,8 +46,7 @@ object InfluxWatermarkSource {
     s"""from(bucket: "$bucket")
        |  |> range(start: 0)
        |  |> $filter
-       |  |> sort(columns: ["_time"], desc: false)
-       |  |> limit(n: 1)""".stripMargin
+       |""".stripMargin + oldestOfBucket
   }
 
   /** The STATISTICS half's watermark query: statistics-sourced points ONLY
@@ -50,27 +61,23 @@ object InfluxWatermarkSource {
     s"""from(bucket: "$bucket")
        |  |> range(start: 0)
        |  |> filter(fn: (r) => r["source"] == "HA" and r["ha_type"] == "statistics")
-       |  |> sort(columns: ["_time"], desc: false)
-       |  |> limit(n: 1)""".stripMargin
+       |""".stripMargin + oldestOfBucket
 
-  /** Parse InfluxDB annotated CSV: '#'-prefixed annotation rows, then a
-    * header row, then data rows; the watermark is `_time` of the first data
-    * row. Returns None on an empty result (≡ reference's IndexError path →
-    * full re-export). */
+  /** Parse InfluxDB annotated CSV: each table section is '#'-prefixed
+    * annotation rows, then a header row, then data rows; sections are
+    * separated by a blank line and each reads its own header. The watermark
+    * is the minimum `_time` over every data row of every table, so a reply
+    * with one table per series still yields the bucket's oldest. Returns
+    * None on an empty result (≡ reference's IndexError path → full
+    * re-export). */
   private[sources] def parseOldestTime(annotatedCsv: String): Option[Instant] = {
-    val lines = annotatedCsv.split("\r?\n").iterator
-      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toList
-    lines match {
-      case header :: first :: _ =>
-        val idx = header.split(",").indexOf("_time")
-        if (idx < 0) None
-        else {
-          val cells = first.split(",")
-          if (cells.length <= idx) None
-          else scala.util.Try(Instant.parse(cells(idx))).toOption
-        }
-      case _ => None
-    }
+    var timeIdx = -2 // -2: the next data line is a header; -1: header lacks _time
+    annotatedCsv.split("\r?\n").iterator.map(_.trim).flatMap { l =>
+      if (l.isEmpty || l.startsWith("#")) { timeIdx = -2; None }
+      else if (timeIdx == -2) { timeIdx = l.split(",").indexOf("_time"); None }
+      else if (timeIdx < 0) None
+      else l.split(",").lift(timeIdx).flatMap(c => scala.util.Try(Instant.parse(c)).toOption)
+    }.minOption
   }
 
   /** POST a Flux query body to /api/v2/query, return the annotated-CSV

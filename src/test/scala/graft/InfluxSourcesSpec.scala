@@ -73,6 +73,38 @@ class InfluxSourcesSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("S2: the watermark is the oldest point of the BUCKET: both queries " +
+    "keep only _time and group() before sort/limit (a merge of float and " +
+    "string _value tables would fail), and the parse takes the minimum " +
+    "_time over every table, each read with its own header") {
+    // one table per series, as an ungrouped range → sort → limit answers;
+    // the second table has other columns and holds the older point
+    val perSeries =
+      """#datatype,string,long,dateTime:RFC3339,string,double
+        |#group,false,false,false,true,false
+        |#default,_result,,,,
+        |,result,table,_time,_measurement,_value
+        |,_result,0,2023-05-01T12:34:56Z,°C,21.5
+        |
+        |#datatype,string,long,string,string,dateTime:RFC3339,double
+        |#group,false,false,true,true,false,false
+        |#default,_result,,,,,
+        |,result,table,_measurement,entity_id,_time,_value
+        |,_result,1,W,plug,2023-04-30T08:00:00Z,3.0
+        |,_result,2,W,lamp,2023-04-30T09:00:00Z,4.0
+        |""".stripMargin
+    val mergedTail = "|> keep(columns: [\"_time\"])\n  |> group()\n" +
+      "  |> sort(columns: [\"_time\"], desc: false)\n  |> limit(n: 1)"
+    withServer(200, perSeries) { (url, captured) =>
+      InfluxWatermarkSource.oldestTimestamp(cfg(url)) shouldBe
+        Some(Instant.parse("2023-04-30T08:00:00Z"))
+      captured().get._2 should include(mergedTail)
+      InfluxWatermarkSource.oldestStatisticsTimestamp(cfg(url)) shouldBe
+        Some(Instant.parse("2023-04-30T08:00:00Z"))
+      captured().get._2 should include(mergedTail)
+    }
+  }
+
   test("S2/Q1: bug-compat mode sends the 'units' measurement filter") {
     withServer(200, annotatedCsv) { (url, captured) =>
       InfluxWatermarkSource.oldestTimestamp(cfg(url), bugCompatUnitsFilter = true)

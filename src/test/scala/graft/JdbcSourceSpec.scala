@@ -82,6 +82,68 @@ class JdbcSourceSpec extends AnyFunSuite with Matchers {
     df.count() shouldBe 120
   }
 
+  // --- rangedJdbc: bounds from one pushed MIN/MAX, watermark cut -------
+
+  private val boundsUrl = "jdbc:derby:memory:graft_bounds;create=true"
+  private val t0 = 1.7e9
+
+  /** id → epoch-seconds per table; columns quoted lowercase, as SQLite
+    * reports the recorder's. */
+  private val boundsTables: Map[String, Seq[(Int, Double)]] = Map(
+    "empty_t" -> Nil,
+    "one_t" -> Seq(1 -> (t0 + 0.25)),
+    "same_t" -> (1 to 50).map(_ -> (t0 + 0.5)),
+    "spread_t" -> (1 to 40).map(i => i -> (t0 + i * 37.5)))
+
+  private lazy val boundsSeeded: Unit = {
+    val conn = DriverManager.getConnection(boundsUrl)
+    try boundsTables.foreach { case (t, rows) =>
+      val st = conn.createStatement()
+      st.executeUpdate(s"""CREATE TABLE $t ("id" INT, "ts" DOUBLE)""")
+      st.close()
+      val ins = conn.prepareStatement(s"INSERT INTO $t VALUES (?, ?)")
+      rows.foreach { case (id, ts) => ins.setInt(1, id); ins.setDouble(2, ts); ins.executeUpdate() }
+      ins.close()
+    } finally conn.close()
+  }
+
+  /** rangedJdbc reads exactly the rows below the watermark's superset
+    * bound, each once; returns its partition count. */
+  private def rangedReadsOnce(table: String, wmMs: Option[Long]): Int = {
+    boundsSeeded
+    val df = Sources.rangedJdbc(spark, boundsUrl, table, "ts", wmMs)
+    val want = boundsTables(table).collect {
+      case (id, ts) if wmMs.forall(w => ts < (w + 1) / 1000.0) => id
+    }
+    df.select("id").collect().map(_.getInt(0)).sorted.toSeq shouldBe want.sorted
+    df.rdd.getNumPartitions
+  }
+
+  test("rangedJdbc on an empty table: no bounds, one unpartitioned scan") {
+    boundsSeeded
+    Sources.timeBounds(boundsUrl, "empty_t", "ts", None) shouldBe None
+    rangedReadsOnce("empty_t", None) shouldBe 1
+  }
+
+  test("rangedJdbc on a single row and on equal timestamps reads each row once") {
+    boundsSeeded
+    Sources.timeBounds(boundsUrl, "one_t", "ts", None) shouldBe Some((t0 + 0.25, t0 + 0.25))
+    rangedReadsOnce("one_t", None)
+    rangedReadsOnce("same_t", None)
+    rangedReadsOnce("same_t", Some(((t0 + 0.5) * 1000).toLong + 1))
+  }
+
+  test("rangedJdbc: a watermark below every row gives zero rows; a " +
+    "mid-range one splits the rest over defaultParallelism partitions") {
+    boundsSeeded
+    val below = ((t0 - 10) * 1000).toLong
+    Sources.timeBounds(boundsUrl, "spread_t", "ts", Some((below + 1) / 1000.0)) shouldBe None
+    rangedReadsOnce("spread_t", Some(below)) shouldBe 1
+    rangedReadsOnce("spread_t", Some(((t0 + 20 * 37.5) * 1000).toLong)) shouldBe
+      spark.sparkContext.defaultParallelism
+    rangedReadsOnce("spread_t", None) shouldBe spark.sparkContext.defaultParallelism
+  }
+
   test("recorder trio Derby roundtrip: core_pipeline_jdbc ≡ the parquet " +
     "pipeline row-for-row (the query the oracle hash-gates per round)") {
     val d = "/root/testdata/sf0.001"
