@@ -214,10 +214,12 @@ object PlanAudit {
       // (rarest-prefix token, lang) — never a nested loop, even though
       // the oracle is the all-pairs posting join
       "dedup_jaccard_prefix" -> Seq("!CartesianProduct", "!BroadcastNestedLoopJoin"),
-      // PageRank iterations re-join the ONE localCheckpointed edge table
-      // (an ExistingRDD scan) — the LSH pipeline that derived the edges
-      // is not re-planned per round
-      "dedup_pagerank" -> Seq("ExistingRDD", "!CartesianProduct"),
+      // at sf0.01 the graph is driver-sized, so `pageRank`'s size gate
+      // runs the rounds on the driver and returns their ranks as a toDF
+      // LocalRelation: the whole plan is one LocalTableScan — no edge scan
+      // and no join is re-planned per round. (Past the gate the rounds
+      // re-join a localCheckpointed ExistingRDD edge table instead.)
+      "dedup_pagerank" -> Seq("LocalTableScan", "!CartesianProduct"),
       // the EWMA recursion folds map-side via the aggregate HOF after one
       // user-keyed aggregate — no per-user Window sort in the plan
       "events_ewma" -> Seq("!Window"),

@@ -3,8 +3,7 @@ package graft.etl
 import graft.model.InfluxPoint
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 
-import java.io.OutputStream
-import java.net.{HttpURLConnection, URL, URLEncoder}
+import java.net.{URL, URLEncoder}
 import java.nio.charset.StandardCharsets
 
 /** S3: the InfluxDB batch sink, rebuilt as an executor-parallel
@@ -13,8 +12,9 @@ import java.nio.charset.StandardCharsets
   * sqllite2influxdb.py:100-161).
   *
   * Design: `Dataset[InfluxPoint].mapPartitions` — each executor partition
-  * builds line-protocol strings locally and POSTs straight to
-  * `/api/v2/write`, giving N-way parallel writes with bounded memory
+  * builds line-protocol strings locally and POSTs them to `/api/v2/write`
+  * through the one Influx client ([[InfluxHttp]]: auth, timeouts, bounded
+  * retry on 429/5xx/IO), giving N-way parallel writes with bounded memory
   * (O(batchSize) lines resident, mirroring the reference's O(BATCH_SIZE)
   * pull loop at sqllite2influxdb.py:183-189); [[write]] returns the lines
   * it wrote, from one pass over the input. Idempotent by Influx point
@@ -101,57 +101,16 @@ object InfluxSink {
     def writeBatch(lines: Seq[String]): Unit
   }
 
-  /** Production-posture HTTP transport: connect/read timeouts, response
-    * body always drained (keep-alive connections are reusable), bounded
-    * exponential-backoff retry on 5xx/429/IO errors. 4xx (other than 429)
-    * is a permanent error — the batch is malformed, retrying can't help. */
+  /** The HTTP transport: one [[InfluxHttp.post]] per batch to
+    * `/api/v2/write` (URL built once per writer), under the client's
+    * retry policy. */
   final class HttpLineWriter(cfg: Config) extends LineWriter {
-    private def drain(conn: HttpURLConnection): String = {
-      val s = if (conn.getResponseCode >= 400) conn.getErrorStream
-              else conn.getInputStream
-      if (s == null) "" else
-        try new String(s.readAllBytes(), StandardCharsets.UTF_8).take(500)
-        finally s.close()
-    }
-
     private val writeUrl = endpoint(cfg, "/api/v2/write", "org" -> cfg.org,
       "bucket" -> cfg.bucket, "precision" -> "ns")
 
-    private def post(body: Array[Byte]): Int = {
-      val conn = writeUrl.openConnection().asInstanceOf[HttpURLConnection]
-      conn.setConnectTimeout(cfg.connectTimeoutMs)
-      conn.setReadTimeout(cfg.readTimeoutMs)
-      conn.setRequestMethod("POST")
-      conn.setDoOutput(true)
-      conn.setFixedLengthStreamingMode(body.length)
-      conn.setRequestProperty("Authorization", s"Token ${cfg.token}")
-      conn.setRequestProperty("Content-Type", "text/plain; charset=utf-8")
-      val out: OutputStream = conn.getOutputStream
-      try out.write(body) finally out.close()
-      val code = conn.getResponseCode
-      val detail = drain(conn)
-      if (code >= 400 && code < 500 && code != 429)
-        throw new RuntimeException(s"influx write rejected: HTTP $code $detail")
-      code
-    }
-
-    override def writeBatch(lines: Seq[String]): Unit = {
-      if (lines.isEmpty) return
-      val body = lines.mkString("\n").getBytes(StandardCharsets.UTF_8)
-      var attempt = 0
-      while (true) {
-        val failure: Option[String] =
-          try { val c = post(body); if (c < 300) return else Some(s"HTTP $c") }
-          catch {
-            case e: java.io.IOException => Some(e.toString)
-          }
-        attempt += 1
-        if (attempt > cfg.maxRetries)
-          throw new RuntimeException(
-            s"influx write failed after ${cfg.maxRetries} retries: ${failure.get}")
-        Thread.sleep(200L << (attempt - 1)) // 200/400/800ms backoff
-      }
-    }
+    override def writeBatch(lines: Seq[String]): Unit =
+      if (lines.nonEmpty) InfluxHttp.post(cfg, writeUrl, "write",
+        "text/plain; charset=utf-8", lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
   }
 
   /** Write a point Dataset and return the number of lines written.

@@ -3,8 +3,6 @@ package graft.etl
 import graft.model.InfluxPoint
 import graft.sources.{InfluxScan, InfluxWatermarkSource}
 
-import java.io.OutputStream
-import java.net.HttpURLConnection
 import java.nio.charset.StandardCharsets
 import java.time.Instant
 
@@ -142,6 +140,10 @@ object MarkerCleanup {
     def write(lines: Seq[String]): Unit
   }
 
+  /** The production [[Http]]: all four operations are posts through the
+    * one Influx client ([[InfluxHttp]]), so the fetch, delete, replay and
+    * verify share its auth, timeouts and bounded retry on 429/5xx/IO. A
+    * delete is safe to resend: it is idempotent over its window. */
   final class HttpTransport(cfg: InfluxSink.Config) extends Http {
     private val writer = new InfluxSink.HttpLineWriter(cfg)
     override def query(flux: String): String =
@@ -153,61 +155,20 @@ object MarkerCleanup {
       * the `datatype` annotation explicitly — without it every field
       * would silently parse as double and a states point's string field
       * would be dropped from the replay. */
-    override def queryAnnotated(flux: String): String = {
-      val conn = InfluxSink.endpoint(cfg, "/api/v2/query", "org" -> cfg.org)
-        .openConnection().asInstanceOf[HttpURLConnection]
-      conn.setConnectTimeout(cfg.connectTimeoutMs)
-      conn.setReadTimeout(cfg.readTimeoutMs)
-      conn.setRequestMethod("POST")
-      conn.setDoOutput(true)
-      conn.setRequestProperty("Authorization", s"Token ${cfg.token}")
-      conn.setRequestProperty("Content-Type", "application/json")
-      conn.setRequestProperty("Accept", "application/csv")
-      val body = (s"""{"query": "${jsonEsc(flux)}", "dialect": """ +
-        """{"header": true, "annotations": ["datatype"]}}""")
-        .getBytes(StandardCharsets.UTF_8)
-      val out: OutputStream = conn.getOutputStream
-      try out.write(body) finally out.close()
-      val code = conn.getResponseCode
-      if (code >= 300) {
-        val err = Option(conn.getErrorStream)
-          .map(s => try new String(s.readAllBytes(),
-            StandardCharsets.UTF_8).take(300) finally s.close())
-          .getOrElse("")
-        throw new RuntimeException(s"influx query failed: HTTP $code $err")
-      }
-      val s = conn.getInputStream
-      try new String(s.readAllBytes(), StandardCharsets.UTF_8)
-      finally s.close()
-    }
+    override def queryAnnotated(flux: String): String =
+      InfluxHttp.query(cfg, "application/json",
+        (s"""{"query": "${jsonEsc(flux)}", "dialect": """ +
+          """{"header": true, "annotations": ["datatype"]}}""")
+          .getBytes(StandardCharsets.UTF_8))
 
     override def write(lines: Seq[String]): Unit = writer.writeBatch(lines)
     override def delete(startIso: String, stopIso: String,
-                        predicate: String): Unit = {
-      val conn = InfluxSink.endpoint(cfg, "/api/v2/delete", "org" -> cfg.org,
-        "bucket" -> cfg.bucket).openConnection()
-        .asInstanceOf[HttpURLConnection]
-      conn.setConnectTimeout(cfg.connectTimeoutMs)
-      conn.setReadTimeout(cfg.readTimeoutMs)
-      conn.setRequestMethod("POST")
-      conn.setDoOutput(true)
-      conn.setRequestProperty("Authorization", s"Token ${cfg.token}")
-      conn.setRequestProperty("Content-Type", "application/json")
-      val body = (s"""{"start": "$startIso", "stop": "$stopIso", """ +
-        s""""predicate": "${escQuoted(predicate)}"}""")
-        .getBytes(StandardCharsets.UTF_8)
-      val out: OutputStream = conn.getOutputStream
-      try out.write(body) finally out.close()
-      val code = conn.getResponseCode
-      if (code >= 300) {
-        val err = Option(conn.getErrorStream)
-          .map(s => try new String(s.readAllBytes(),
-            StandardCharsets.UTF_8).take(300) finally s.close())
-          .getOrElse("")
-        throw new RuntimeException(s"influx delete failed: HTTP $code $err")
-      }
-      Option(conn.getInputStream).foreach(_.close())
-    }
+                        predicate: String): Unit =
+      InfluxHttp.post(cfg, InfluxSink.endpoint(cfg, "/api/v2/delete",
+        "org" -> cfg.org, "bucket" -> cfg.bucket), "delete", "application/json",
+        (s"""{"start": "$startIso", "stop": "$stopIso", """ +
+          s""""predicate": "${escQuoted(predicate)}"}""")
+          .getBytes(StandardCharsets.UTF_8))
   }
 
   /** Backslash-and-quote escaping, shared by the JSON delete body and the

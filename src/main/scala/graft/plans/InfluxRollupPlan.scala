@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.etl.InfluxSink
-import graft.sources.{InfluxReadTransports, InfluxRollup, InfluxScan, InfluxTable, InfluxWatermarkSource}
+import graft.sources.{InfluxRollup, InfluxScan, InfluxTable}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Add, Alias, Attribute, AttributeReference, AttributeSet, Cast, Coalesce, Divide, EqualTo, Expression, ExprId, Floor, GenericInternalRow, GetMapValue, GreaterThan, GreaterThanOrEqual, If, IntegralDivide, IsNotNull, LessThan, LessThanOrEqual, Literal, Multiply, NamedExpression, PredicateHelper, Subtract}

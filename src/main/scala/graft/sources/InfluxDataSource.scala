@@ -361,14 +361,14 @@ final case class InfluxStreamingDataWriterFactory(cfg: InfluxSink.Config,
   extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
-    new InfluxDataWriter(partitionId, cfg, InfluxTransports.resolve(cfg), ords)
+    new InfluxDataWriter(partitionId, cfg, new InfluxSink.HttpLineWriter(cfg), ords)
 }
 
 final case class InfluxDataWriterFactory(cfg: InfluxSink.Config,
                                          ords: PointOrdinals)
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new InfluxDataWriter(partitionId, cfg, InfluxTransports.resolve(cfg), ords)
+    new InfluxDataWriter(partitionId, cfg, new InfluxSink.HttpLineWriter(cfg), ords)
 }
 
 /** Per-task writer: O(batchSize) lines resident, flush on boundary and at
@@ -419,13 +419,4 @@ final class InfluxDataWriter(partitionId: Int, cfg: InfluxSink.Config,
   }
   override def abort(): Unit = buf.clear()
   override def close(): Unit = ()
-}
-
-/** Transport resolution with a process-local test hook: local-mode tests
-  * install a recording writer; on a cluster the hook is unset and the
-  * HTTP transport applies. */
-object InfluxTransports {
-  @volatile var testOverride: Option[InfluxSink.LineWriter] = None
-  def resolve(cfg: InfluxSink.Config): InfluxSink.LineWriter =
-    testOverride.getOrElse(new InfluxSink.HttpLineWriter(cfg))
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.etl.InfluxSink
+import graft.sources.InfluxWatermarkSource.postFlux
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,12 +19,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * its trust check falls back to its own single-spec POST.
   */
 private[graft] object InfluxRollup {
-
-  private def post(cfg: InfluxSink.Config)(fluxSrc: String): String =
-    InfluxReadTransports.testOverride match {
-      case Some(f) => f(fluxSrc)
-      case None => InfluxWatermarkSource.postFlux(cfg, fluxSrc)
-    }
 
   def partials(cfg: InfluxSink.Config, specs: Seq[InfluxScan.AggSpec],
                bucketMs: Long, startMs: Long, stopMs: Option[Long],
@@ -142,7 +137,7 @@ private[graft] object InfluxRollup {
 
     def minMaxWindowed(sortCol: String, desc: Boolean,
                        prep: String = ""): Seq[InfluxScan.Sample] =
-      reEnforced(post(cfg)(InfluxScan.flux(cfg.bucket, startMs, stopMs,
+      reEnforced(postFlux(cfg, InfluxScan.flux(cfg.bucket, startMs, stopMs,
         measurement, field, limit = Some(1), sortDesc = Some(desc),
         sortCol = sortCol, groupCols = groupCols,
         aggPrep = Some(if (prep.nonEmpty) prep
@@ -286,7 +281,7 @@ private[graft] object InfluxRollup {
            InfluxScan.AggSumValue | InfluxScan.AggSumSq |
            InfluxScan.AggIncrease | InfluxScan.AggIntegral |
            InfluxScan.AggLocfArea =>
-        val csv = post(cfg)(InfluxScan.flux(cfg.bucket, startMs, stopMs,
+        val csv = postFlux(cfg, InfluxScan.flux(cfg.bucket, startMs, stopMs,
           measurement, field,
           count = spec == InfluxScan.AggCountStar,
           countValue = spec == InfluxScan.AggCountValue,
@@ -380,7 +375,7 @@ private[graft] object InfluxRollup {
       //    fallback would have computed from its own identical response;
       //  - unmarked response WITHOUT samples → unattributable (could be a
       //    legacy trusted-aggregate shape): re-POST every spec singly.
-      val csv = post(cfg)(InfluxScan.fusedFlux(cfg.bucket, startMs, stopMs,
+      val csv = postFlux(cfg, InfluxScan.fusedFlux(cfg.bucket, startMs, stopMs,
         measurement, field, tagEq, specs.map(branchOf), tagRegex))
       InfluxScan.splitByAgg(csv, specs.length) match {
         case Some(branches) =>

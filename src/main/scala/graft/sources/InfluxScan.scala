@@ -1143,10 +1143,7 @@ final class InfluxAggregateReader(cfg: InfluxSink.Config,
   private var row: InternalRow = _
 
   private def post(fluxSrc: String): String =
-    InfluxReadTransports.testOverride match {
-      case Some(f) => f(fluxSrc)
-      case None => InfluxWatermarkSource.postFlux(cfg, fluxSrc)
-    }
+    InfluxWatermarkSource.postFlux(cfg, fluxSrc)
 
   private def reEnforced(csv: String): Seq[InfluxScan.Sample] =
     InfluxScan.parseSamples(csv).filter(s =>
@@ -1438,11 +1435,7 @@ final class InfluxPartitionReader(cfg: InfluxSink.Config,
     // is believed exact, but the engine's correctness must not hinge on a
     // server's boundary behavior
     programs.iterator.flatMap { case (flux, keep) =>
-      val csv = InfluxReadTransports.testOverride match {
-        case Some(f) => f(flux)
-        case None => InfluxWatermarkSource.postFlux(cfg, flux)
-      }
-      InfluxScan.parseSamples(csv).iterator.filter(s =>
+      InfluxScan.parseSamples(InfluxWatermarkSource.postFlux(cfg, flux)).iterator.filter(s =>
         keep(s) && s.timeMs >= startMs && stopMs.forall(s.timeMs < _) &&
           measurement.forall(_ == s.measurement) && field.forall(_ == s.field))
     }
@@ -1470,13 +1463,11 @@ final class InfluxPartitionReader(cfg: InfluxSink.Config,
   override def close(): Unit = ()
 }
 
-/** Executor-local read-transport hook, mirroring [[InfluxTransports]] for
-  * writes: tests install a Flux→CSV function; unset = real HTTP POST.
-  * `clockOverride` pins the streaming source's notion of "now" (the
+/** `clockOverride` pins the streaming source's notion of "now" (the
   * driver-side latestOffset poll) so specs can advance time
-  * deterministically. */
+  * deterministically; unset = the wall clock. (The transport's test seam
+  * is [[graft.etl.InfluxHttp.testExchange]].) */
 object InfluxReadTransports {
-  @volatile var testOverride: Option[String => String] = None
   @volatile var clockOverride: Option[() => Long] = None
 }
 

@@ -1,9 +1,7 @@
 package graft.sources
 
-import graft.etl.InfluxSink
+import graft.etl.{InfluxHttp, InfluxSink}
 
-import java.io.OutputStream
-import java.net.HttpURLConnection
 import java.nio.charset.StandardCharsets
 import java.time.Instant
 
@@ -80,34 +78,14 @@ object InfluxWatermarkSource {
     }.minOption
   }
 
-  /** POST a Flux query body to /api/v2/query, return the annotated-CSV
-    * response; fail fast on transport/auth errors (quirk Q8 — the
-    * reference exit(1)s on watermark-fetch failure). Shared by the
-    * watermark scalar and the DSv2 read path. */
-  private[graft] def postFlux(cfg: InfluxSink.Config, flux: String): String = {
-    val conn = InfluxSink.endpoint(cfg, "/api/v2/query", "org" -> cfg.org)
-      .openConnection().asInstanceOf[HttpURLConnection]
-    conn.setConnectTimeout(cfg.connectTimeoutMs)
-    conn.setReadTimeout(cfg.readTimeoutMs)
-    conn.setRequestMethod("POST")
-    conn.setDoOutput(true)
-    conn.setRequestProperty("Authorization", s"Token ${cfg.token}")
-    conn.setRequestProperty("Content-Type", "application/vnd.flux")
-    conn.setRequestProperty("Accept", "application/csv")
-    val body = flux.getBytes(StandardCharsets.UTF_8)
-    val out: OutputStream = conn.getOutputStream
-    try out.write(body) finally out.close()
-    val code = conn.getResponseCode
-    if (code >= 300) {
-      val err = Option(conn.getErrorStream)
-        .map(s => try new String(s.readAllBytes(), StandardCharsets.UTF_8).take(300)
-                  finally s.close())
-        .getOrElse("")
-      throw new RuntimeException(s"influx query failed: HTTP $code $err")
-    }
-    val s = conn.getInputStream
-    try new String(s.readAllBytes(), StandardCharsets.UTF_8) finally s.close()
-  }
+  /** POST a Flux program to /api/v2/query through the one Influx client
+    * ([[InfluxHttp]]) and return the annotated-CSV response. A 429, 5xx or
+    * IO error is retried with the client's bounded backoff; any other
+    * error status fails at once (quirk Q8 — the reference exit(1)s on
+    * watermark-fetch failure). Shared by the watermark scalar and every
+    * DSv2 read. */
+  private[graft] def postFlux(cfg: InfluxSink.Config, flux: String): String =
+    InfluxHttp.query(cfg, "application/vnd.flux", flux.getBytes(StandardCharsets.UTF_8))
 
   /** POST the Flux query; fail fast on transport/auth errors, None on
     * empty. */

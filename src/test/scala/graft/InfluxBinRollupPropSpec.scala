@@ -1,6 +1,5 @@
 package graft
 
-import graft.sources.InfluxReadTransports
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,7 +31,7 @@ class InfluxBinRollupPropSpec extends AnyFunSuite {
   } yield ss
 
   private def run(samples: Seq[S], mult: Boolean, bucketed: Boolean) = {
-    InfluxReadTransports.testOverride = Some(_ => csvOf(samples))
+    FakeInflux.reads = Some(_ => csvOf(samples))
     try {
       val bin = (if (mult) floor(col("value") * 0.2)
                  else floor(col("value") / 7.0)).as("bin")
@@ -63,7 +62,7 @@ class InfluxBinRollupPropSpec extends AnyFunSuite {
       val unp = collectRows(q(base.filter(
         org.apache.spark.sql.functions.length(col("field")) >= 0)))
       (claimed, pushed, unp)
-    } finally InfluxReadTransports.testOverride = None
+    } finally FakeInflux.reads = None
   }
 
   test("pushed bin rollup ≡ unpushed for random populations, both ops, " +

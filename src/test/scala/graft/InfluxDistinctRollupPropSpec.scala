@@ -1,6 +1,5 @@
 package graft
 
-import graft.sources.InfluxReadTransports
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,7 +31,7 @@ class InfluxDistinctRollupPropSpec extends AnyFunSuite {
 
   private def run(samples: Seq[S], parts: Int, bucketed: Boolean,
                   composed: Boolean) = {
-    InfluxReadTransports.testOverride = Some(_ => csvOf(samples))
+    FakeInflux.reads = Some(_ => csvOf(samples))
     try {
       def q(df: org.apache.spark.sql.DataFrame) = {
         val distinct =
@@ -66,7 +65,7 @@ class InfluxDistinctRollupPropSpec extends AnyFunSuite {
       val unp = collectRows(q(base.filter(
         org.apache.spark.sql.functions.length(col("field")) >= 0)))
       (claimed, pushed, unp)
-    } finally InfluxReadTransports.testOverride = None
+    } finally FakeInflux.reads = None
   }
 
   test("pushed count(distinct tags['k']) ≡ unpushed for random " +

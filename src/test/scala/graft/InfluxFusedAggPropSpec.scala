@@ -1,6 +1,5 @@
 package graft
 
-import graft.sources.InfluxReadTransports
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
@@ -52,7 +51,7 @@ class InfluxFusedAggPropSpec extends AnyFunSuite {
   private def run(samples: Seq[S], aggs: Seq[(String, () => Column)],
                   groupEntity: Boolean, shiftMs: Long, parts: Int)
       : (Boolean, Boolean, String) = {
-    InfluxReadTransports.testOverride = Some(_ => csvOf(samples))
+    FakeInflux.reads = Some(_ => csvOf(samples))
     try {
       val keyCols: Seq[Column] =
         (if (groupEntity) Seq(col("tags")("entity_id").as("e")) else Nil) :+
@@ -77,7 +76,7 @@ class InfluxFusedAggPropSpec extends AnyFunSuite {
         s"shift=$shiftMs parts=$parts claimed=$claimed\n" +
         s"  pushed=$pushed\n  unpushed=$unp"
       (claimed, ok, msg)
-    } finally InfluxReadTransports.testOverride = None
+    } finally FakeInflux.reads = None
   }
 
   test("random CORE aggregate subsets claim the fused rollup and match " +

@@ -1,6 +1,5 @@
 package graft
 
-import graft.sources.InfluxReadTransports
 import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
@@ -41,7 +40,7 @@ class InfluxGroupTopNPropSpec extends AnyFunSuite {
   }
 
   private def run(samples: Seq[S], k: Int, asc: Boolean) = {
-    InfluxReadTransports.testOverride = Some(_ => csvOf(samples))
+    FakeInflux.reads = Some(_ => csvOf(samples))
     try {
       val ord = if (asc) col("value").asc else col("value").desc
       def q(df: org.apache.spark.sql.DataFrame) = df
@@ -68,7 +67,7 @@ class InfluxGroupTopNPropSpec extends AnyFunSuite {
             if (r.isNullAt(2)) None else Some(r.getDouble(2)),
             r.getInt(3))).toSet
       (plan, pushed, unp)
-    } finally InfluxReadTransports.testOverride = None
+    } finally FakeInflux.reads = None
   }
 
   test("pushed grouped top-k ≡ unpushed Window for random populations, " +

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{InfluxReadTransports, InfluxRollupRead}
+import graft.sources.InfluxRollupRead
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -55,8 +55,8 @@ class InfluxIntegralReadSpec extends AnyFunSuite with Matchers {
   private def withTransportFn[T](f: String => String)(
       body: ConcurrentLinkedQueue[String] => T): T = {
     val seen = new ConcurrentLinkedQueue[String]()
-    InfluxReadTransports.testOverride = Some { flux => seen.add(flux); f(flux) }
-    try body(seen) finally InfluxReadTransports.testOverride = None
+    FakeInflux.reads = Some { flux => seen.add(flux); f(flux) }
+    try body(seen) finally FakeInflux.reads = None
   }
 
   private def intOpts(parts: Int, offsetMs: Long = 0L) =

@@ -45,7 +45,7 @@ class InfluxIntegralStreamPropSpec extends AnyFunSuite {
 
   private def run(samples: Seq[S], cuts: Seq[Long], parts: Int,
                   offsetMs: Long = 0L): Boolean = {
-    InfluxReadTransports.testOverride = Some(_ => csvOf(samples))
+    FakeInflux.reads = Some(_ => csvOf(samples))
     @volatile var now = cuts.head
     InfluxReadTransports.clockOverride = Some(() => now)
     try {
@@ -80,7 +80,7 @@ class InfluxIntegralStreamPropSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS $name")
       close(streamed.toMap, batch)
     } finally {
-      InfluxReadTransports.testOverride = None
+      FakeInflux.reads = None
       InfluxReadTransports.clockOverride = None
     }
   }

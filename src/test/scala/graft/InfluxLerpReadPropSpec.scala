@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{InfluxReadTransports, InfluxRollupRead}
+import graft.sources.InfluxRollupRead
 import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -67,7 +67,7 @@ class InfluxLerpReadPropSpec extends AnyFunSuite {
 
   private def run(samples: Seq[S], parts: Int, offsetMs: Long,
                   stopMs: Option[Long]): Boolean = {
-    InfluxReadTransports.testOverride = Some(_ => csvOf(samples))
+    FakeInflux.reads = Some(_ => csvOf(samples))
     try {
       val opts = InfluxRollupRead.lerpOptions(hour, Map(
         "bucket" -> "bkt", "readPartitions" -> parts.toString,
@@ -80,7 +80,7 @@ class InfluxLerpReadPropSpec extends AnyFunSuite {
           (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
       got == model(samples, hour, offsetMs, stopMs)
     } finally {
-      InfluxReadTransports.testOverride = None
+      FakeInflux.reads = None
     }
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{InfluxReadTransports, InfluxRollupRead}
+import graft.sources.InfluxRollupRead
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -72,8 +72,8 @@ class InfluxMovingAvgSpec extends AnyFunSuite with Matchers {
 
   private def withStub[T](csv: String)(body: ConcurrentLinkedQueue[String] => T): T = {
     val seen = new ConcurrentLinkedQueue[String]()
-    InfluxReadTransports.testOverride = Some { f => seen.add(f); csv }
-    try body(seen) finally InfluxReadTransports.testOverride = None
+    FakeInflux.reads = Some { f => seen.add(f); csv }
+    try body(seen) finally FakeInflux.reads = None
   }
 
   private def opts(parts: Int, offsetMs: Long = 0L) =

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{InfluxReadTransports, InfluxRollupRead, InfluxTable}
+import graft.sources.{InfluxRollupRead, InfluxTable}
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
@@ -99,8 +99,8 @@ class InfluxPanelComposePropSpec extends AnyFunSuite {
       t0 + hour, t0 + 2 * hour, hour)))
 
   private def withStub[T](csv: String)(body: => T): T = {
-    InfluxReadTransports.testOverride = Some(_ => csv)
-    try body finally InfluxReadTransports.testOverride = None
+    FakeInflux.reads = Some(_ => csv)
+    try body finally FakeInflux.reads = None
   }
 
   private def rowsOf(df: DataFrame): Set[Seq[Any]] =

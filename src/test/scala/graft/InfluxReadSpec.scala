@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{InfluxReadTransports, InfluxScan}
+import graft.sources.InfluxScan
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -27,8 +27,8 @@ class InfluxReadSpec extends AnyFunSuite with Matchers {
 
   private def withTransport[T](csv: String)(body: ConcurrentLinkedQueue[String] => T): T = {
     val seen = new ConcurrentLinkedQueue[String]()
-    InfluxReadTransports.testOverride = Some { flux => seen.add(flux); csv }
-    try body(seen) finally InfluxReadTransports.testOverride = None
+    FakeInflux.reads = Some { flux => seen.add(flux); csv }
+    try body(seen) finally FakeInflux.reads = None
   }
 
   private def influx(parts: Int) = spark.read.format("influx")
@@ -251,7 +251,7 @@ class InfluxReadSpec extends AnyFunSuite with Matchers {
         |,result,table,_time,_value,_field,_measurement,entity_id
         |,_result,0,2024-01-01T00:40:00Z,on,value,ha_states,sensor.c
         |""".stripMargin
-    InfluxReadTransports.testOverride = Some { flux =>
+    FakeInflux.reads = Some { flux =>
       if (flux.contains("top(")) topCsv
       else if (flux.contains("not (types.isType")) padCsv
       else fail(s"unexpected program: $flux")
@@ -259,7 +259,7 @@ class InfluxReadSpec extends AnyFunSuite with Matchers {
     try {
       valuesOf(valueTopN(desc = true, k = 2)) shouldBe
         Seq(Some(30.0), Some(22.5))
-    } finally InfluxReadTransports.testOverride = None
+    } finally FakeInflux.reads = None
     // lying server: the SAME full dump to both programs — each program's
     // population re-check keeps only its own rows, so k larger than the
     // table returns every sample exactly once

@@ -1,6 +1,5 @@
 package graft
 
-import graft.sources.InfluxReadTransports
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -32,8 +31,8 @@ class InfluxRollupSpec extends AnyFunSuite with Matchers {
 
   private def withTransport[T](csv: String)(body: ConcurrentLinkedQueue[String] => T): T = {
     val seen = new ConcurrentLinkedQueue[String]()
-    InfluxReadTransports.testOverride = Some { flux => seen.add(flux); csv }
-    try body(seen) finally InfluxReadTransports.testOverride = None
+    FakeInflux.reads = Some { flux => seen.add(flux); csv }
+    try body(seen) finally FakeInflux.reads = None
   }
 
   private def influx(parts: Int = 1) = spark.read.format("influx")
@@ -1062,8 +1061,8 @@ class InfluxRollupSpec extends AnyFunSuite with Matchers {
   private def withTransportFn[T](f: String => String)(
       body: ConcurrentLinkedQueue[String] => T): T = {
     val seen = new ConcurrentLinkedQueue[String]()
-    InfluxReadTransports.testOverride = Some { flux => seen.add(flux); f(flux) }
-    try body(seen) finally InfluxReadTransports.testOverride = None
+    FakeInflux.reads = Some { flux => seen.add(flux); f(flux) }
+    try body(seen) finally FakeInflux.reads = None
   }
 
   test("an honest fused response (marker-stamped branches) folds count " +

@@ -1,6 +1,5 @@
 package graft
 
-import graft.sources.InfluxReadTransports
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,7 +30,7 @@ class InfluxShiftRollupPropSpec extends AnyFunSuite {
   } yield ss
 
   private def run(samples: Seq[S], w: Long, c: Long, spelling: Int) = {
-    InfluxReadTransports.testOverride = Some(_ => csvOf(samples))
+    FakeInflux.reads = Some(_ => csvOf(samples))
     try {
       val key = spelling match {
         case 0 => expr(s"(time_ms + $c) div $w").as("h")
@@ -56,7 +55,7 @@ class InfluxShiftRollupPropSpec extends AnyFunSuite {
       val unp = rows(q(base.filter(
         org.apache.spark.sql.functions.length(col("field")) >= 0)))
       (claimed, pushed, unp)
-    } finally InfluxReadTransports.testOverride = None
+    } finally FakeInflux.reads = None
   }
 
   test("pushed shifted-bucket rollup ≡ unpushed for random widths, " +

@@ -176,6 +176,86 @@ class InfluxSinkSpec extends AnyFunSuite with Matchers {
           "/api/v2/delete" -> Map("org" -> org, "bucket" -> bucket))
     } finally server.stop(0)
   }
+
+  /** A loopback Influx answering its n-th request with
+    * `answers(n % answers.size)`: (status, `Retry-After` or "", body). */
+  private def withStub(answers: (Int, String, String)*)(
+      f: (InfluxSink.Config, () => Int) => Unit): Unit = {
+    import com.sun.net.httpserver.HttpServer
+    import java.net.InetSocketAddress
+    val requests = new java.util.concurrent.atomic.AtomicInteger()
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/api/v2/", exchange => {
+      exchange.getRequestBody.readAllBytes()
+      val (status, retryAfter, body) =
+        answers(requests.getAndIncrement() % answers.size)
+      if (retryAfter.nonEmpty)
+        exchange.getResponseHeaders.set("Retry-After", retryAfter)
+      val b = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      exchange.sendResponseHeaders(status, if (b.isEmpty) -1 else b.length)
+      if (b.nonEmpty) exchange.getResponseBody.write(b)
+      exchange.close()
+    })
+    server.start()
+    try f(InfluxSink.Config(s"http://127.0.0.1:${server.getAddress.getPort}",
+      "o", "b", "tok"), () => requests.get)
+    finally server.stop(0)
+  }
+
+  test("every Influx call retries a 5xx: 503, 503, then 200 on a write, a " +
+    "Flux query, an annotated query and a delete — each succeeds after " +
+    "exactly 3 requests") {
+    withStub((503, "", "busy"), (503, "", "busy"), (200, "", "_time\n")) {
+      (cfg, requests) =>
+        new InfluxSink.HttpLineWriter(cfg).writeBatch(Seq("m value=1 1"))
+        requests() shouldBe 3
+        graft.sources.InfluxWatermarkSource.postFlux(cfg, "buckets()") shouldBe
+          "_time\n"
+        requests() shouldBe 6
+        val transport = new graft.etl.MarkerCleanup.HttpTransport(cfg)
+        transport.queryAnnotated("buckets()") shouldBe "_time\n"
+        requests() shouldBe 9
+        transport.delete("1970-01-01T00:00:00Z", "2024-01-01T00:00:00Z",
+          "_measurement=\"m\"")
+        requests() shouldBe 12
+    }
+  }
+
+  test("a 4xx is not retried and its error keeps the server's text; an " +
+    "exhausted retry budget reports the last status and body") {
+    withStub((400, "", "bad line")) { (cfg, requests) =>
+      val e = intercept[RuntimeException](
+        new InfluxSink.HttpLineWriter(cfg).writeBatch(Seq("m value=1 1")))
+      requests() shouldBe 1
+      e.getMessage should include("400")
+      e.getMessage should include("bad line")
+    }
+    withStub((503, "", "overloaded")) { (cfg, requests) =>
+      val e = intercept[RuntimeException](
+        new InfluxSink.HttpLineWriter(cfg.copy(maxRetries = 1))
+          .writeBatch(Seq("m value=1 1")))
+      requests() shouldBe 2
+      e.getMessage should include("503")
+      e.getMessage should include("overloaded")
+    }
+  }
+
+  test("a 429's Retry-After replaces the backoff step, capped at " +
+    "readTimeoutMs") {
+    withStub((429, "1", "slow down"), (200, "", "")) { (cfg, requests) =>
+      val t0 = System.nanoTime()
+      new InfluxSink.HttpLineWriter(cfg).writeBatch(Seq("m value=1 1"))
+      (System.nanoTime() - t0) should be >= 1000000000L
+      requests() shouldBe 2
+    }
+    withStub((429, "3600", "slow down"), (200, "", "")) { (cfg, requests) =>
+      val t0 = System.nanoTime()
+      new InfluxSink.HttpLineWriter(cfg.copy(readTimeoutMs = 1500))
+        .writeBatch(Seq("m value=1 1"))
+      (System.nanoTime() - t0) should (be >= 1500000000L and be < 60000000000L)
+      requests() shouldBe 2
+    }
+  }
 }
 
 /** Collects batches across executor threads (local mode shares the JVM). */

@@ -2,7 +2,7 @@ package graft
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.etl.{HaViews, InfluxSink, Tables, Transform}
-import graft.sources.{InfluxTransports, InfluxWatermarkSource}
+import graft.sources.InfluxWatermarkSource
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -22,12 +22,17 @@ class InfluxSourcesSpec extends AnyFunSuite with Matchers {
       |,_result,0,2023-05-01T12:34:56Z,°C,21.5
       |""".stripMargin
 
+  /** Requests the current [[withServer]] stub has answered. */
+  private val served = new java.util.concurrent.atomic.AtomicInteger()
+
   private def withServer(status: Int, body: String)
                         (f: (String, () => Option[(String, String)]) => Unit): Unit = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     @volatile var captured: Option[(String, String)] = None
+    served.set(0)
     server.createContext("/", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
+        served.incrementAndGet()
         val req = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
         captured = Some((ex.getRequestURI.toString, req))
         val bytes = body.getBytes(StandardCharsets.UTF_8)
@@ -122,6 +127,7 @@ class InfluxSourcesSpec extends AnyFunSuite with Matchers {
     withServer(401, "unauthorized") { (url, _) =>
       a[RuntimeException] should be thrownBy
         InfluxWatermarkSource.oldestTimestamp(cfg(url))
+      served.get shouldBe 1 // reads retry 429/5xx only, never a 4xx
     }
   }
 
@@ -166,7 +172,7 @@ class InfluxSourcesSpec extends AnyFunSuite with Matchers {
       HaViews.stateAttributes(Tables.events(spark, d))).drop("event_id")
     val n = points.count()
     RecordingWriter.drain() // reset
-    InfluxTransports.testOverride = Some(RecordingWriter)
+    FakeInflux.writes = Some(RecordingWriter)
     try {
       points.repartition(3).write.format("influx")
         .option("batchSize", "100")
@@ -176,7 +182,7 @@ class InfluxSourcesSpec extends AnyFunSuite with Matchers {
       batches.map(_.size).sum shouldBe n
       all(batches.map(_.size)) should be <= 100
       batches.size should be >= 3
-    } finally InfluxTransports.testOverride = None
+    } finally FakeInflux.writes = None
   }
 
   test("DSv2 write: map columns whose types differ only in nullability " +

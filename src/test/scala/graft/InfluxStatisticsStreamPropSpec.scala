@@ -55,7 +55,7 @@ class InfluxStatisticsStreamPropSpec extends AnyFunSuite {
 
   private def run(samples: Seq[S], cuts: Seq[Long], parts: Int,
                   offsetMs: Long = 0L): Boolean = {
-    InfluxReadTransports.testOverride = Some(_ => csvOf(samples))
+    FakeInflux.reads = Some(_ => csvOf(samples))
     @volatile var now = cuts.head
     InfluxReadTransports.clockOverride = Some(() => now)
     try {
@@ -94,7 +94,7 @@ class InfluxStatisticsStreamPropSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS $name")
       close(streamed.toMap, batch)
     } finally {
-      InfluxReadTransports.testOverride = None
+      FakeInflux.reads = None
       InfluxReadTransports.clockOverride = None
     }
   }

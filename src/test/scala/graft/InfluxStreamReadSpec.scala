@@ -28,11 +28,11 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
 
   private def withStubs[T](clockMs: () => Long)(body: ConcurrentLinkedQueue[String] => T): T = {
     val seen = new ConcurrentLinkedQueue[String]()
-    InfluxReadTransports.testOverride = Some { flux => seen.add(flux); cannedCsv }
+    FakeInflux.reads = Some { flux => seen.add(flux); cannedCsv }
     InfluxReadTransports.clockOverride = Some(clockMs)
     try body(seen)
     finally {
-      InfluxReadTransports.testOverride = None
+      FakeInflux.reads = None
       InfluxReadTransports.clockOverride = None
     }
   }
@@ -122,7 +122,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
         |""".stripMargin
     @volatile var now = t0 + hour
     val seen = new ConcurrentLinkedQueue[String]()
-    InfluxReadTransports.testOverride = Some { f => seen.add(f); mixedCsv }
+    FakeInflux.reads = Some { f => seen.add(f); mixedCsv }
     InfluxReadTransports.clockOverride = Some(() => now)
     try {
       val (ok, ov) = graft.sources.InfluxTable.tagLike(
@@ -159,7 +159,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
         got shouldBe Array((t0 + 7000L, 21.5), (t0 + hour + 7000L, 55.0))
       } finally q.stop()
     } finally {
-      InfluxReadTransports.testOverride = None
+      FakeInflux.reads = None
       InfluxReadTransports.clockOverride = None
     }
   }
@@ -213,7 +213,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
       // that ignored window() and the range): the partials engine falls
       // back to local re-bucketing of re-enforced samples, clamped to
       // each trigger's offset range — so nothing is double-counted
-      InfluxReadTransports.testOverride = Some { flux =>
+      FakeInflux.reads = Some { flux =>
         seen.add(flux); rollupCsv
       }
       val partials = rollupOpts.foldLeft(
@@ -265,7 +265,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
         |""".stripMargin
     @volatile var now = t0 + hour
     withStubs(() => now) { seen =>
-      InfluxReadTransports.testOverride = Some { flux =>
+      FakeInflux.reads = Some { flux =>
         seen.add(flux); windowedCount
       }
       val opts = Map("bucket" -> "bkt", "readPartitions" -> "1",
@@ -295,7 +295,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
     "exactly-once across two triggers") {
     @volatile var now = t0 + hour // trigger 1 sees sample 1 only
     withStubs(() => now) { _ =>
-      graft.sources.InfluxTransports.testOverride = Some(RecordingWriter)
+      FakeInflux.writes = Some(RecordingWriter)
       RecordingWriter.drain() // isolate from other suites
       try {
         val pts = spark.readStream.format("influx")
@@ -322,7 +322,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
             l should startWith("ha_states,entity_id=sensor.temp value=")
           }
         } finally q.stop()
-      } finally graft.sources.InfluxTransports.testOverride = None
+      } finally FakeInflux.writes = None
     }
   }
 
@@ -331,7 +331,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
     "stop bound still flushes the final partial bucket") {
     @volatile var now = t0 + hour + 1800000L // mid-bucket 2
     withStubs(() => now) { seen =>
-      InfluxReadTransports.testOverride = Some { flux =>
+      FakeInflux.reads = Some { flux =>
         seen.add(flux); rollupCsv
       }
       val opts = Map("bucket" -> "bkt", "readPartitions" -> "1",
@@ -358,7 +358,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
       // bucket boundary, covering bucket 1 whole and leaving bucket 2 for
       // a later trigger
       val seen2 = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      InfluxReadTransports.testOverride = Some { flux =>
+      FakeInflux.reads = Some { flux =>
         seen2.add(flux); rollupCsv
       }
       val opts2 = opts - "rollup.stopMs"
@@ -396,7 +396,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
     @volatile var now = t0 + 2 * hour // mid shifted-bucket [01:30, 02:30)
     withStubs(() => now) { _ =>
       val seen = new ConcurrentLinkedQueue[String]()
-      InfluxReadTransports.testOverride = Some { flux =>
+      FakeInflux.reads = Some { flux =>
         seen.add(flux); rollupCsv
       }
       val opts = Map("bucket" -> "bkt", "readPartitions" -> "1",
@@ -464,7 +464,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
       val opts = Map("bucket" -> "bkt", "readPartitions" -> "1",
         "rollup.everyMs" -> "3600000", "rollup.aggs" -> "count",
         "rollup.group" -> "bin:/10.0", "rollup.startMs" -> t0.toString)
-      InfluxReadTransports.testOverride = Some { flux =>
+      FakeInflux.reads = Some { flux =>
         seen.add(flux); rollupCsv
       }
       val partials = opts.foldLeft(
@@ -540,7 +540,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
         "rollup.everyMs" -> "3600000", "rollup.aggs" -> "count",
         "rollup.group" -> "bin:/10.0", "rollup.startMs" -> t0.toString,
         "rollup.stopMs" -> (t0 + 2 * hour).toString)
-      InfluxReadTransports.testOverride = Some { _ => rollupCsv }
+      FakeInflux.reads = Some { _ => rollupCsv }
       val partials = opts.foldLeft(spark.read.format("influx")) {
         case (r, (k, v)) => r.option(k, v)
       }.load()
@@ -578,7 +578,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
         |""".stripMargin
     @volatile var now = t0 + hour
     val seen = new ConcurrentLinkedQueue[String]()
-    InfluxReadTransports.testOverride = Some { f => seen.add(f); topnCsv }
+    FakeInflux.reads = Some { f => seen.add(f); topnCsv }
     InfluxReadTransports.clockOverride = Some(() => now)
     try {
       val opt = graft.sources.InfluxTable.groupTopN(
@@ -630,7 +630,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
           ("sensor.hum", t0 + 10 * 60000L, 55.0, 2L))
       } finally q.stop()
     } finally {
-      InfluxReadTransports.testOverride = None
+      FakeInflux.reads = None
       InfluxReadTransports.clockOverride = None
     }
   }
@@ -651,7 +651,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
         |,_result,1,2024-01-01T00:00:00Z,2024-01-01T02:00:00Z,2024-01-01T01:30:00Z,60.0,value,ha_states,sensor.y
         |""".stripMargin
     @volatile var now = t0 + hour
-    InfluxReadTransports.testOverride = Some(_ => csv)
+    FakeInflux.reads = Some(_ => csv)
     InfluxReadTransports.clockOverride = Some(() => now)
     try {
       val samples = spark.readStream.format("influx")
@@ -692,7 +692,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
           ("ha_states", t0 + 10 * 60000L, 40.0, 3L))
       } finally q.stop()
     } finally {
-      InfluxReadTransports.testOverride = None
+      FakeInflux.reads = None
       InfluxReadTransports.clockOverride = None
     }
   }
@@ -733,7 +733,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
     val spec = graft.sources.InfluxRollupRead.fromOptions(
       scala.jdk.CollectionConverters.MapHasAsJava(opts).asJava).get
     @volatile var now = t0 + 90 * 60000L
-    InfluxReadTransports.testOverride = Some(_ => csv)
+    FakeInflux.reads = Some(_ => csv)
     InfluxReadTransports.clockOverride = Some(() => now)
     try {
       val partials = opts.foldLeft(spark.readStream.format("influx")) {
@@ -786,7 +786,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
         (r.getString(0), r.getLong(1)) -> r.getDouble(2))
         .toMap shouldBe expected
     } finally {
-      InfluxReadTransports.testOverride = None
+      FakeInflux.reads = None
       InfluxReadTransports.clockOverride = None
     }
   }
@@ -818,7 +818,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
     val spec = graft.sources.InfluxRollupRead.fromOptions(
       scala.jdk.CollectionConverters.MapHasAsJava(opts).asJava).get
     @volatile var now = t0 + 90 * 60000L
-    InfluxReadTransports.testOverride = Some(_ => csv)
+    FakeInflux.reads = Some(_ => csv)
     InfluxReadTransports.clockOverride = Some(() => now)
     try {
       val partials = opts.foldLeft(spark.readStream.format("influx")) {
@@ -851,7 +851,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
       batch.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe
         Map(t0 -> 2L, (t0 + hour) -> 3L)
     } finally {
-      InfluxReadTransports.testOverride = None
+      FakeInflux.reads = None
       InfluxReadTransports.clockOverride = None
     }
   }
@@ -894,7 +894,7 @@ class InfluxStreamReadSpec extends AnyFunSuite with Matchers {
     panels.zipWithIndex.foreach { case ((opts, finish, read), i) =>
       @volatile var now = t0
       withStubs(() => now) { _ =>
-        InfluxReadTransports.testOverride = Some(_ => panelCsv)
+        FakeInflux.reads = Some(_ => panelCsv)
         val spec = rollupSpec(opts)
         val q = R.finalMerge(opts.foldLeft(spark.readStream.format("influx")) {
             case (r, (k, v)) => r.option(k, v)

@@ -1,6 +1,5 @@
 package graft
 
-import graft.sources.InfluxReadTransports
 import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -42,8 +41,8 @@ class InfluxTagRegexSpec extends AnyFunSuite with Matchers {
 
   private def withTransport[T](csv: String)(body: ConcurrentLinkedQueue[String] => T): T = {
     val seen = new ConcurrentLinkedQueue[String]()
-    InfluxReadTransports.testOverride = Some { flux => seen.add(flux); csv }
-    try body(seen) finally InfluxReadTransports.testOverride = None
+    FakeInflux.reads = Some { flux => seen.add(flux); csv }
+    try body(seen) finally FakeInflux.reads = None
   }
 
   private def bounded(parts: Int = 1) = spark.read.format("influx")

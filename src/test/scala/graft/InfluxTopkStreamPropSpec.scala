@@ -39,7 +39,7 @@ class InfluxTopkStreamPropSpec extends AnyFunSuite {
   } yield (cs.map(t0 + _) :+ (t0 + span)).distinct.sorted
 
   private def run(samples: Seq[S], cuts: Seq[Long], k: Int): Boolean = {
-    InfluxReadTransports.testOverride = Some(_ => csvOf(samples))
+    FakeInflux.reads = Some(_ => csvOf(samples))
     @volatile var now = cuts.head
     InfluxReadTransports.clockOverride = Some(() => now)
     try {
@@ -77,7 +77,7 @@ class InfluxTopkStreamPropSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS $name")
       streamed == batch
     } finally {
-      InfluxReadTransports.testOverride = None
+      FakeInflux.reads = None
       InfluxReadTransports.clockOverride = None
     }
   }
@@ -116,7 +116,7 @@ class InfluxTopkStreamPropSpec extends AnyFunSuite {
   private def runRegex(samples: Seq[S], cuts: Seq[Long], k: Int,
                        pat: String): Boolean = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    InfluxReadTransports.testOverride =
+    FakeInflux.reads =
       Some { f => seen.add(f); csvOf(samples) }
     @volatile var now = cuts.head
     InfluxReadTransports.clockOverride = Some(() => now)
@@ -166,7 +166,7 @@ class InfluxTopkStreamPropSpec extends AnyFunSuite {
         fluxes.exists(_.contains("top(n:"))
       streamed == batch && narrowed
     } finally {
-      InfluxReadTransports.testOverride = None
+      FakeInflux.reads = None
       InfluxReadTransports.clockOverride = None
     }
   }

@@ -1,6 +1,5 @@
 package graft
 
-import graft.sources.InfluxReadTransports
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
@@ -121,7 +120,7 @@ class InfluxTrustedFusedPropSpec extends AnyFunSuite {
       else {
         val off = Math.floorMod(-shift, hour)
         val posts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-        InfluxReadTransports.testOverride = Some { flux =>
+        FakeInflux.reads = Some { flux =>
           posts.add(flux); honestServer(ss, hour, off, ent)(flux)
         }
         try {
@@ -151,7 +150,7 @@ class InfluxTrustedFusedPropSpec extends AnyFunSuite {
             s"shift=$shift parts=$parts claimed=$claimed " +
             s"fusedPosts=$fusedPosts\n  pushed=$pushed\n  unpushed=$unp"
           Prop.propBoolean(ok) :| msg
-        } finally InfluxReadTransports.testOverride = None
+        } finally FakeInflux.reads = None
       }
     }
     PropCheck.check(prop, minSuccessful = 15, tag = "InfluxTrustedFusedPropSpec#1")

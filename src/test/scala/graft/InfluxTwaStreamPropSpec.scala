@@ -48,7 +48,7 @@ class InfluxTwaStreamPropSpec extends AnyFunSuite {
 
   private def run(samples: Seq[S], cuts: Seq[Long], parts: Int,
                   offsetMs: Long = 0L): Boolean = {
-    InfluxReadTransports.testOverride = Some(_ => csvOf(samples))
+    FakeInflux.reads = Some(_ => csvOf(samples))
     @volatile var now = cuts.head
     InfluxReadTransports.clockOverride = Some(() => now)
     try {
@@ -85,7 +85,7 @@ class InfluxTwaStreamPropSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS $name")
       close(streamed.toMap, batch)
     } finally {
-      InfluxReadTransports.testOverride = None
+      FakeInflux.reads = None
       InfluxReadTransports.clockOverride = None
     }
   }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.etl.InfluxSink
-import graft.sources.{InfluxReadTransports, InfluxRollupRead}
+import graft.sources.InfluxRollupRead
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -44,9 +44,9 @@ class ReverseStatisticsSpec extends AnyFunSuite with Matchers {
 
   private def withTransport[T](body: ConcurrentLinkedQueue[String] => T): T = {
     val seen = new ConcurrentLinkedQueue[String]()
-    InfluxReadTransports.testOverride =
+    FakeInflux.reads =
       Some { flux => seen.add(flux); fixtureCsv }
-    try body(seen) finally InfluxReadTransports.testOverride = None
+    try body(seen) finally FakeInflux.reads = None
   }
 
   private def opts(parts: Int) =

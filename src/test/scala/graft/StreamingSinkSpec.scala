@@ -1,6 +1,5 @@
 package graft
 
-import graft.sources.InfluxTransports
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -21,7 +20,7 @@ class StreamingSinkSpec extends AnyFunSuite with Matchers {
     val points = source.toDF()
       .toDF("measurement", "tags", "fields_num", "fields_str", "time_ms")
     val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    InfluxTransports.testOverride = Some(RecordingWriter)
+    FakeInflux.writes = Some(RecordingWriter)
     RecordingWriter.drain() // reset shared recorder
     val q = points.writeStream.format("influx")
       .option("url", "http://unused").option("token", "t")
@@ -40,7 +39,7 @@ class StreamingSinkSpec extends AnyFunSuite with Matchers {
       lines.count(_.startsWith("pct,")) shouldBe 2
     } finally {
       q.stop()
-      InfluxTransports.testOverride = None
+      FakeInflux.writes = None
     }
   }
 }
