@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.model.InfluxPoint
-import graft.sources.{InfluxScan, InfluxWatermarkSource}
+import graft.sources.{FluxCsv, InfluxScan, InfluxWatermarkSource}
 
 import java.nio.charset.StandardCharsets
 import java.time.Instant
@@ -216,74 +216,60 @@ object MarkerCleanup {
     * parse, FAILS THE SERIES — this parse feeds the destructive replay
     * path (run() deletes the window after it), so a silently-dropped
     * row would be a permanently lost point, violating the tool's
-    * fail-loudly contract. Tag classification shares
-    * [[InfluxScan.reserved]] so the two CSV readers can never drift. */
+    * fail-loudly contract. Rows and tags come from the one annotated-CSV
+    * cursor, [[FluxCsv]], so this parse and the sample parse can never
+    * drift. Each table's type is checked at its first data row. */
   private[graft] def parseTyped(csv: String): Seq[FamilyPoint] = {
     final case class Row(measurement: String, field: String,
                          num: Option[Double], str: Option[String],
                          timeNs: Long, tags: Map[String, String])
-    val rows = Seq.newBuilder[Row]
-    var datatypes: Array[String] = null
-    var header: Array[String] = null
+    var checked: FluxCsv.Table = null // the table whose _value type is known
     var valueIsString = false
-    var expectHeader = true
-    csv.split("\r?\n").foreach { raw =>
-      val line = raw.trim
-      if (line.isEmpty) { expectHeader = true; datatypes = null }
-      else if (line.startsWith("#")) {
-        expectHeader = true
-        if (line.startsWith("#datatype,"))
-          datatypes = InfluxScan.splitCells(line)
-      } else if (expectHeader) {
-        header = InfluxScan.splitCells(line)
-        expectHeader = false
-        val vi = header.indexOf("_value")
-        require(datatypes != null && vi >= 0 && vi < datatypes.length,
+    val rows = FluxCsv(csv).iterator.map { r =>
+      val t = r.table
+      if (t ne checked) {
+        val dt = t.datatype(t.value).getOrElse(throw new IllegalArgumentException(
           "marker cleanup: response table carries no #datatype " +
             "annotation for _value — the family fetch must request the " +
             "datatype annotation (Http.queryAnnotated); refusing to " +
-            "guess field types")
-        val dt = datatypes(vi)
-        valueIsString = dt == "string"
+            "guess field types"))
         require(dt == "double" || dt == "string",
           s"marker cleanup: unsupported _value datatype '$dt' — only " +
             "double/string fields (this pipeline's own output) replay " +
             "safely")
-      } else {
-        val cells = InfluxScan.splitCells(line)
-        val col = header.zip(cells).toMap
-        def cell(name: String): String = col.getOrElse(name,
-          throw new IllegalArgumentException(
-            s"marker cleanup: data row missing $name column — refusing " +
-              s"a lossy replay (row: ${line.take(200)})"))
-        val t = cell("_time")
-        val inst = try Instant.parse(t) catch {
-          case e: Exception => throw new IllegalArgumentException(
-            s"marker cleanup: unparsable _time '$t' — failing the " +
-              "series rather than silently dropping the point from the " +
-              "replay (the window is deleted after this parse)", e)
-        }
-        val v = cell("_value")
-        val f = cell("_field")
-        rows += Row(
-          measurement = col.getOrElse("_measurement", ""),
-          field = f,
-          num = if (valueIsString) None else Some(
-            try v.toDouble catch {
-              case e: Exception => throw new IllegalArgumentException(
-                s"marker cleanup: unparsable double _value '$v' for " +
-                  s"field '$f' — failing the series rather than " +
-                  "silently dropping the point from the replay", e)
-            }),
-          str = if (valueIsString) Some(v) else None,
-          timeNs = Math.addExact(
-            Math.multiplyExact(inst.getEpochSecond, 1000000000L),
-            inst.getNano.toLong),
-          tags = col.view.filterKeys(k => !InfluxScan.reserved(k))
-            .filter(_._2.nonEmpty).toMap)
+        valueIsString = dt == "string"
+        checked = t
       }
+      def cell(name: String): String = Option(r.cell(name)).getOrElse(
+        throw new IllegalArgumentException(
+          s"marker cleanup: data row missing $name column — refusing " +
+            s"a lossy replay (row: ${r.toString.take(200)})"))
+      val t0 = cell("_time")
+      val inst = try Instant.parse(t0) catch {
+        case e: Exception => throw new IllegalArgumentException(
+          s"marker cleanup: unparsable _time '$t0' — failing the " +
+            "series rather than silently dropping the point from the " +
+            "replay (the window is deleted after this parse)", e)
+      }
+      val v = cell("_value")
+      val f = cell("_field")
+      Row(
+        measurement = Option(r.cell(t.measurement)).getOrElse(""),
+        field = f,
+        num = if (valueIsString) None else Some(
+          try v.toDouble catch {
+            case e: Exception => throw new IllegalArgumentException(
+              s"marker cleanup: unparsable double _value '$v' for " +
+                s"field '$f' — failing the series rather than " +
+                "silently dropping the point from the replay", e)
+          }),
+        str = if (valueIsString) Some(v) else None,
+        timeNs = Math.addExact(
+          Math.multiplyExact(inst.getEpochSecond, 1000000000L),
+          inst.getNano.toLong),
+        tags = r.tags)
     }
-    rows.result()
+    rows.toSeq
       .groupBy(r => (r.measurement, r.tags, r.timeNs))
       .map { case ((m, tags, ns), rs) =>
         FamilyPoint(m, tags, ns,
@@ -324,7 +310,7 @@ object MarkerCleanup {
     * inventory. */
   def legacyInventory(csv: String)
       : Map[SeriesKey, Seq[(Long, Set[String])]] =
-    InfluxScan.parseSamples(csv)
+    InfluxScan.parseSamples(FluxCsv(csv)).toSeq
       .groupBy(s => (SeriesKey(s.measurement, s.tags), s.timeMs))
       .view
       .map { case ((key, ms), ss) =>

@@ -33,19 +33,17 @@ private[graft] object InfluxRollup {
     // the server's Flux `=~` did)
     val regexChecks: Seq[(String, java.util.regex.Pattern)] =
       tagRegex.map { case (k, re) => k -> java.util.regex.Pattern.compile(re) }
-    def enforce(ss: Seq[InfluxScan.Sample]): Seq[InfluxScan.Sample] =
-      ss.filter(s =>
-        s.timeMs >= startMs && stopMs.forall(s.timeMs < _) &&
-          measurement.forall(_ == s.measurement) &&
-          field.forall(_ == s.field) &&
-          // pushed tag predicates re-checked on every fallback sample —
-          // the "time" prep keeps filtered tag columns alive for this; a
-          // single-value set is the plain equality, a wider one the IN
-          tagEq.forall { case (k, vs) => s.tags.get(k).exists(vs.contains) } &&
-          regexChecks.forall { case (k, p) =>
-            s.tags.get(k).exists(v => p.matcher(v).find()) })
-    def reEnforced(csv: String): Seq[InfluxScan.Sample] =
-      enforce(InfluxScan.parseSamples(csv))
+    def keep(s: InfluxScan.Sample): Boolean =
+      s.within(startMs, stopMs, measurement, field) &&
+        // pushed tag predicates re-checked on every fallback sample —
+        // the "time" prep keeps filtered tag columns alive for this; a
+        // single-value set is the plain equality, a wider one the IN
+        tagEq.forall { case (k, vs) => s.tags.get(k).exists(vs.contains) } &&
+        regexChecks.forall { case (k, p) =>
+          s.tags.get(k).exists(v => p.matcher(v).find()) }
+    def reEnforced(rows: Iterable[FluxCsv.Row]): Seq[InfluxScan.Sample] =
+      InfluxScan.parseSamples(rows).filter(keep).toSeq
+    def post(flux: String): Iterable[FluxCsv.Row] = FluxCsv(postFlux(cfg, flux))
     // offset buckets: grid = epoch multiples of bucketMs, shifted +offset
     // (the timezone-aligned window); offset 0 is the plain grid
     def bucketOf(t: Long): Long =
@@ -137,7 +135,7 @@ private[graft] object InfluxRollup {
 
     def minMaxWindowed(sortCol: String, desc: Boolean,
                        prep: String = ""): Seq[InfluxScan.Sample] =
-      reEnforced(postFlux(cfg, InfluxScan.flux(cfg.bucket, startMs, stopMs,
+      reEnforced(post(InfluxScan.flux(cfg.bucket, startMs, stopMs,
         measurement, field, limit = Some(1), sortDesc = Some(desc),
         sortCol = sortCol, groupCols = groupCols,
         aggPrep = Some(if (prep.nonEmpty) prep
@@ -246,9 +244,9 @@ private[graft] object InfluxRollup {
     // parse-or-None of a TRUSTED windowed aggregate response for a
     // count/sum spec (shared by the single-spec path and fused branches)
     def foldTrustedAgg(spec: InfluxScan.AggSpec, i: Int,
-                       csv: String): Boolean = spec match {
+                       rows: Iterable[FluxCsv.Row]): Boolean = spec match {
       case InfluxScan.AggCountStar | InfluxScan.AggCountValue =>
-        InfluxScan.parseWindowedCounts(csv, bucketMs, startMs, aggGroupCols,
+        InfluxScan.parseWindowedCounts(rows, bucketMs, startMs, aggGroupCols,
             offsetMs)
           .flatMap(canonBins[Long](_, _ + _)) match {
           case Some(m) => foldTrusted[Long](m, i, _ + _, Long.box); true
@@ -257,7 +255,7 @@ private[graft] object InfluxRollup {
       case InfluxScan.AggSumValue | InfluxScan.AggSumSq |
            InfluxScan.AggIncrease | InfluxScan.AggIntegral |
            InfluxScan.AggLocfArea =>
-        InfluxScan.parseWindowedSums(csv, bucketMs, startMs, aggGroupCols,
+        InfluxScan.parseWindowedSums(rows, bucketMs, startMs, aggGroupCols,
             offsetMs)
           .flatMap(canonBins[Double](_, _ + _)) match {
           case Some(m) => foldTrusted[Double](m, i, _ + _, Double.box); true
@@ -281,7 +279,7 @@ private[graft] object InfluxRollup {
            InfluxScan.AggSumValue | InfluxScan.AggSumSq |
            InfluxScan.AggIncrease | InfluxScan.AggIntegral |
            InfluxScan.AggLocfArea =>
-        val csv = postFlux(cfg, InfluxScan.flux(cfg.bucket, startMs, stopMs,
+        val rows = post(InfluxScan.flux(cfg.bucket, startMs, stopMs,
           measurement, field,
           count = spec == InfluxScan.AggCountStar,
           countValue = spec == InfluxScan.AggCountValue,
@@ -294,7 +292,7 @@ private[graft] object InfluxRollup {
           windowEveryMs = Some(bucketMs), tagEq = tagEq, tagRegex = tagRegex,
           windowOffsetMs = offsetMs))
         // untrusted response: bucket + fold the re-enforced samples locally
-        if (!foldTrustedAgg(spec, i, csv)) foldLocalFor(spec, i, reEnforced(csv))
+        if (!foldTrustedAgg(spec, i, rows)) foldLocalFor(spec, i, reEnforced(rows))
       // the "value_str" prep keeps string samples in play — a bucket whose
       // newest sample is a string must yield a NULL value, not skip to
       // the newest numeric
@@ -372,41 +370,32 @@ private[graft] object InfluxRollup {
       //  - unmarked response WITH samples → the server ignored the fused
       //    program and returned raw samples: every spec folds locally over
       //    the same re-enforced set — exactly what each single-spec
-      //    fallback would have computed from its own identical response;
+      //    fallback would have computed from its own identical response
+      //    (an all-out-of-range dump folds to nothing, as N re-POSTs would);
       //  - unmarked response WITHOUT samples → unattributable (could be a
-      //    legacy trusted-aggregate shape): re-POST every spec singly.
-      val csv = postFlux(cfg, InfluxScan.fusedFlux(cfg.bucket, startMs, stopMs,
-        measurement, field, tagEq, specs.map(branchOf), tagRegex))
-      InfluxScan.splitByAgg(csv, specs.length) match {
-        case Some(branches) =>
+      //    trusted aggregate shape): re-POST every spec singly, whose
+      //    responses the per-spec trust checks adjudicate.
+      InfluxScan.classifyFused(postFlux(cfg, InfluxScan.fusedFlux(cfg.bucket,
+        startMs, stopMs, measurement, field, tagEq, specs.map(branchOf),
+        tagRegex)), specs.length, keep) match {
+        case InfluxScan.Marked(branches) =>
           specs.zipWithIndex.foreach { case (spec, i) =>
-            val bcsv = branches.getOrElse(i, "")
+            val rows = branches.getOrElse(i, Nil)
             spec match {
               case InfluxScan.AggCountStar | InfluxScan.AggCountValue |
                    InfluxScan.AggSumValue | InfluxScan.AggSumSq |
                    InfluxScan.AggIncrease | InfluxScan.AggIntegral |
                    InfluxScan.AggLocfArea =>
-                if (!foldTrustedAgg(spec, i, bcsv)) runSpec(spec, i)
-              case _ => foldLocalFor(spec, i, reEnforced(bcsv))
+                if (!foldTrustedAgg(spec, i, rows)) runSpec(spec, i)
+              case _ => foldLocalFor(spec, i, reEnforced(rows))
             }
           }
-        case None =>
-          // unmarked response. If it PARSES as raw samples the server
-          // ignored the fused program — fold every spec over the
-          // re-enforced set (exactly what each single-spec fallback would
-          // compute from its own identical dump; an all-out-of-range dump
-          // folds to nothing, same as N re-POSTs would). A non-sample,
-          // non-empty response is unattributable (could be a trusted
-          // aggregate shape) → re-POST each spec singly, whose responses
-          // the per-spec trust checks adjudicate. Truly empty → no data.
-          val parsed = InfluxScan.parseSamples(csv)
-          if (parsed.nonEmpty) {
-            val samples = enforce(parsed)
-            specs.zipWithIndex.foreach { case (spec, i) =>
-              foldLocalFor(spec, i, samples)
-            }
-          } else if (InfluxScan.hasDataRows(csv))
-            specs.zipWithIndex.foreach { case (spec, i) => runSpec(spec, i) }
+        case InfluxScan.RawDump(samples) =>
+          specs.zipWithIndex.foreach { case (spec, i) =>
+            foldLocalFor(spec, i, samples)
+          }
+        case InfluxScan.AskEach =>
+          specs.zipWithIndex.foreach { case (spec, i) => runSpec(spec, i) }
       }
     } else specs.zipWithIndex.foreach { case (spec, i) => runSpec(spec, i) }
     // a bucket discovered only by a min/max query still needs its count

@@ -43,70 +43,43 @@ object InfluxScan {
     StructField("tags", MapType(StringType, StringType), nullable = true)))
 
   /** Flux CSV columns that are NOT tags ("_graft_agg" is the fused-query
-    * branch marker, [[FusedMarkerCol]]). Shared with the marker-cleanup
-    * tool's typed parser so the two CSV readers can never drift on what
-    * counts as a tag. */
+    * branch marker, [[FusedMarkerCol]]). The cursor's tag rule
+    * ([[FluxCsv.Row.tags]]) is the one reader of this set, so the sample
+    * parse and the marker-cleanup tool's typed parse agree on what counts
+    * as a tag. */
   private[graft] val reserved = Set("", "result", "table", "_start",
     "_stop", "_time", "_value", "_field", "_measurement", "_graft_agg")
 
   final case class Sample(measurement: String, field: String,
                           value: Option[Double], timeMs: Long,
-                          tags: Map[String, String])
-
-  /** RFC-4180-style cell split: quoted cells may contain commas and
-    * doubled quotes ("" = literal quote) — Influx quotes any cell with a
-    * comma, so a raw split would shift every later column. */
-  private[graft] def splitCells(line: String): Array[String] = {
-    val out = Array.newBuilder[String]
-    val cur = new StringBuilder
-    var inQuotes = false
-    var i = 0
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (inQuotes) {
-        if (c == '"') {
-          if (i + 1 < line.length && line.charAt(i + 1) == '"') { cur += '"'; i += 1 }
-          else inQuotes = false
-        } else cur += c
-      } else c match {
-        case '"' => inQuotes = true
-        case ',' => out += cur.result(); cur.clear()
-        case other => cur += other
-      }
-      i += 1
-    }
-    out += cur.result()
-    out.result()
+                          tags: Map[String, String]) {
+    /** The claimed-predicate re-check every reader applies to parsed
+      * samples: time in [startMs, stopMs), measurement and field equality.
+      * Correctness must not hinge on a server's boundary behavior. */
+    def within(startMs: Long, stopMs: Option[Long],
+               measurement: Option[String], field: Option[String]): Boolean =
+      timeMs >= startMs && stopMs.forall(timeMs < _) &&
+        measurement.forall(_ == this.measurement) && field.forall(_ == this.field)
   }
 
-  /** Parse InfluxDB annotated CSV (possibly several tables, each with its
-    * own annotation block + header) into samples. */
-  private[graft] def parseSamples(csv: String): Seq[Sample] = {
-    val out = Seq.newBuilder[Sample]
-    var header: Array[String] = null
-    var expectHeader = true
-    csv.split("\r?\n").foreach { raw =>
-      val line = raw.trim
-      if (line.isEmpty || line.startsWith("#")) expectHeader = true
-      else if (expectHeader) { header = splitCells(line); expectHeader = false }
-      else {
-        val cells = splitCells(line)
-        val col = header.zip(cells).toMap
-        col.get("_time").flatMap(t =>
-          scala.util.Try(Instant.parse(t).toEpochMilli).toOption).foreach { ms =>
-          out += Sample(
-            measurement = col.getOrElse("_measurement", ""),
-            field = col.getOrElse("_field", ""),
-            value = col.get("_value")
-              .flatMap(v => scala.util.Try(v.toDouble).toOption),
-            timeMs = ms,
-            tags = col.view.filterKeys(k => !reserved(k))
-              .filter(_._2.nonEmpty).toMap)
-        }
-      }
+  private def parsed[A](a: => A): Option[A] =
+    try Some(a) catch { case scala.util.control.NonFatal(_) => None }
+
+  private def epochMs(cell: String): Option[Long] =
+    if (cell == null) None else parsed(Instant.parse(cell).toEpochMilli)
+
+  /** The samples of an annotated-CSV response, lazily: one per data row
+    * whose `_time` parses, tags by the cursor's tag rule. */
+  private[graft] def parseSamples(rows: IterableOnce[FluxCsv.Row]): Iterator[Sample] =
+    rows.iterator.flatMap { r =>
+      val t = r.table
+      epochMs(r.cell(t.time)).map(ms => Sample(
+        measurement = Option(r.cell(t.measurement)).getOrElse(""),
+        field = Option(r.cell(t.field)).getOrElse(""),
+        value = Option(r.cell(t.value)).flatMap(v => parsed(v.toDouble)),
+        timeMs = ms,
+        tags = r.tags))
     }
-    out.result()
-  }
 
   /** Influx's minimum representable time (1677-09-21), rounded up a
     * second: the unbounded lower bound. Epoch 0 would silently hide
@@ -289,38 +262,28 @@ object InfluxScan {
     * landing on one key ADD (a server that aggregated per series instead
     * of per group still sums correctly). None when the response carries
     * `_time` — raw samples; the caller re-reduces locally per group. */
-  private def parseGroupedAgg[T](csv: String, groupCols: Seq[String],
+  private def parseGroupedAgg[T](rows: Iterable[FluxCsv.Row], groupCols: Seq[String],
                                  parse: String => Option[T],
                                  add: (T, T) => T)
       : Option[Map[Seq[String], T]] = {
     val out = scala.collection.mutable.Map.empty[Seq[String], T]
-    var header: Array[String] = null
-    var expectHeader = true
-    csv.split("\r?\n").foreach { raw =>
-      val line = raw.trim
-      if (line.isEmpty || line.startsWith("#")) expectHeader = true
-      else if (expectHeader) { header = splitCells(line); expectHeader = false }
-      else {
-        val col = header.zip(splitCells(line)).toMap
-        if (col.get("_time").exists(_.nonEmpty)) return None // raw samples
-        col.get("_value").flatMap(v => parse(v.trim)).foreach { n =>
-          val key = groupCols.map(c => col.getOrElse(fluxGroupCol(c), ""))
-          out(key) = out.get(key).fold(n)(add(_, n))
-        }
+    rows.foreach { r =>
+      if (Option(r.cell(r.table.time)).exists(_.nonEmpty)) return None // raw samples
+      Option(r.cell(r.table.value)).flatMap(v => parse(v.trim)).foreach { n =>
+        val key = groupCols.map(c => Option(r.cell(fluxGroupCol(c))).getOrElse(""))
+        out(key) = out.get(key).fold(n)(add(_, n))
       }
     }
     Some(out.toMap)
   }
 
-  private[graft] def parseGroupedCounts(csv: String, groupCols: Seq[String])
+  private[graft] def parseGroupedCounts(rows: Iterable[FluxCsv.Row], groupCols: Seq[String])
       : Option[Map[Seq[String], Long]] =
-    parseGroupedAgg[Long](csv, groupCols,
-      v => scala.util.Try(v.toLong).toOption, _ + _)
+    parseGroupedAgg[Long](rows, groupCols, v => parsed(v.toLong), _ + _)
 
-  private[graft] def parseGroupedSums(csv: String, groupCols: Seq[String])
+  private[graft] def parseGroupedSums(rows: Iterable[FluxCsv.Row], groupCols: Seq[String])
       : Option[Map[Seq[String], Double]] =
-    parseGroupedAgg[Double](csv, groupCols,
-      v => scala.util.Try(v.toDouble).toOption, _ + _)
+    parseGroupedAgg[Double](rows, groupCols, v => parsed(v.toDouble), _ + _)
 
   /** Parse a Flux `count()` response: a count table carries `_value` but no
     * `_time` column (aggregates drop the time axis; our count pipeline
@@ -331,8 +294,8 @@ object InfluxScan {
     * to the grouped parser with an empty key so a server that applied
     * count() per series (several count tables) SUMS across tables instead
     * of returning the first — one table-walk, no drift between the two. */
-  private[graft] def parseCountResponse(csv: String): Option[Long] =
-    parseGroupedCounts(csv, Nil).map(_.values.sum)
+  private[graft] def parseCountResponse(rows: Iterable[FluxCsv.Row]): Option[Long] =
+    parseGroupedCounts(rows, Nil).map(_.values.sum)
     // count over an empty range returns no tables at all → empty map → 0
 
   /** Parse a WINDOWED (optionally grouped) Flux aggregate response: one
@@ -348,62 +311,52 @@ object InfluxScan {
     * honored the aggregate but ignored `window()` answers with one
     * range-wide row — trusting it would attribute the whole shard to the
     * first bucket). */
-  private[graft] def parseWindowedAgg[T](csv: String, groupCols: Seq[String],
+  private[graft] def parseWindowedAgg[T](rows: Iterable[FluxCsv.Row], groupCols: Seq[String],
                                          bucketMs: Long, rangeStartMs: Long,
                                          parse: String => Option[T],
                                          add: (T, T) => T,
                                          offsetMs: Long = 0L)
       : Option[Map[(Seq[String], Long), T]] = {
     val out = scala.collection.mutable.Map.empty[(Seq[String], Long), T]
-    var header: Array[String] = null
-    var expectHeader = true
-    csv.split("\r?\n").foreach { raw =>
-      val line = raw.trim
-      if (line.isEmpty || line.startsWith("#")) expectHeader = true
-      else if (expectHeader) { header = splitCells(line); expectHeader = false }
-      else {
-        val col = header.zip(splitCells(line)).toMap
-        if (col.get("_time").exists(_.nonEmpty)) return None // raw samples
-        for {
-          s <- col.get("_start")
-          start <- scala.util.Try(Instant.parse(s).toEpochMilli).toOption
-          v <- col.get("_value")
-          n <- parse(v.trim)
-        } {
-          // offset buckets (timezone-shifted windows): the grid is
-          // epoch-aligned + offset; a start on neither the shifted grid
-          // nor the clipped range start is untrusted
-          val bucket =
-            Math.floorDiv(start - offsetMs, bucketMs) * bucketMs + offsetMs
-          if (start != bucket && start != rangeStartMs) return None
-          val stopOk = col.get("_stop").filter(_.nonEmpty).forall(e =>
-            scala.util.Try(Instant.parse(e).toEpochMilli).toOption
-              .forall(_ <= bucket + bucketMs))
-          if (!stopOk) return None
-          val key = (groupCols.map(c => col.getOrElse(fluxGroupCol(c), "")),
-            bucket)
-          out(key) = out.get(key).fold(n)(add(_, n))
-        }
+    rows.foreach { r =>
+      if (Option(r.cell(r.table.time)).exists(_.nonEmpty)) return None // raw samples
+      for {
+        start <- epochMs(r.cell("_start"))
+        v <- Option(r.cell(r.table.value))
+        n <- parse(v.trim)
+      } {
+        // offset buckets (timezone-shifted windows): the grid is
+        // epoch-aligned + offset; a start on neither the shifted grid
+        // nor the clipped range start is untrusted
+        val bucket =
+          Math.floorDiv(start - offsetMs, bucketMs) * bucketMs + offsetMs
+        if (start != bucket && start != rangeStartMs) return None
+        val stopOk = Option(r.cell("_stop")).filter(_.nonEmpty)
+          .flatMap(epochMs).forall(_ <= bucket + bucketMs)
+        if (!stopOk) return None
+        val key = (groupCols.map(c => Option(r.cell(fluxGroupCol(c))).getOrElse("")),
+          bucket)
+        out(key) = out.get(key).fold(n)(add(_, n))
       }
     }
     Some(out.toMap)
   }
 
-  private[graft] def parseWindowedCounts(csv: String, bucketMs: Long,
+  private[graft] def parseWindowedCounts(rows: Iterable[FluxCsv.Row], bucketMs: Long,
                                          rangeStartMs: Long,
                                          groupCols: Seq[String] = Nil,
                                          offsetMs: Long = 0L)
       : Option[Map[(Seq[String], Long), Long]] =
-    parseWindowedAgg[Long](csv, groupCols, bucketMs, rangeStartMs,
-      v => scala.util.Try(v.toLong).toOption, _ + _, offsetMs)
+    parseWindowedAgg[Long](rows, groupCols, bucketMs, rangeStartMs,
+      v => parsed(v.toLong), _ + _, offsetMs)
 
-  private[graft] def parseWindowedSums(csv: String, bucketMs: Long,
+  private[graft] def parseWindowedSums(rows: Iterable[FluxCsv.Row], bucketMs: Long,
                                        rangeStartMs: Long,
                                        groupCols: Seq[String] = Nil,
                                        offsetMs: Long = 0L)
       : Option[Map[(Seq[String], Long), Double]] =
-    parseWindowedAgg[Double](csv, groupCols, bucketMs, rangeStartMs,
-      v => scala.util.Try(v.toDouble).toOption, _ + _, offsetMs)
+    parseWindowedAgg[Double](rows, groupCols, bucketMs, rangeStartMs,
+      v => parsed(v.toDouble), _ + _, offsetMs)
 
   /** Escape a string literal for interpolation into Flux source: quotes
     * and backslashes are legal in measurement/field names, and unescaped
@@ -705,59 +658,41 @@ object InfluxScan {
       .mkString("\n")
   }
 
-  /** Whether the CSV carries at least one data row (any non-annotation,
-    * non-header line): distinguishes an honestly empty response from one
-    * whose rows we cannot attribute. */
-  private[graft] def hasDataRows(csv: String): Boolean = {
-    var expectHeader = true
-    csv.split("\r?\n").foreach { raw =>
-      val line = raw.trim
-      if (line.isEmpty || line.startsWith("#")) expectHeader = true
-      else if (expectHeader) expectHeader = false
-      else return true
-    }
-    false
-  }
+  /** How a fused program's response resolved ([[classifyFused]]). */
+  private[graft] sealed trait Fused
+  /** Every data row carried a valid branch marker: each branch's rows,
+    * for the single-spec parsers and their trust checks. An empty
+    * response is Marked with no branches — every branch empty. */
+  private[graft] final case class Marked(branches: Map[Int, Seq[FluxCsv.Row]])
+    extends Fused
+  /** Unmarked rows that parse as samples: the server ignored the fused
+    * program, and every spec folds this one set (the samples `keep`
+    * passes). */
+  private[graft] final case class RawDump(samples: Seq[Sample]) extends Fused
+  /** Unmarked rows that are not samples (a legacy aggregate shape, say):
+    * unattributable — re-POST each spec singly. */
+  private[graft] case object AskEach extends Fused
 
-  /** Split a fused-program response into per-branch texts keyed by the
-    * [[FusedMarkerCol]] each branch stamps. None ⟺ some data row carries
-    * no valid marker — the response did not come from the fused program
-    * intact (a server that ignored it, raw samples, garbage) and the
-    * caller falls back; attribution would be guesswork. Zero data rows →
-    * Some(empty): an honestly empty range. Each branch text replays the
-    * covering header lines, so the existing single-response parsers (and
-    * their trust checks) run on it unchanged. */
-  private[graft] def splitByAgg(csv: String, nBranches: Int)
-      : Option[Map[Int, String]] = {
-    val bufs = scala.collection.mutable.Map.empty[Int, StringBuilder]
-    var headerLine: String = null
-    var markerIdx = -1
-    var expectHeader = true
-    var emitted = Set.empty[Int]
-    csv.split("\r?\n").foreach { raw =>
-      val line = raw.trim
-      if (line.isEmpty || line.startsWith("#")) expectHeader = true
-      else if (expectHeader) {
-        headerLine = line
-        markerIdx = splitCells(line).indexOf(FusedMarkerCol)
-        emitted = Set.empty
-        expectHeader = false
-      } else {
-        if (markerIdx < 0) return None
-        val cells = splitCells(line)
-        val i = if (markerIdx < cells.length)
-          scala.util.Try(cells(markerIdx).trim.toInt).getOrElse(-1) else -1
-        if (i < 0 || i >= nBranches) return None
-        val buf = bufs.getOrElseUpdate(i, new StringBuilder)
-        if (!emitted.contains(i)) {
-          // blank separator resets the parser's header state per block
-          buf.append('\n').append(headerLine).append('\n')
-          emitted += i
-        }
-        buf.append(line).append('\n')
-      }
+  /** The one decision over a fused-program response, shared by the
+    * pushed-aggregate reader and the rollup: rows are routed by the
+    * [[FusedMarkerCol]] each branch stamps. A data row without a valid
+    * marker means the response did not come from the fused program
+    * intact, and attributing it would be guesswork. */
+  private[graft] def classifyFused(csv: String, nBranches: Int,
+                                   keep: Sample => Boolean): Fused = {
+    val rows = FluxCsv(csv)
+    val branches = scala.collection.mutable.Map.empty[Int, Vector[FluxCsv.Row]]
+    val marked = rows.iterator.forall { r =>
+      val i = Option(r.cell(FusedMarkerCol)).flatMap(m => parsed(m.trim.toInt))
+        .filter(i => i >= 0 && i < nBranches)
+      i.foreach(i => branches(i) = branches.getOrElse(i, Vector.empty) :+ r.copy())
+      i.isDefined
     }
-    Some(bufs.view.mapValues(_.result()).toMap)
+    if (marked) Marked(branches.toMap)
+    else {
+      val samples = parseSamples(rows).toVector
+      if (samples.nonEmpty) RawDump(samples.filter(keep)) else AskEach
+    }
   }
 }
 
@@ -1142,13 +1077,12 @@ final class InfluxAggregateReader(cfg: InfluxSink.Config,
   private var rows: Iterator[InternalRow] = _
   private var row: InternalRow = _
 
-  private def post(fluxSrc: String): String =
-    InfluxWatermarkSource.postFlux(cfg, fluxSrc)
+  private def post(fluxSrc: String): Iterable[FluxCsv.Row] =
+    FluxCsv(InfluxWatermarkSource.postFlux(cfg, fluxSrc))
 
-  private def reEnforced(csv: String): Seq[InfluxScan.Sample] =
-    InfluxScan.parseSamples(csv).filter(s =>
-      s.timeMs >= startMs && stopMs.forall(s.timeMs < _) &&
-        measurement.forall(_ == s.measurement) && field.forall(_ == s.field))
+  private def reEnforced(rows: Iterable[FluxCsv.Row]): Seq[InfluxScan.Sample] =
+    InfluxScan.parseSamples(rows)
+      .filter(_.within(startMs, stopMs, measurement, field)).toSeq
 
   private def minMax(sortCol: String, desc: Boolean): Seq[InfluxScan.Sample] =
     reEnforced(post(InfluxScan.flux(cfg.bucket, startMs, stopMs, measurement,
@@ -1192,109 +1126,19 @@ final class InfluxAggregateReader(cfg: InfluxSink.Config,
         throw new IllegalStateException(s"rollup-only spec $other")
     }
 
-  /** How a multi-spec fetch resolved: marker-attributed branch texts, a
-    * raw-sample dump (the server ignored the fused program — every spec
-    * folds the same re-enforced set locally), or an unattributable
-    * response (fall back to one POST per spec). */
-  private sealed trait Fetched
-  private case class Marked(branches: Map[Int, String]) extends Fetched
-  private case class RawDump(samples: Seq[InfluxScan.Sample]) extends Fetched
-  private case object AskEach extends Fetched
-
-  private def fusedFetch(fetchSpecs: Seq[InfluxScan.AggSpec]): Fetched = {
-    val csv = post(InfluxScan.fusedFlux(cfg.bucket, startMs, stopMs,
-      measurement, field, Nil, fetchSpecs.map(branchOf)))
-    InfluxScan.splitByAgg(csv, fetchSpecs.length) match {
-      case Some(branches) => Marked(branches)
-      case None =>
-        val parsed = InfluxScan.parseSamples(csv)
-        if (parsed.nonEmpty)
-          RawDump(parsed.filter(s =>
-            s.timeMs >= startMs && stopMs.forall(s.timeMs < _) &&
-              measurement.forall(_ == s.measurement) &&
-              field.forall(_ == s.field)))
-        else if (InfluxScan.hasDataRows(csv)) AskEach
-        else Marked(Map.empty) // honestly empty: every branch empty
-    }
-  }
-
-  private def computeGlobal(): InternalRow = {
-    val empty = stopMs.exists(_ <= startMs) // contradictory range: no POST
-    // one spec over already-fetched samples (branch rows or a raw dump)
-    def localVal(spec: InfluxScan.AggSpec, ss: Seq[InfluxScan.Sample]): Any =
-      spec match {
-        case InfluxScan.AggMinTime =>
-          ss.map(_.timeMs).minOption.map(Long.box).orNull
-        case InfluxScan.AggMaxTime =>
-          ss.map(_.timeMs).maxOption.map(Long.box).orNull
-        case InfluxScan.AggMinValue =>
-          ss.flatMap(_.value).minOption.map(Double.box).orNull
-        case InfluxScan.AggMaxValue =>
-          ss.flatMap(_.value).maxOption.map(Double.box).orNull
-        case InfluxScan.AggCountStar => Long.box(ss.size.toLong)
-        case InfluxScan.AggCountValue =>
-          Long.box(ss.count(_.value.nonEmpty).toLong)
-        case InfluxScan.AggSumValue =>
-          val vs = ss.flatMap(_.value)
-          if (vs.isEmpty) null else Double.box(vs.sum)
-        case other => throw new IllegalStateException(s"rollup-only $other")
-      }
-    // one spec from its (marked or single-POST) response text
-    def fromCsv(spec: InfluxScan.AggSpec, csv: String): Any = spec match {
-      case InfluxScan.AggCountStar =>
-        Long.box(InfluxScan.parseCountResponse(csv)
-          .getOrElse(reEnforced(csv).size.toLong))
-      case InfluxScan.AggCountValue =>
-        Long.box(InfluxScan.parseCountResponse(csv)
-          .getOrElse(reEnforced(csv).count(_.value.nonEmpty).toLong))
-      case InfluxScan.AggSumValue =>
-        InfluxScan.parseGroupedSums(csv, Nil) match {
-          // sum over zero numeric samples is NULL, not 0.0 (Spark's
-          // partial-merge contract for sum slots)
-          case Some(m) =>
-            if (m.isEmpty) null else Double.box(m.values.sum)
-          case None =>
-            val vs = reEnforced(csv).flatMap(_.value)
-            if (vs.isEmpty) null else Double.box(vs.sum)
-        }
-      case minmax => localVal(minmax, reEnforced(csv))
-    }
-    // one spec, its own POST — the single-spec protocol
-    def singleSpec(spec: InfluxScan.AggSpec): Any = spec match {
-      case InfluxScan.AggMinTime => localVal(spec, minMax("_time", desc = false))
-      case InfluxScan.AggMaxTime => localVal(spec, minMax("_time", desc = true))
-      case InfluxScan.AggMinValue => localVal(spec, minMax("_value", desc = false))
-      case InfluxScan.AggMaxValue => localVal(spec, minMax("_value", desc = true))
-      case agg => fromCsv(agg, post(InfluxScan.flux(cfg.bucket, startMs,
-        stopMs, measurement, field,
-        count = agg == InfluxScan.AggCountStar,
-        countValue = agg == InfluxScan.AggCountValue,
-        sumValue = agg == InfluxScan.AggSumValue)))
-    }
-    val values: Array[Any] =
-      if (empty) specs.map {
-        case InfluxScan.AggCountStar | InfluxScan.AggCountValue =>
-          Long.box(0L): Any
-        case _ => null: Any
-      }.toArray
-      // multi-spec: ONE fused POST answers every aggregate; each branch
-      // keeps its own single-spec trust contract
-      else if (specs.length >= 2) fusedFetch(specs) match {
-        case Marked(branches) => specs.zipWithIndex.map { case (spec, i) =>
-          fromCsv(spec, branches.getOrElse(i, ""))
-        }.toArray
-        case RawDump(samples) => specs.map(localVal(_, samples)).toArray
-        case AskEach => specs.map(singleSpec).toArray
-      }
-      else specs.map(singleSpec).toArray
-    new GenericInternalRow(values)
-  }
+  private def fusedFetch(fetchSpecs: Seq[InfluxScan.AggSpec]): InfluxScan.Fused =
+    InfluxScan.classifyFused(InfluxWatermarkSource.postFlux(cfg,
+      InfluxScan.fusedFlux(cfg.bucket, startMs, stopMs, measurement, field,
+        Nil, fetchSpecs.map(branchOf))), fetchSpecs.length,
+      _.within(startMs, stopMs, measurement, field))
 
   /** Per-group partials. Each spec's response is reduced per group key;
     * the emitted key set is the union across specs (with one sample set
     * behind all responses they agree; under a degenerate server a missing
-    * count is 0 and a missing min/max NULL — both merge-neutral). */
-  private def computeGrouped(): Iterator[InternalRow] = {
+    * count is 0 and a missing min/max NULL — both merge-neutral). With no
+    * pushed grouping the one key is the empty key, and its row is emitted
+    * even when no sample answered (count 0, min/max/sum NULL). */
+  private def compute(): Iterator[InternalRow] = {
     def localMap(spec: InfluxScan.AggSpec, ss: Seq[InfluxScan.Sample])
         : Map[Seq[String], Any] = spec match {
       case InfluxScan.AggMinTime => ss.groupBy(key)
@@ -1320,19 +1164,19 @@ final class InfluxAggregateReader(cfg: InfluxSink.Config,
       }
       case other => throw new IllegalStateException(s"rollup-only $other")
     }
-    def fromCsv(spec: InfluxScan.AggSpec, csv: String)
+    def fromRows(spec: InfluxScan.AggSpec, rows: Iterable[FluxCsv.Row])
         : Map[Seq[String], Any] = spec match {
       case InfluxScan.AggCountStar | InfluxScan.AggCountValue =>
-        InfluxScan.parseGroupedCounts(csv, groupCols) match {
+        InfluxScan.parseGroupedCounts(rows, groupCols) match {
           case Some(m) => m.view.mapValues(Long.box(_): Any).toMap
-          case None => localMap(spec, reEnforced(csv))
+          case None => localMap(spec, reEnforced(rows))
         }
       case InfluxScan.AggSumValue =>
-        InfluxScan.parseGroupedSums(csv, groupCols) match {
+        InfluxScan.parseGroupedSums(rows, groupCols) match {
           case Some(m) => m.view.mapValues(Double.box(_): Any).toMap
-          case None => localMap(spec, reEnforced(csv))
+          case None => localMap(spec, reEnforced(rows))
         }
-      case minmax => localMap(minmax, reEnforced(csv))
+      case minmax => localMap(minmax, reEnforced(rows))
     }
     def singleSpec(spec: InfluxScan.AggSpec): Map[Seq[String], Any] =
       spec match {
@@ -1344,7 +1188,7 @@ final class InfluxAggregateReader(cfg: InfluxSink.Config,
           localMap(spec, minMax("_value", desc = false))
         case InfluxScan.AggMaxValue =>
           localMap(spec, minMax("_value", desc = true))
-        case agg => fromCsv(agg, post(InfluxScan.flux(cfg.bucket, startMs,
+        case agg => fromRows(agg, post(InfluxScan.flux(cfg.bucket, startMs,
           stopMs, measurement, field,
           count = agg == InfluxScan.AggCountStar,
           countValue = agg == InfluxScan.AggCountValue,
@@ -1359,36 +1203,39 @@ final class InfluxAggregateReader(cfg: InfluxSink.Config,
     // counts — exactly what the slot defaulting below produces, once the
     // KEY materializes). When no spec sees all samples, ride a hidden
     // count-star branch in the SAME fused POST purely for its key set
-    // (or one extra POST on the single-spec path).
-    val occupancyBearing = specs.exists {
+    // (or one extra POST on the single-spec path). The ungrouped row
+    // always exists, so it needs no such branch.
+    val occupancyBearing = groupCols.isEmpty || specs.exists {
       case InfluxScan.AggCountStar | InfluxScan.AggMinTime |
            InfluxScan.AggMaxTime => true
       case _ => false
     }
     var occKeys: Seq[Seq[String]] = Nil
     val perSpec: Seq[Map[Seq[String], Any]] =
-      if (specs.length >= 2 || !occupancyBearing) {
+      if (stopMs.exists(_ <= startMs)) specs.map(_ => Map.empty) // no POST
+      else if (specs.length >= 2 || !occupancyBearing) {
         val fetchSpecs =
           if (occupancyBearing) specs else specs :+ InfluxScan.AggCountStar
         fusedFetch(fetchSpecs) match {
-          case Marked(branches) =>
-            if (!occupancyBearing) occKeys = fromCsv(InfluxScan.AggCountStar,
-              branches.getOrElse(specs.length, "")).keys.toSeq
+          case InfluxScan.Marked(branches) =>
+            if (!occupancyBearing) occKeys = fromRows(InfluxScan.AggCountStar,
+              branches.getOrElse(specs.length, Nil)).keys.toSeq
             specs.zipWithIndex.map { case (spec, i) =>
-              fromCsv(spec, branches.getOrElse(i, ""))
+              fromRows(spec, branches.getOrElse(i, Nil))
             }
-          case RawDump(samples) =>
+          case InfluxScan.RawDump(samples) =>
             if (!occupancyBearing)
               occKeys = localMap(InfluxScan.AggCountStar, samples).keys.toSeq
             specs.map(localMap(_, samples))
-          case AskEach =>
+          case InfluxScan.AskEach =>
             if (!occupancyBearing)
               occKeys = singleSpec(InfluxScan.AggCountStar).keys.toSeq
             specs.map(singleSpec)
         }
       }
       else specs.map(singleSpec)
-    val keys = (perSpec.flatMap(_.keys) ++ occKeys).distinct
+    val keys =
+      if (groupCols.isEmpty) Seq(Nil) else (perSpec.flatMap(_.keys) ++ occKeys).distinct
     keys.iterator.map { k =>
       val vals: Array[Any] =
         (k.map(s => UTF8String.fromString(s): Any) ++
@@ -1404,11 +1251,7 @@ final class InfluxAggregateReader(cfg: InfluxSink.Config,
   }
 
   override def next(): Boolean = {
-    if (rows == null)
-      rows =
-        if (groupCols.isEmpty) Iterator.single(computeGlobal())
-        else if (stopMs.exists(_ <= startMs)) Iterator.empty
-        else computeGrouped()
+    if (rows == null) rows = compute()
     if (!rows.hasNext) false
     else { row = rows.next(); true }
   }
@@ -1435,9 +1278,8 @@ final class InfluxPartitionReader(cfg: InfluxSink.Config,
     // is believed exact, but the engine's correctness must not hinge on a
     // server's boundary behavior
     programs.iterator.flatMap { case (flux, keep) =>
-      InfluxScan.parseSamples(InfluxWatermarkSource.postFlux(cfg, flux)).iterator.filter(s =>
-        keep(s) && s.timeMs >= startMs && stopMs.forall(s.timeMs < _) &&
-          measurement.forall(_ == s.measurement) && field.forall(_ == s.field))
+      InfluxScan.parseSamples(FluxCsv(InfluxWatermarkSource.postFlux(cfg, flux)))
+        .filter(s => keep(s) && s.within(startMs, stopMs, measurement, field))
     }
   private var row: InternalRow = _
 

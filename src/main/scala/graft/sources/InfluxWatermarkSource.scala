@@ -61,22 +61,16 @@ object InfluxWatermarkSource {
        |  |> filter(fn: (r) => r["source"] == "HA" and r["ha_type"] == "statistics")
        |""".stripMargin + oldestOfBucket
 
-  /** Parse InfluxDB annotated CSV: each table section is '#'-prefixed
-    * annotation rows, then a header row, then data rows; sections are
-    * separated by a blank line and each reads its own header. The watermark
-    * is the minimum `_time` over every data row of every table, so a reply
-    * with one table per series still yields the bucket's oldest. Returns
-    * None on an empty result (≡ reference's IndexError path → full
-    * re-export). */
-  private[sources] def parseOldestTime(annotatedCsv: String): Option[Instant] = {
-    var timeIdx = -2 // -2: the next data line is a header; -1: header lacks _time
-    annotatedCsv.split("\r?\n").iterator.map(_.trim).flatMap { l =>
-      if (l.isEmpty || l.startsWith("#")) { timeIdx = -2; None }
-      else if (timeIdx == -2) { timeIdx = l.split(",").indexOf("_time"); None }
-      else if (timeIdx < 0) None
-      else l.split(",").lift(timeIdx).flatMap(c => scala.util.Try(Instant.parse(c)).toOption)
-    }.minOption
-  }
+  /** The watermark is the minimum `_time` over every data row of every
+    * table of the annotated-CSV reply (each table read with its own
+    * header by [[FluxCsv]]), so a reply with one table per series still
+    * yields the bucket's oldest. Returns None on an empty result
+    * (≡ reference's IndexError path → full re-export); an error table in
+    * the reply throws (quirk Q8: the reference exit(1)s on a failed
+    * watermark fetch) rather than read as an empty bucket. */
+  private[sources] def parseOldestTime(annotatedCsv: String): Option[Instant] =
+    FluxCsv(annotatedCsv).iterator.flatMap(r => Option(r.cell(r.table.time))
+      .flatMap(c => scala.util.Try(Instant.parse(c)).toOption)).minOption
 
   /** POST a Flux program to /api/v2/query through the one Influx client
     * ([[InfluxHttp]]) and return the annotated-CSV response. A 429, 5xx or

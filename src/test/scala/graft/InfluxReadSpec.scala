@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.InfluxScan
+import graft.sources.{FluxCsv, InfluxScan}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -125,10 +125,44 @@ class InfluxReadSpec extends AnyFunSuite with Matchers {
         |,result,table,_time,_value,_field,_measurement,location
         |,_result,0,2024-01-01T00:00:07Z,1.5,value,ha_states,§Room 1, §§North§§§
         |""".stripMargin.replace('§', '"')
-    val s = InfluxScan.parseSamples(csv)
+    val s = InfluxScan.parseSamples(FluxCsv(csv)).toSeq
     s.length shouldBe 1
     s.head.tags shouldBe Map("location" -> "Room 1, \"North\"")
     s.head.value shouldBe Some(1.5)
+  }
+
+  /** Influx's report of an error that happens after streaming has begun:
+    * an error table inside the HTTP 200 body. */
+  private val errorTable =
+    """#datatype,string,string
+      |#group,true,true
+      |#default,,
+      |,error,reference
+      |,"panic: runtime error, index out of range",897
+      |""".stripMargin
+
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  test("a Flux error table after the first data table fails the read " +
+    "instead of returning the rows before it as the whole answer") {
+    withTransport(cannedCsv + "\n" + errorTable) { _ =>
+      val e = intercept[Exception](influx(1).filter(col("time_ms") >= t0).collect())
+      messages(e) should include("error table: panic: runtime error, index out of range")
+      messages(e) should include("(reference: 897)")
+    }
+  }
+
+  test("parseCountResponse on an error table throws, never a trusted zero") {
+    val e = intercept[RuntimeException](InfluxScan.parseCountResponse(FluxCsv(errorTable)))
+    e.getMessage should include("panic: runtime error, index out of range")
+  }
+
+  test("a last-column tag value keeps its trailing space (Influx quotes a " +
+    "leading space, never a trailing one)") {
+    val csv = cannedCsv.stripSuffix("sensor.temp\n") + "Kitchen \n"
+    InfluxScan.parseSamples(FluxCsv(csv)).map(_.tags).toSeq shouldBe
+      Seq(Map("entity_id" -> "sensor.temp"), Map("entity_id" -> "Kitchen "))
   }
 
   test("orderBy(time_ms).limit(1) derives the reference watermark Flux " +
@@ -474,9 +508,9 @@ class InfluxReadSpec extends AnyFunSuite with Matchers {
         |,_result,0,2024-01-01T00:00:00Z,2024-01-02T00:00:00Z,7,ha_states
         |,_result,1,2024-01-01T00:00:00Z,2024-01-02T00:00:00Z,4,ha_meter
         |""".stripMargin
-    InfluxScan.parseGroupedCounts(groupedCountCsv, Seq("measurement")) shouldBe
+    InfluxScan.parseGroupedCounts(FluxCsv(groupedCountCsv), Seq("measurement")) shouldBe
       Some(Map(Seq("ha_states") -> 7L, Seq("ha_meter") -> 4L))
-    InfluxScan.parseGroupedCounts(cannedCsv, Seq("measurement")) shouldBe None
+    InfluxScan.parseGroupedCounts(FluxCsv(cannedCsv), Seq("measurement")) shouldBe None
   }
 
   test("contradictory range with pushed aggregates: count 0 / null min, " +
@@ -500,9 +534,9 @@ class InfluxReadSpec extends AnyFunSuite with Matchers {
         |,result,table,_start,_stop,_value
         |,_result,0,2024-01-01T00:00:00Z,2024-01-02T00:00:00Z,12345
         |""".stripMargin
-    InfluxScan.parseCountResponse(countCsv) shouldBe Some(12345L)
-    InfluxScan.parseCountResponse(cannedCsv) shouldBe None
-    InfluxScan.parseCountResponse("") shouldBe Some(0L)
+    InfluxScan.parseCountResponse(FluxCsv(countCsv)) shouldBe Some(12345L)
+    InfluxScan.parseCountResponse(FluxCsv(cannedCsv)) shouldBe None
+    InfluxScan.parseCountResponse(FluxCsv("")) shouldBe Some(0L)
     // a server that applied count() per series returns one count table per
     // series key: the counts must SUM across tables, not first-table-wins
     val perSeriesCsv = countCsv + "\n" +
@@ -512,7 +546,7 @@ class InfluxReadSpec extends AnyFunSuite with Matchers {
         |,result,table,_start,_stop,_value
         |,_result,1,2024-01-01T00:00:00Z,2024-01-02T00:00:00Z,55
         |""".stripMargin
-    InfluxScan.parseCountResponse(perSeriesCsv) shouldBe Some(12400L)
+    InfluxScan.parseCountResponse(FluxCsv(perSeriesCsv)) shouldBe Some(12400L)
   }
 
   test("a user-specified read schema fails at analysis time on unknown " +
@@ -549,7 +583,7 @@ class InfluxReadSpec extends AnyFunSuite with Matchers {
         |,result,table,_time,_value,_field,_measurement
         |,_result,1,2024-01-01T02:00:00Z,7.25,power,ha_meter
         |""".stripMargin
-    val s = InfluxScan.parseSamples(csv)
+    val s = InfluxScan.parseSamples(FluxCsv(csv)).toSeq
     s.length shouldBe 3
     s.last.measurement shouldBe "ha_meter"
     s.last.tags shouldBe empty

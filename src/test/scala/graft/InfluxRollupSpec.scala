@@ -492,14 +492,14 @@ class InfluxRollupSpec extends AnyFunSuite with Matchers {
   test("parseWindowedCounts validation: aligned trusted; clipped first " +
     "window normalized; unaligned or range-spanning rows untrusted") {
     val hourMs = 3600000L
-    def csvOf(rows: (String, String, Long)*): String =
+    def csvOf(rows: (String, String, Long)*) = graft.sources.FluxCsv(
       """#datatype,string,long,dateTime:RFC3339,dateTime:RFC3339,long
         |#group,false,false,true,true,false
         |#default,_result,,,,
         |,result,table,_start,_stop,_value
         |""".stripMargin + rows.zipWithIndex.map { case ((s, e, v), i) =>
         s",_result,$i,$s,$e,$v"
-      }.mkString("", "\n", "\n")
+      }.mkString("", "\n", "\n"))
     // aligned
     graft.sources.InfluxScan.parseWindowedCounts(
       csvOf(("2024-01-01T00:00:00Z", "2024-01-01T01:00:00Z", 7L)),

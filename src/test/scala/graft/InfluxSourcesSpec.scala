@@ -123,6 +123,37 @@ class InfluxSourcesSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("S2/Q8: an error table inside an HTTP 200 fails the watermark " +
+    "instead of reading as an empty bucket (which re-exports everything)") {
+    val errorTable =
+      """#datatype,string,string
+        |#group,true,true
+        |#default,,
+        |,error,reference
+        |,query timed out,408
+        |""".stripMargin
+    withServer(200, errorTable) { (url, _) =>
+      val e = intercept[RuntimeException](InfluxWatermarkSource.oldestTimestamp(cfg(url)))
+      e.getMessage should include("query timed out")
+      e.getMessage should include("408")
+    }
+  }
+
+  test("S2: the watermark reads quoted cells: a server that ignored " +
+    "keep(columns: [\"_time\"]) answers with a quoted tag before _time") {
+    val unkept =
+      """#datatype,string,long,string,dateTime:RFC3339,double
+        |#group,false,false,true,false,false
+        |#default,_result,,,,
+        |,result,table,room,_time,_value
+        |,_result,0,"a,b",2023-04-30T08:00:00Z,3.0
+        |""".stripMargin
+    withServer(200, unkept) { (url, _) =>
+      InfluxWatermarkSource.oldestTimestamp(cfg(url)) shouldBe
+        Some(Instant.parse("2023-04-30T08:00:00Z"))
+    }
+  }
+
   test("S2/Q8: HTTP error fails fast") {
     withServer(401, "unauthorized") { (url, _) =>
       a[RuntimeException] should be thrownBy

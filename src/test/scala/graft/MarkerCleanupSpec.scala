@@ -492,6 +492,21 @@ class MarkerCleanupSpec extends AnyFunSuite with Matchers {
     } finally server.stop(0)
   }
 
+  test("a trailing space in a last-column tag value survives the typed " +
+    "parse and replays escaped: the replay writes the same series") {
+    val room = "Kitchen " // the last cell of its row, unquoted
+    val csv =
+      s"""#datatype,string,long,dateTime:RFC3339,double,string,string,string
+        |#group,false,false,false,false,true,true,true
+        |#default,_result,,,,,,
+        |,result,table,_time,_value,_field,_measurement,room
+        |,_result,0,$T1,1.5,mean,C,$room
+        |""".stripMargin
+    val Seq(p) = MarkerCleanup.parseTyped(csv)
+    p.tags shouldBe Map("room" -> "Kitchen ")
+    MarkerCleanup.replayLine(p)._1 should startWith("C,ha_type=statistics,room=Kitchen\\ ")
+  }
+
   test("a foreign field type in the family fails loudly instead of " +
     "risking a mistyped replay") {
     val longCsv =
