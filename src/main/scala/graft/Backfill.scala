@@ -122,7 +122,8 @@ object Backfill {
     * `statistics_meta.id` — both adapted here, then [[statisticsPlan]].
     * `statistics` is read range-partitioned on `start_ts` and cut at the
     * watermark in the database, like `states` in [[run]]. Returns the
-    * number of points written. */
+    * number of points written: the lines the write's tasks committed
+    * ([[graft.etl.InfluxSink.save]]). */
   def runStatistics(spark: SparkSession, dbPath: String,
                     cfg: InfluxSink.Config): Long = {
     // statistics-sourced watermark ONLY (the ha_type marker tag): the
@@ -136,13 +137,14 @@ object Backfill {
       .withColumn("start_ts_ms", round(col("start_ts") * 1000).cast("long"))
     val meta = Sources.sqliteJdbc(spark, dbPath, "statistics_meta")
       .withColumnRenamed("id", "metadata_id")
-    InfluxSink.write(InfluxSink.asPoints(statisticsPlan(stats, meta, watermark)), cfg)
+    InfluxSink.save(statisticsPlan(stats, meta, watermark), cfg)
   }
 
   /** The states backfill: one recorder read, range-partitioned on
     * `last_updated_ts` and cut at the watermark in the database
     * ([[graft.etl.Sources.rangedJdbc]]), returning the number of points
-    * written. */
+    * written: the lines the write's tasks committed
+    * ([[graft.etl.InfluxSink.save]]). */
   def run(spark: SparkSession, dbPath: String, cfg: InfluxSink.Config,
           bugCompatUnitsFilter: Boolean = false): Long = {
     val watermark = InfluxWatermarkSource
@@ -152,7 +154,7 @@ object Backfill {
       "states", "last_updated_ts", watermark)
     val meta = Sources.sqliteJdbc(spark, dbPath, "states_meta")
     val attrs = Sources.sqliteJdbc(spark, dbPath, "state_attributes")
-    InfluxSink.write(InfluxSink.asPoints(plan(states, meta, attrs, watermark)), cfg)
+    InfluxSink.save(plan(states, meta, attrs, watermark), cfg)
   }
 
   /** CLI: graft.Backfill <sqlitePath>; Influx connection from env (S4,

@@ -3945,9 +3945,9 @@ object SparkEntry {
        |    '","friendly_name":"' || coalesce(fname, eshort) || '"}' AS tags_json,
        |  '{' || concat_ws(',',
        |    CASE WHEN state_is_num THEN '"value":' || CAST(CAST(state AS DOUBLE) AS VARCHAR) END,
-       |    CASE WHEN temp IS NOT NULL AND TRY_CAST(temp AS DOUBLE) IS NOT NULL
+       |    CASE WHEN isfinite(TRY_CAST(temp AS DOUBLE))
        |         THEN '"temperature":' || CAST(CAST(temp AS DOUBLE) AS VARCHAR) END,
-       |    CASE WHEN batt IS NOT NULL AND regexp_matches(batt,'$numRe')
+       |    CASE WHEN regexp_matches(batt,'$numRe') AND isfinite(TRY_CAST(batt AS DOUBLE))
        |         THEN '"battery":' || CAST(CAST(batt AS DOUBLE) AS VARCHAR) END
        |  ) || '}' AS fields_num_json,
        |  '{' || concat_ws(',',

@@ -21,7 +21,8 @@ import scala.annotation.tailrec
 object InfluxHttp {
 
   /** The transport test seam: replaces ONE exchange, below the retry loop —
-    * request path and body in, status and response body out. Process-local
+    * request path and body (a copy of its first `length` bytes) in, status
+    * and response body out. Process-local
     * (local-mode executors share the JVM); unset = real HTTP. */
   @volatile private[graft] var testExchange
     : Option[(String, Array[Byte]) => (Int, String)] = None
@@ -30,17 +31,18 @@ object InfluxHttp {
   private[graft] def query(cfg: InfluxSink.Config, contentType: String,
                            body: Array[Byte]): String =
     post(cfg, InfluxSink.endpoint(cfg, "/api/v2/query", "org" -> cfg.org),
-      "query", contentType, body, accept = Some("application/csv"))
+      "query", contentType, body, body.length, accept = Some("application/csv"))
 
-  /** POST `body` to `url` under the retry policy; the response body on 2xx. */
+  /** POST the first `length` bytes of `body` to `url` under the retry
+    * policy; the response body on 2xx. */
   private[graft] def post(cfg: InfluxSink.Config, url: URL, op: String,
-                          contentType: String, body: Array[Byte],
+                          contentType: String, body: Array[Byte], length: Int,
                           accept: Option[String] = None): String = {
     @tailrec def attempt(retry: Int): String = {
       // Right(response) on 2xx, Left((failure, Retry-After ms)) if retryable
       val outcome: Either[(String, Long), String] =
         try {
-          val (code, text, retryAfterMs) = exchange(cfg, url, contentType, accept, body)
+          val (code, text, retryAfterMs) = exchange(cfg, url, contentType, accept, body, length)
           def failure = s"HTTP $code ${text.take(500)}"
           if (code >= 200 && code < 300) Right(text)
           else if (code == 429 || code >= 500) Left((failure, retryAfterMs))
@@ -63,21 +65,24 @@ object InfluxHttp {
   /** One request → (status, response body, a 429/503's `Retry-After` in ms
     * or 0). */
   private def exchange(cfg: InfluxSink.Config, url: URL, contentType: String,
-                       accept: Option[String], body: Array[Byte]): (Int, String, Long) =
+                       accept: Option[String], body: Array[Byte],
+                       length: Int): (Int, String, Long) =
     testExchange match {
-      case Some(f) => val (code, text) = f(url.getPath, body); (code, text, 0L)
+      case Some(f) =>
+        val (code, text) = f(url.getPath, java.util.Arrays.copyOf(body, length))
+        (code, text, 0L)
       case None =>
         val conn = url.openConnection().asInstanceOf[HttpURLConnection]
         conn.setConnectTimeout(cfg.connectTimeoutMs)
         conn.setReadTimeout(cfg.readTimeoutMs)
         conn.setRequestMethod("POST")
         conn.setDoOutput(true)
-        conn.setFixedLengthStreamingMode(body.length)
+        conn.setFixedLengthStreamingMode(length)
         conn.setRequestProperty("Authorization", s"Token ${cfg.token}")
         conn.setRequestProperty("Content-Type", contentType)
         accept.foreach(conn.setRequestProperty("Accept", _))
         val out = conn.getOutputStream
-        try out.write(body) finally out.close()
+        try out.write(body, 0, length) finally out.close()
         val code = conn.getResponseCode
         val in = if (code >= 400) conn.getErrorStream else conn.getInputStream
         val text =

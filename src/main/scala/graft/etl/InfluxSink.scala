@@ -1,7 +1,9 @@
 package graft.etl
 
 import graft.model.InfluxPoint
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import graft.sources.{InfluxDataWriter, PointOrdinals}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 import java.net.{URL, URLEncoder}
 import java.nio.charset.StandardCharsets
@@ -11,17 +13,19 @@ import java.nio.charset.StandardCharsets
   * synchronously one 10k batch at a time from a single thread,
   * sqllite2influxdb.py:100-161).
   *
-  * Design: `Dataset[InfluxPoint].mapPartitions` — each executor partition
-  * builds line-protocol strings locally and POSTs them to `/api/v2/write`
-  * through the one Influx client ([[InfluxHttp]]: auth, timeouts, bounded
-  * retry on 429/5xx/IO), giving N-way parallel writes with bounded memory
-  * (O(batchSize) lines resident, mirroring the reference's O(BATCH_SIZE)
-  * pull loop at sqllite2influxdb.py:183-189); [[write]] returns the lines
-  * it wrote, from one pass over the input. Idempotent by Influx point
-  * overwrite semantics (same measurement+tagset+time ⇒ upsert), so Spark
-  * task retries are safe (SURVEY §2.10-T3). Streaming writes go through
-  * the DSv2 sink ([[graft.sources.InfluxDataSource]],
-  * `writeStream.format("influx")`).
+  * Design: one per-task write loop, [[graft.sources.InfluxDataWriter]],
+  * shared by [[save]], [[write]] and the DSv2 sink
+  * ([[graft.sources.InfluxDataSource]], `format("influx")`, batch and
+  * streaming): each task encodes point rows straight into line-protocol
+  * bytes ([[LineEncoder]]) and POSTs every `batchSize` lines to
+  * `/api/v2/write` through the one Influx client ([[InfluxHttp]]: auth,
+  * timeouts, bounded retry on 429/5xx/IO), giving N-way parallel writes
+  * with bounded memory (one batch resident, mirroring the reference's
+  * O(BATCH_SIZE) pull loop at sqllite2influxdb.py:183-189). [[save]]
+  * returns the lines the successful tasks wrote, from one pass over the
+  * input; [[write]] is its typed form. Idempotent by Influx point overwrite semantics (same
+  * measurement+tagset+time ⇒ upsert), so Spark task retries are safe
+  * (SURVEY §2.10-T3).
   *
   * `pointByPoint` reproduces the reference's DEBUG per-point write mode
   * (sqllite2influxdb.py:148-153).
@@ -96,38 +100,58 @@ object InfluxSink {
     sb.toString
   }
 
-  /** Pluggable transport so tests capture lines without a server. */
+  /** The writer's transport: one call per batch. Tests and timing
+    * wrappers see each batch as its lines. */
   trait LineWriter extends Serializable {
     def writeBatch(lines: Seq[String]): Unit
+    /** Send one encoded batch; by default as its lines, cut at the lines'
+      * recorded ends. */
+    def writeEncoded(batch: LineEncoder): Unit = writeBatch(batch.lineStrings)
   }
 
   /** The HTTP transport: one [[InfluxHttp.post]] per batch to
     * `/api/v2/write` (URL built once per writer), under the client's
-    * retry policy. */
+    * retry policy. An encoded batch is posted as its bytes. */
   final class HttpLineWriter(cfg: Config) extends LineWriter {
     private val writeUrl = endpoint(cfg, "/api/v2/write", "org" -> cfg.org,
       "bucket" -> cfg.bucket, "precision" -> "ns")
 
-    override def writeBatch(lines: Seq[String]): Unit =
-      if (lines.nonEmpty) InfluxHttp.post(cfg, writeUrl, "write",
-        "text/plain; charset=utf-8", lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    private def post(body: Array[Byte], length: Int): Unit =
+      InfluxHttp.post(cfg, writeUrl, "write", "text/plain; charset=utf-8", body, length)
+
+    override def writeBatch(lines: Seq[String]): Unit = if (lines.nonEmpty) {
+      val body = lines.mkString("\n").getBytes(StandardCharsets.UTF_8)
+      post(body, body.length)
+    }
+
+    override def writeEncoded(batch: LineEncoder): Unit =
+      if (batch.lines > 0) post(batch.buffer, batch.byteLength)
   }
 
-  /** Write a point Dataset and return the number of lines written.
-    * Partition-parallel; within a partition, batches of `batchSize` exactly
-    * like the reference's fetchmany loop. Each partition returns the lines
-    * its transport accepted, summed on the driver in the same job, so only
-    * successful task attempts count and the input is evaluated once. */
-  def write(points: Dataset[InfluxPoint], cfg: Config,
-            writerFactory: Config => LineWriter = new HttpLineWriter(_)): Long = {
-    val batch = if (cfg.pointByPoint) 1 else cfg.batchSize
-    points.mapPartitions { it: Iterator[InfluxPoint] =>
-      val w = writerFactory(cfg)
-      var n = 0L
-      it.map(toLine).grouped(batch).foreach { g => w.writeBatch(g); n += g.size }
-      Iterator.single(n)
-    }(Encoders.scalaLong).collect().sum
+  /** Write a point DataFrame (Schemas.influxPoint columns, resolved by
+    * name) and return the number of lines written. Partition-parallel;
+    * within a partition, batches of `batchSize` exactly like the
+    * reference's fetchmany loop. Each task returns the lines its transport
+    * accepted, summed by the same job's collect, so only successful task
+    * attempts count, a failed task fails the write, and the input is
+    * evaluated once. */
+  def save(points: DataFrame, cfg: Config,
+           writerFactory: Config => LineWriter = new HttpLineWriter(_)): Long = {
+    val rows = points.select("measurement", "tags", "fields_num",
+      "fields_str", "time_ms")
+    val ords = PointOrdinals.resolve(rows.schema)
+    rows.queryExecution.toRdd.mapPartitions { it =>
+      val w = new InfluxDataWriter(TaskContext.getPartitionId(), cfg,
+        writerFactory(cfg), ords)
+      it.foreach(w.write)
+      Iterator.single(w.commit().nLines)
+    }.collect().sum
   }
+
+  /** [[save]] for a typed point Dataset. */
+  def write(points: Dataset[InfluxPoint], cfg: Config,
+            writerFactory: Config => LineWriter = new HttpLineWriter(_)): Long =
+    save(points.toDF(), cfg, writerFactory)
 
   /** points DataFrame (Schemas.influxPoint columns) → typed Dataset. */
   def asPoints(df: DataFrame): Dataset[InfluxPoint] = {

@@ -163,12 +163,13 @@ object MarkerCleanup {
 
     override def write(lines: Seq[String]): Unit = writer.writeBatch(lines)
     override def delete(startIso: String, stopIso: String,
-                        predicate: String): Unit =
+                        predicate: String): Unit = {
+      val body = (s"""{"start": "$startIso", "stop": "$stopIso", """ +
+        s""""predicate": "${escQuoted(predicate)}"}""").getBytes(StandardCharsets.UTF_8)
       InfluxHttp.post(cfg, InfluxSink.endpoint(cfg, "/api/v2/delete",
         "org" -> cfg.org, "bucket" -> cfg.bucket), "delete", "application/json",
-        (s"""{"start": "$startIso", "stop": "$stopIso", """ +
-          s""""predicate": "${escQuoted(predicate)}"}""")
-          .getBytes(StandardCharsets.UTF_8))
+        body, body.length)
+    }
   }
 
   /** Backslash-and-quote escaping, shared by the JSON delete body and the

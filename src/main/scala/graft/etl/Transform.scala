@@ -91,6 +91,11 @@ object Transform {
     * maps. A key is numeric when force-floated OR numeric-looking; a
     * force-float value that fails the cast becomes NULL and is dropped —
     * field skipped, row survives (quirk Q4, sqllite2influxdb.py:138-139).
+    * A cast that yields NaN or ±Infinity (`NaN`, `inf`, `1e400`, …) is
+    * dropped by the same rule: line protocol has no such float, and one
+    * such field would make Influx reject its whole batch. (Spark orders
+    * NaN above +Infinity, so `abs(v) < +Infinity` keeps exactly the
+    * finite values.)
     */
   def numericFields(attrs: Column): Column = {
     val entries = map_entries(attrs)
@@ -99,7 +104,8 @@ object Transform {
         when(e.getField("key").isin(forceFloatKeys: _*) ||
           isNumericLike(e.getField("value")),
           e.getField("value").try_cast("double")).as("value")))
-    map_from_entries(filter(casted, e => e.getField("value").isNotNull))
+    map_from_entries(filter(casted, e =>
+      abs(e.getField("value")) < lit(Double.PositiveInfinity)))
   }
 
   def stringFields(attrs: Column): Column = {
@@ -142,10 +148,16 @@ object Transform {
     */
   private def attrColumns(attrs: DataFrame,
                           extra: Column => Seq[Column] = _ => Nil): DataFrame = {
-    val a = withoutBlocked(parseAttrs(col("shared_attrs")))
-    attrs.select(Seq(col("attributes_id"),
-      measurement(a).as("attr_measurement"),
-      element_at(a, "friendly_name").as("attr_friendly_name")) ++ extra(a): _*)
+    // the parsed map is its own projection: subexpression elimination
+    // never shares an input of a higher-order function (map_filter here),
+    // so in one select every derived column would parse the blob again;
+    // CollapseProject keeps a non-cheap column referenced twice apart
+    val a = col("parsed_attrs")
+    attrs.select(col("attributes_id"),
+        withoutBlocked(parseAttrs(col("shared_attrs"))).as("parsed_attrs"))
+      .select(Seq(col("attributes_id"),
+        measurement(a).as("attr_measurement"),
+        element_at(a, "friendly_name").as("attr_friendly_name")) ++ extra(a): _*)
   }
 
   /** Full pipeline to the typed point struct (SURVEY §1.4): filter junk,

@@ -1,7 +1,6 @@
 package graft.sources
 
-import graft.etl.InfluxSink
-import graft.model.{InfluxPoint, Schemas}
+import graft.etl.{InfluxSink, LineEncoder}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -11,11 +10,9 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import scala.collection.mutable.ArrayBuffer
-
 /** S3 as a DataSource V2 sink: `df.write.format("influx").mode("append")`
   * over the point schema (Schemas.influxPoint). Each partition gets its own
-  * DataWriter that serializes rows to line protocol and POSTs batches of
+  * DataWriter that encodes rows to line protocol and POSTs batches of
   * `batchSize` — the executor-parallel version of the reference's serial
   * 10k-batch loop (sqllite2influxdb.py:146-159). Task retries are safe
   * because Influx point writes are idempotent upserts on
@@ -24,7 +21,8 @@ import scala.collection.mutable.ArrayBuffer
   * Options: url, org, bucket, token, batchSize, pointByPoint — same knobs
   * as the reference's .env (S4). This is the only streaming write path
   * (`writeStream.format("influx")`); batch writes can also go through
-  * [[graft.etl.InfluxSink.write]], which returns the lines it wrote.
+  * [[graft.etl.InfluxSink.save]], which runs the same per-task writer and
+  * returns the lines it wrote.
   */
 class InfluxDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "influx"
@@ -371,52 +369,34 @@ final case class InfluxDataWriterFactory(cfg: InfluxSink.Config,
     new InfluxDataWriter(partitionId, cfg, new InfluxSink.HttpLineWriter(cfg), ords)
 }
 
-/** Per-task writer: O(batchSize) lines resident, flush on boundary and at
-  * commit. Row layout is the fixed influxPoint schema. */
+/** Per-task writer, the one encode-and-batch loop of every Influx write:
+  * each row is encoded into the task's [[graft.etl.LineEncoder]] and every
+  * `batchSize` lines (1 with `pointByPoint`) go to the transport as one
+  * batch; the rest at commit, which reports the lines written. */
 final class InfluxDataWriter(partitionId: Int, cfg: InfluxSink.Config,
                              transport: InfluxSink.LineWriter,
                              ords: PointOrdinals)
   extends DataWriter[InternalRow] {
 
   private val batch = if (cfg.pointByPoint) 1 else cfg.batchSize
-  private val buf = new ArrayBuffer[String](batch)
+  private val encoder = new LineEncoder(ords)
   private var total = 0L
 
-  private def strMap(row: InternalRow, ord: Int): Map[String, String] = {
-    val m = row.getMap(ord)
-    (0 until m.numElements()).map { i =>
-      m.keyArray().getUTF8String(i).toString -> m.valueArray().getUTF8String(i).toString
-    }.toMap
-  }
-
-  private def numMap(row: InternalRow, ord: Int): Map[String, Double] = {
-    val m = row.getMap(ord)
-    (0 until m.numElements()).map { i =>
-      m.keyArray().getUTF8String(i).toString -> m.valueArray().getDouble(i)
-    }.toMap
-  }
-
   override def write(row: InternalRow): Unit = {
-    val p = InfluxPoint(
-      measurement = row.getUTF8String(ords.measurement).toString,
-      tags = strMap(row, ords.tags),
-      fields_num = numMap(row, ords.fieldsNum),
-      fields_str = strMap(row, ords.fieldsStr),
-      time_ms = row.getLong(ords.timeMs))
-    buf += InfluxSink.toLine(p)
-    total += 1
-    if (buf.length >= batch) flush()
+    encoder.append(row)
+    if (encoder.lines >= batch) flush()
   }
 
-  private def flush(): Unit = if (buf.nonEmpty) {
-    transport.writeBatch(buf.toSeq)
-    buf.clear()
+  private def flush(): Unit = if (encoder.lines > 0) {
+    transport.writeEncoded(encoder)
+    total += encoder.lines
+    encoder.clear()
   }
 
-  override def commit(): WriterCommitMessage = {
+  override def commit(): InfluxCommit = {
     flush()
     InfluxCommit(partitionId, total)
   }
-  override def abort(): Unit = buf.clear()
+  override def abort(): Unit = encoder.clear()
   override def close(): Unit = ()
 }

@@ -1366,14 +1366,9 @@ final class InfluxMicroBatchStream(cfg: InfluxSink.Config,
     val s = start.asInstanceOf[InfluxOffset].ms
     val e = end.asInstanceOf[InfluxOffset].ms
     if (e <= s) Array.empty
-    else if (readPartitions > 1 && e - s >= readPartitions) {
-      val width = (e - s) / readPartitions
-      (0 until readPartitions).map { i =>
-        val ps = s + i * width
-        val pe = if (i == readPartitions - 1) e else ps + width
-        InfluxInputPartition(ps, Some(pe)): InputPartition
-      }.toArray
-    } else Array(InfluxInputPartition(s, Some(e)))
+    else InfluxScan.splitRange(s, e, readPartitions).map { case (ps, pe) =>
+      InfluxInputPartition(ps, pe): InputPartition
+    }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

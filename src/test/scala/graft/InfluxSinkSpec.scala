@@ -117,6 +117,64 @@ class InfluxSinkSpec extends AnyFunSuite with Matchers {
     RecordingWriter.drain() shouldBe empty
   }
 
+  test("write: each batch reaches the LineWriter as its lines, cut at the " +
+    "encoder's line ends — a raw newline inside a string field stays in " +
+    "its line") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val points = Seq(
+      InfluxPoint("m", Map("t" -> "v"), Map(), Map("s" -> "two\nlines"), 1L),
+      InfluxPoint("m", Map("t" -> "v"), Map("value" -> 2.0), Map(), 2L))
+    RecordingWriter.drain()
+    InfluxSink.write(spark.createDataset(points).coalesce(1),
+      InfluxSink.Config("http://x", "o", "b", "tok"), _ => RecordingWriter) shouldBe 2
+    RecordingWriter.drain() shouldBe List(points.map(InfluxSink.toLine))
+  }
+
+  private def distinctPoints(n: Int): Seq[InfluxPoint] = (1 to n).map(i =>
+    InfluxPoint("m", Map("t" -> s"v$i"), Map("value" -> i.toDouble), Map("s" -> "x y"), i.toLong))
+
+  test("save: the returned count equals the lines the server received, at " +
+    "batchSize 1, 2, n and n+1 and under pointByPoint") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val n = 7
+    val points = distinctPoints(n)
+    val df = spark.createDataset(points).toDF().repartition(3)
+    val cfg = InfluxSink.Config("http://unused", "o", "b", "t")
+    val cases = Seq(1, 2, n, n + 1).map(b => (cfg.copy(batchSize = b), b)) :+
+      ((cfg.copy(pointByPoint = true), 1))
+    RecordingWriter.drain()
+    FakeInflux.writes = Some(RecordingWriter)
+    try cases.foreach { case (c, maxBatch) =>
+      withClue(c) {
+        InfluxSink.save(df, c) shouldBe n
+        val batches = RecordingWriter.drain()
+        batches.flatten.sorted shouldBe points.map(InfluxSink.toLine).sorted
+        all(batches.map(_.size)) should be <= maxBatch
+      }
+    } finally FakeInflux.writes = None
+  }
+
+  test("save: a 400 on one partition fails the write instead of returning " +
+    "a partial count") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val points = distinctPoints(6) :+
+      InfluxPoint("poison", Map(), Map("value" -> 0.0), Map(), 0L)
+    val df = spark.createDataset(points).toDF().repartition(3)
+    graft.etl.InfluxHttp.testExchange = Some((_, body) =>
+      if (new String(body, java.nio.charset.StandardCharsets.UTF_8).contains("poison"))
+        (400, "unable to parse 'poison'")
+      else (204, ""))
+    try {
+      val e = intercept[Exception](InfluxSink.save(df,
+        InfluxSink.Config("http://unused", "o", "b", "t", batchSize = 1, maxRetries = 0)))
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ") should include("400")
+    } finally graft.etl.InfluxHttp.testExchange = None
+  }
+
   test("configFromEnv: fail-fast on missing/invalid values (Q8)") {
     val good = Map("INFLUXDB_URL" -> "http://i:8086", "INFLUXDB_ORG" -> "o",
       "INFLUXDB_BUCKET" -> "b", "INFLUXDB_TOKEN" -> "t", "BATCH_SIZE" -> "500",

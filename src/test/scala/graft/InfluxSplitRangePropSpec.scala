@@ -30,4 +30,20 @@ class InfluxSplitRangePropSpec extends AnyFunSuite {
     }
     PropCheck.check(prop, minSuccessful = 200, tag = "InfluxSplitRangePropSpec#1")
   }
+
+  test("the micro-batch stream shards each trigger's range by splitRange: " +
+    "ranges narrower than, as wide as and wider than readPartitions") {
+    import graft.sources.{InfluxInputPartition, InfluxMicroBatchStream, InfluxOffset, InfluxScan}
+    val parts = 4
+    val stream = new InfluxMicroBatchStream(
+      graft.etl.InfluxSink.Config("http://unused", "o", "b", "t"), parts,
+      InfluxScan.schema, 0L, None, None, None, 0L)
+    for (width <- Seq(1L, 3L, 4L, 5L, 1003L)) {
+      val (s, e) = (1000L, 1000L + width)
+      val got = stream.planInputPartitions(InfluxOffset(s), InfluxOffset(e)).toSeq
+        .map { case p: InfluxInputPartition => (p.startMs, p.stopMs) }
+      assert(got == InfluxScan.splitRange(s, e, parts), s"width $width")
+    }
+    assert(stream.planInputPartitions(InfluxOffset(5L), InfluxOffset(5L)).isEmpty)
+  }
 }

@@ -89,6 +89,19 @@ class TransformSpec extends AnyFunSuite with Matchers {
     row.getAs[Map[String, String]]("fields_str").keySet should contain("state")
   }
 
+  test("Q4: a cast to NaN or ±Infinity drops the field, row survives") {
+    val huge = "9" * 400 // numeric-looking, casts to +Infinity
+    val blob = StateAttributesRow(15, s"""{"temperature":"NaN","humidity":"nan",""" +
+      s""""co2":"Infinity","voc":"inf","formaldehyd":"-Infinity",""" +
+      s""""linkquality":"1e400","battery":"$huge","pressure":"1013"}""")
+    val points = Transform.corePipeline(
+      Transform.fromRecorder(Seq(StateRow(1, Some(15), "ok_state", 1700000000.0)).toDF()
+        .withColumn("event_id", lit(1L))), meta, attrs.union(Seq(blob).toDF()))
+    val row = points.collect().head
+    row.getAs[Map[String, Double]]("fields_num") shouldBe Map("pressure" -> 1013.0)
+    row.getAs[Map[String, String]]("fields_str") shouldBe Map("state" -> "ok_state")
+  }
+
   test("Q7: attr named value/state overwrites the state field (LAST_WIN)") {
     val points = Transform.corePipeline(
       Transform.fromRecorder(Seq(StateRow(1, Some(14), "1.0", 1700000000.0)).toDF()
