@@ -217,7 +217,7 @@ object SparkEntry {
       build.write.mode("overwrite").parquet(out)
       out
     })
-    s.read.parquet(dir)
+    Tables.parquet(s, dir)
   }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */

@@ -1,8 +1,10 @@
 package graft.etl
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.jdbc.JDBCOptions
 import org.apache.spark.sql.jdbc.JdbcDialects
+import org.apache.spark.sql.types.StructType
 
 /** Fixture table readers (TESTDATA.md). Parquet scans are the rebuild's
   * stand-in for the reference's SQLite scan (S1, sqllite2influxdb.py:33-42);
@@ -13,8 +15,59 @@ import org.apache.spark.sql.jdbc.JdbcDialects
   * apply automatically when downstream selects/filters are declarative.
   */
 object Tables {
+  /** Fixture table `name` of the fixture directory `dir`, read through
+    * [[parquet]]: only the first read of a file version in a JVM runs
+    * Spark's schema-inference job. */
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** The session confs that change what Parquet schema inference returns
+    * for the same bytes (`nanosAsLong` is set by [[eventsRaw]] just before
+    * its read). */
+  private val inferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  /** (qualified path, inference confs) → (leaf files, inferred schema). */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[Option[String]]), (Seq[(String, Long, Long)], StructType)]()
+
+  /** `spark.read.parquet(path)`, with the schema Spark infers for it
+    * remembered per file version. Inference is a one-task Spark job on
+    * every plain read; here only the first read of a version runs it, and
+    * later reads pass the stored schema to `spark.read.schema(s)`, so the
+    * plan and its ReadSchema are unchanged. A version is the qualified
+    * path, each leaf file's (path, length, modification time) — a
+    * directory's are listed recursively — and the [[inferenceConfs]]; a
+    * new version replaces its path's old entry. The schema is always what
+    * a plain read inferred, never written by hand: the fixtures' types
+    * have changed between drops (see [[eventsRaw]]). */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(p)
+    // listStatus, not listFiles: a located status also loads each file's
+    // owner and permissions, which the local file system without Hadoop's
+    // native library gets by running a process per file
+    def leavesOf(dir: Path): Seq[(String, Long, Long)] =
+      fs.listStatus(dir).toSeq.flatMap { f =>
+        if (f.isDirectory) leavesOf(f.getPath)
+        else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    val leaves = leavesOf(qualified).sortBy(_._1)
+    val key = (qualified.toString, inferenceConfs.map(spark.conf.getOption))
+    val schema = Option(schemas.get(key)).filter(_._1 == leaves).fold {
+      val inferred = spark.read.parquet(path).schema
+      schemas.put(key, (leaves, inferred))
+      inferred
+    }(_._2)
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** The `events` fixture's `ts` physical type has varied across driver
     * drops: TIMESTAMP(NANOS) — which Spark's vectorized reader rejects

@@ -313,51 +313,6 @@ private[graft] object InfluxRollup {
           minMaxWindowed("_time", desc = true, prep = "value"))
     }
 
-    // the FluxBranch mirroring runSpec's single-spec program exactly (the
-    // same builder renders both, so fused stage text ≡ per-spec text)
-    def branchOf(spec: InfluxScan.AggSpec): InfluxScan.FluxBranch = spec match {
-      case InfluxScan.AggMinTime => InfluxScan.FluxBranch(limit = Some(1),
-        sortDesc = Some(false), sortCol = "_time", groupCols = groupCols,
-        aggPrep = Some("time"), windowEveryMs = Some(bucketMs), windowOffsetMs = offsetMs)
-      case InfluxScan.AggMaxTime => InfluxScan.FluxBranch(limit = Some(1),
-        sortDesc = Some(true), sortCol = "_time", groupCols = groupCols,
-        aggPrep = Some("time"), windowEveryMs = Some(bucketMs), windowOffsetMs = offsetMs)
-      case InfluxScan.AggMinValue => InfluxScan.FluxBranch(limit = Some(1),
-        sortDesc = Some(false), sortCol = "_value", groupCols = groupCols,
-        aggPrep = Some("value"), windowEveryMs = Some(bucketMs), windowOffsetMs = offsetMs)
-      case InfluxScan.AggMaxValue => InfluxScan.FluxBranch(limit = Some(1),
-        sortDesc = Some(true), sortCol = "_value", groupCols = groupCols,
-        aggPrep = Some("value"), windowEveryMs = Some(bucketMs), windowOffsetMs = offsetMs)
-      case InfluxScan.AggCountStar => InfluxScan.FluxBranch(count = true,
-        groupCols = aggGroupCols, windowEveryMs = Some(bucketMs), windowOffsetMs = offsetMs)
-      case InfluxScan.AggCountValue => InfluxScan.FluxBranch(countValue = true,
-        groupCols = aggGroupCols, windowEveryMs = Some(bucketMs), windowOffsetMs = offsetMs)
-      case InfluxScan.AggSumValue => InfluxScan.FluxBranch(sumValue = true,
-        groupCols = aggGroupCols, windowEveryMs = Some(bucketMs), windowOffsetMs = offsetMs)
-      case InfluxScan.AggSumSq => InfluxScan.FluxBranch(sumSq = true,
-        groupCols = aggGroupCols, windowEveryMs = Some(bucketMs), windowOffsetMs = offsetMs)
-      case InfluxScan.AggLastValue => InfluxScan.FluxBranch(limit = Some(1),
-        sortDesc = Some(true), sortCol = "_time", groupCols = groupCols,
-        aggPrep = Some("value_str"), windowEveryMs = Some(bucketMs), windowOffsetMs = offsetMs)
-      case InfluxScan.AggFirstValue => InfluxScan.FluxBranch(limit = Some(1),
-        sortDesc = Some(false), sortCol = "_time", groupCols = groupCols,
-        aggPrep = Some("value_str"), windowEveryMs = Some(bucketMs), windowOffsetMs = offsetMs)
-      case InfluxScan.AggIncrease => InfluxScan.FluxBranch(increase = true,
-        groupCols = aggGroupCols, windowEveryMs = Some(bucketMs), windowOffsetMs = offsetMs)
-      case InfluxScan.AggIntegral => InfluxScan.FluxBranch(integral = true,
-        groupCols = aggGroupCols, windowEveryMs = Some(bucketMs), windowOffsetMs = offsetMs)
-      case InfluxScan.AggLocfArea => InfluxScan.FluxBranch(locfArea = true,
-        groupCols = aggGroupCols, windowEveryMs = Some(bucketMs), windowOffsetMs = offsetMs)
-      case InfluxScan.AggFirstNumTime | InfluxScan.AggFirstNumValue =>
-        InfluxScan.FluxBranch(limit = Some(1), sortDesc = Some(false),
-          sortCol = "_time", groupCols = groupCols,
-          aggPrep = Some("value"), windowEveryMs = Some(bucketMs), windowOffsetMs = offsetMs)
-      case InfluxScan.AggLastNumTime | InfluxScan.AggLastNumValue =>
-        InfluxScan.FluxBranch(limit = Some(1), sortDesc = Some(true),
-          sortCol = "_time", groupCols = groupCols,
-          aggPrep = Some("value"), windowEveryMs = Some(bucketMs), windowOffsetMs = offsetMs)
-    }
-
     if (specs.length >= 2) {
       // FUSED protocol: every spec's pipeline rides ONE program over ONE
       // source read (union of marker-stamped branches) — a count+sum+min+
@@ -376,7 +331,9 @@ private[graft] object InfluxRollup {
       //    trusted aggregate shape): re-POST every spec singly, whose
       //    responses the per-spec trust checks adjudicate.
       InfluxScan.classifyFused(postFlux(cfg, InfluxScan.fusedFlux(cfg.bucket,
-        startMs, stopMs, measurement, field, tagEq, specs.map(branchOf),
+        startMs, stopMs, measurement, field, tagEq,
+        specs.map(InfluxScan.branchOf(_, groupCols, aggGroupCols,
+          Some(bucketMs), offsetMs)),
         tagRegex)), specs.length, keep) match {
         case InfluxScan.Marked(branches) =>
           specs.zipWithIndex.foreach { case (spec, i) =>

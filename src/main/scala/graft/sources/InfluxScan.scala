@@ -377,6 +377,42 @@ object InfluxScan {
       integral: Boolean = false, sumSq: Boolean = false,
       locfArea: Boolean = false)
 
+  /** The FluxBranch of one pushed spec: the same stage text its
+    * single-spec program carries, so a fused program computes exactly
+    * what the per-spec POSTs would. The sort |> limit branches (min/max,
+    * first/last and the numeric boundary pulls) group by `groupCols`; the
+    * count, sum and other aggregate branches by `aggGroupCols` — the flat
+    * push passes one list for both, the rollup its own aggregate key.
+    * Windowed reads (the rollup) pass the window's size and offset. */
+  private[graft] def branchOf(spec: AggSpec, groupCols: Seq[String],
+                              aggGroupCols: Seq[String],
+                              windowEveryMs: Option[Long] = None,
+                              windowOffsetMs: Long = 0L): FluxBranch = {
+    def pick(desc: Boolean, sortCol: String, prep: String) =
+      FluxBranch(limit = Some(1), sortDesc = Some(desc), sortCol = sortCol,
+        groupCols = groupCols, aggPrep = Some(prep),
+        windowEveryMs = windowEveryMs, windowOffsetMs = windowOffsetMs)
+    val agg = FluxBranch(groupCols = aggGroupCols,
+      windowEveryMs = windowEveryMs, windowOffsetMs = windowOffsetMs)
+    spec match {
+      case AggMinTime => pick(desc = false, "_time", "time")
+      case AggMaxTime => pick(desc = true, "_time", "time")
+      case AggMinValue => pick(desc = false, "_value", "value")
+      case AggMaxValue => pick(desc = true, "_value", "value")
+      case AggFirstValue => pick(desc = false, "_time", "value_str")
+      case AggLastValue => pick(desc = true, "_time", "value_str")
+      case AggFirstNumTime | AggFirstNumValue => pick(desc = false, "_time", "value")
+      case AggLastNumTime | AggLastNumValue => pick(desc = true, "_time", "value")
+      case AggCountStar => agg.copy(count = true)
+      case AggCountValue => agg.copy(countValue = true)
+      case AggSumValue => agg.copy(sumValue = true)
+      case AggSumSq => agg.copy(sumSq = true)
+      case AggIncrease => agg.copy(increase = true)
+      case AggIntegral => agg.copy(integral = true)
+      case AggLocfArea => agg.copy(locfArea = true)
+    }
+  }
+
   /** Column name each fused branch stamps on its rows (the closing map
     * stage writes the branch index into it) — how the response parser
     * attributes tables back to their aggregate spec. Underscore-prefixed
@@ -1098,38 +1134,11 @@ final class InfluxAggregateReader(cfg: InfluxSink.Config,
     case other => throw new IllegalArgumentException(s"ungroupable $other")
   }
 
-  // the FluxBranch of one pushed spec — the same program text the
-  // single-spec POST would carry, so the fused path computes exactly what
-  // the per-spec path does. For the global (ungrouped) case groupCols is
-  // empty and every branch's group stage degenerates to the global merge.
-  private def branchOf(spec: InfluxScan.AggSpec): InfluxScan.FluxBranch =
-    spec match {
-      case InfluxScan.AggMinTime => InfluxScan.FluxBranch(limit = Some(1),
-        sortDesc = Some(false), sortCol = "_time", groupCols = groupCols,
-        aggPrep = Some("time"))
-      case InfluxScan.AggMaxTime => InfluxScan.FluxBranch(limit = Some(1),
-        sortDesc = Some(true), sortCol = "_time", groupCols = groupCols,
-        aggPrep = Some("time"))
-      case InfluxScan.AggMinValue => InfluxScan.FluxBranch(limit = Some(1),
-        sortDesc = Some(false), sortCol = "_value", groupCols = groupCols,
-        aggPrep = Some("value"))
-      case InfluxScan.AggMaxValue => InfluxScan.FluxBranch(limit = Some(1),
-        sortDesc = Some(true), sortCol = "_value", groupCols = groupCols,
-        aggPrep = Some("value"))
-      case InfluxScan.AggCountStar =>
-        InfluxScan.FluxBranch(count = true, groupCols = groupCols)
-      case InfluxScan.AggCountValue =>
-        InfluxScan.FluxBranch(countValue = true, groupCols = groupCols)
-      case InfluxScan.AggSumValue =>
-        InfluxScan.FluxBranch(sumValue = true, groupCols = groupCols)
-      case other =>
-        throw new IllegalStateException(s"rollup-only spec $other")
-    }
-
   private def fusedFetch(fetchSpecs: Seq[InfluxScan.AggSpec]): InfluxScan.Fused =
     InfluxScan.classifyFused(InfluxWatermarkSource.postFlux(cfg,
       InfluxScan.fusedFlux(cfg.bucket, startMs, stopMs, measurement, field,
-        Nil, fetchSpecs.map(branchOf))), fetchSpecs.length,
+        Nil, fetchSpecs.map(InfluxScan.branchOf(_, groupCols, groupCols)))),
+      fetchSpecs.length,
       _.within(startMs, stopMs, measurement, field))
 
   /** Per-group partials. Each spec's response is reduced per group key;
