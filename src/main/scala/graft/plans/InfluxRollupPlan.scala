@@ -839,13 +839,8 @@ object InfluxBucketRollupRule extends Rule[LogicalPlan] with PredicateHelper {
     // slot is simply never referenced. Specs that already see string
     // samples (count-star, min/max over time_ms, last()/first()) make
     // the extra branch unnecessary.
-    val occupancyBearing: InfluxScan.AggSpec => Boolean = {
-      case InfluxScan.AggCountStar | InfluxScan.AggMinTime |
-           InfluxScan.AggMaxTime | InfluxScan.AggLastValue |
-           InfluxScan.AggFirstValue => true
-      case _ => false
-    }
-    if (!specs.exists(occupancyBearing)) slotFor(InfluxScan.AggCountStar)
+    if (!specs.exists(InfluxRollup.occupancyBearing))
+      slotFor(InfluxScan.AggCountStar)
     // bucket-free groupings are claimed ONLY for shapes V2 aggregate
     // pushdown cannot serve: a max_by/min_by anywhere in the aggregate
     // list, a tags['k'] / floor(value∘lit) grouping key (map extractions
@@ -875,7 +870,7 @@ object InfluxBucketRollupRule extends Rule[LogicalPlan] with PredicateHelper {
     val leaf = InfluxBucketRollupPlan(
       tagOut ++ (bucketAttr +: slots.toSeq),
       InfluxTable.cfgFrom(opts),
-      Option(opts.get("readPartitions")).map(_.toInt).getOrElse(4),
+      InfluxTable.readPartitions(opts),
       bounds.startMs, bounds.stopMs, bounds.measurement, bounds.field,
       bucketMs, specs.toSeq, groupKeys.map(_._2).toSeq, bounds.tagEq,
       bounds.tagRegex, bucketOffsetMs)
@@ -943,21 +938,16 @@ case class InfluxBucketRollupExec(output: Seq[Attribute],
     extends LeafExecNode {
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val shards: Seq[(Long, Option[Long])] = stopMs match {
-      // contradictory range: zero buckets IS the grouped empty answer
-      case Some(stop) if stop <= startMs => Nil
-      case Some(stop) =>
-        InfluxScan.splitRange(startMs, stop, readPartitions)
-      case None => Seq((startMs, None))
-    }
+    // contradictory range: zero buckets IS the grouped empty answer
+    val shards = InfluxScan.shards(startMs, stopMs, readPartitions)
     if (shards.isEmpty)
       return sparkContext.emptyRDD[InternalRow]
     val (lcfg, lspecs, lbucket, lm, lf, lg, lt, lre, loff) =
       (cfg, specs, bucketMs, measurement, field, groupCols, tagEq, tagRegex,
         bucketOffsetMs)
-    sparkContext.parallelize(shards, shards.length).flatMap { case (s, e) =>
-      InfluxRollup.partials(lcfg, lspecs, lbucket, s, e, lm, lf, lg, lt, lre,
-        loff)
+    sparkContext.parallelize(shards, shards.length).flatMap { p =>
+      InfluxRollup.partials(lcfg, lspecs, Some(lbucket), p.startMs, p.stopMs,
+        lm, lf, lg, lt, lre, loff)
     }
   }
 

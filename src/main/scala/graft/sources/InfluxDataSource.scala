@@ -96,8 +96,8 @@ final class InfluxTable(tableSchema: StructType,
           "influx rollup read: a user-specified schema must match the " +
             s"partial-rollup row $expect, got $tableSchema")
         val scan = new InfluxRollupScan(cfgFrom(options),
-          options.getOrDefault("readPartitions", "4").toInt, spec,
-          options.getOrDefault("streamLagMs", "0").toLong)
+          InfluxTable.readPartitions(options), spec,
+          InfluxTable.streamLagMs(options))
         new ScanBuilder { override def build(): Scan = scan }
       case None => newSampleScanBuilder(options)
     }
@@ -120,8 +120,8 @@ final class InfluxTable(tableSchema: StructType,
       }
     }
     new InfluxScanBuilder(cfgFrom(options),
-      options.getOrDefault("readPartitions", "4").toInt, tableSchema,
-      options.getOrDefault("streamLagMs", "0").toLong,
+      InfluxTable.readPartitions(options), tableSchema,
+      InfluxTable.streamLagMs(options),
       InfluxTable.decodeTagEq(
         options.getOrDefault(InfluxTable.TagFilterOption, "")),
       InfluxTable.decodeGroupTopN(
@@ -135,6 +135,16 @@ final class InfluxTable(tableSchema: StructType,
 }
 
 object InfluxTable {
+  /** The read options' defaults, in one place: `readPartitions` range
+    * shards per read (4), and `streamLagMs`, how far a stream polls
+    * behind the clock (0). The rollup rule reads the relation's options
+    * through the same two. */
+  private[graft] def readPartitions(o: java.util.Map[String, String]): Int =
+    Option(o.get("readPartitions")).fold(4)(_.toInt)
+
+  private[graft] def streamLagMs(o: java.util.Map[String, String]): Long =
+    Option(o.get("streamLagMs")).fold(0L)(_.toLong)
+
   /** Options → connection config; shared with the rollup rewrite rule,
     * which rebuilds the read context from the relation's own options. */
   private[graft] def cfgFrom(o: java.util.Map[String, String]): InfluxSink.Config =

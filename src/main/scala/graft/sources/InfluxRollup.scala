@@ -6,22 +6,67 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The windowed-Flux partials engine shared by BOTH rollup surfaces: the
-  * batch [[graft.plans.InfluxBucketRollupExec]] leaf (one call per range
-  * shard) and the streaming rollup read mode (one call per micro-batch
-  * offset-range shard, see InfluxRollupRead). Multi-spec rollups post ONE
-  * fused program per shard (union of marker-stamped branches, see
-  * [[InfluxScan.fusedFlux]]); single-spec rollups post the plain program.
-  * Either way the per-spec semantics are: count/sum as trusted windowed
-  * Flux aggregates (validated, tag-checked, clamped), min/max/last/first
-  * as per-window sort|>limit(1) sample pulls re-enforced row by row —
-  * correctness never hinges on server behavior, and a branch that fails
-  * its trust check falls back to its own single-spec POST.
+/** The one pushed-aggregate engine, shared by every surface that asks
+  * Influx for partial aggregates: the batch
+  * [[graft.plans.InfluxBucketRollupExec]] leaf (one call per range
+  * shard), the streaming rollup read mode (one call per micro-batch
+  * offset-range shard, see InfluxRollupRead) and, through [[flat]], the
+  * flat DSv2 aggregate push ([[InfluxScanBuilder.pushAggregation]]).
+  * Multi-spec reads post ONE fused program per shard (union of
+  * marker-stamped branches, see [[InfluxScan.fusedFlux]]); single-spec
+  * reads post the plain program. Either way the per-spec semantics are:
+  * count/sum as trusted Flux aggregates (validated, tag-checked,
+  * clamped), min/max/last/first as sort|>limit(1) sample pulls
+  * re-enforced row by row — correctness never hinges on server behavior,
+  * and a branch that fails its trust check falls back to its own
+  * single-spec POST. With a window every sample lands in its window's
+  * bucket; without one, in one bucket at the shard's start.
   */
 private[graft] object InfluxRollup {
 
+  /** Specs whose population is EVERY sample, string-typed ones included.
+    * A spec set without one would lose string-only groups (the unpushed
+    * aggregate emits them with NULL values and 0 counts), so the rollup
+    * rule and [[flat]] add a hidden count-star branch for its key set. */
+  def occupancyBearing(spec: InfluxScan.AggSpec): Boolean = spec match {
+    case InfluxScan.AggCountStar | InfluxScan.AggMinTime |
+         InfluxScan.AggMaxTime | InfluxScan.AggLastValue |
+         InfluxScan.AggFirstValue => true
+    case _ => false
+  }
+
+  /** The flat pushed aggregate of one shard: [[partials]] without a
+    * window, less the bucket column and the hidden occupancy slot. Per
+    * group, one slot per spec (group cells first, the aggSchema
+    * contract). An ungrouped read always emits its one row — count 0,
+    * every other slot NULL when no sample answered — and a degenerate
+    * range (stop ≤ start) emits it without a POST. */
+  def flat(cfg: InfluxSink.Config, specs: Seq[InfluxScan.AggSpec],
+           startMs: Long, stopMs: Option[Long],
+           measurement: Option[String], field: Option[String],
+           groupCols: Seq[String]): Iterator[InternalRow] = {
+    val fetch =
+      if (groupCols.isEmpty || specs.exists(occupancyBearing)) specs
+      else specs :+ InfluxScan.AggCountStar
+    val types = InfluxScan.aggSchema(specs, groupCols).fields.map(_.dataType)
+    val rows =
+      if (stopMs.exists(_ <= startMs)) Iterator.empty
+      else partials(cfg, fetch, None, startMs, stopMs, measurement, field,
+        groupCols).map { r =>
+        // skip the bucket column after the group cells
+        new GenericInternalRow(Array.tabulate[Any](types.length) { i =>
+          r.get(if (i < groupCols.length) i else i + 1, types(i))
+        })
+      }
+    if (groupCols.nonEmpty || rows.hasNext) rows
+    else Iterator.single(new GenericInternalRow(specs.map {
+      case InfluxScan.AggCountStar | InfluxScan.AggCountValue => Long.box(0L)
+      case _ => null
+    }.toArray[Any]))
+  }
+
   def partials(cfg: InfluxSink.Config, specs: Seq[InfluxScan.AggSpec],
-               bucketMs: Long, startMs: Long, stopMs: Option[Long],
+               bucketMs: Option[Long], startMs: Long, stopMs: Option[Long],
                measurement: Option[String], field: Option[String],
                groupCols: Seq[String] = Nil,
                tagEq: Seq[(String, Seq[String])] = Nil,
@@ -45,9 +90,10 @@ private[graft] object InfluxRollup {
       InfluxScan.parseSamples(rows).filter(keep).toSeq
     def post(flux: String): Iterable[FluxCsv.Row] = FluxCsv(postFlux(cfg, flux))
     // offset buckets: grid = epoch multiples of bucketMs, shifted +offset
-    // (the timezone-aligned window); offset 0 is the plain grid
-    def bucketOf(t: Long): Long =
-      Math.floorDiv(t - offsetMs, bucketMs) * bucketMs + offsetMs
+    // (the timezone-aligned window); offset 0 is the plain grid. No
+    // window: the shard is one bucket, keyed by its start
+    def bucketOf(t: Long): Long = bucketMs.fold(startMs)(w =>
+      Math.floorDiv(t - offsetMs, w) * w + offsetMs)
     def keyOf(s: InfluxScan.Sample): Seq[String] = groupCols.map {
       case "measurement" => s.measurement
       case "field" => s.field
@@ -133,15 +179,12 @@ private[graft] object InfluxRollup {
     def slotsAt(k: (Seq[String], Long)): Array[Any] =
       acc.getOrElseUpdate(k, new Array[Any](specs.length))
 
-    def minMaxWindowed(sortCol: String, desc: Boolean,
-                       prep: String = ""): Seq[InfluxScan.Sample] =
-      reEnforced(post(InfluxScan.flux(cfg.bucket, startMs, stopMs,
-        measurement, field, limit = Some(1), sortDesc = Some(desc),
-        sortCol = sortCol, groupCols = groupCols,
-        aggPrep = Some(if (prep.nonEmpty) prep
-                       else if (sortCol == "_value") "value" else "time"),
-        windowEveryMs = Some(bucketMs), tagEq = tagEq, tagRegex = tagRegex,
-        windowOffsetMs = offsetMs)))
+    // each spec's pipeline, the same stage text alone (its single-spec
+    // program) or fused; sort |> limit(1) branches (min/max, first/last,
+    // the numeric boundary pulls) return samples, the rest aggregates
+    val branches = specs.map(InfluxScan.branchOf(_, groupCols, aggGroupCols,
+      bucketMs, offsetMs))
+    val samplePull = branches.map(_.limit.isDefined)
 
     // a trusted server aggregate keyed by (EXTENDED group, normalized
     // bucket), clamped to the shard; groups whose tagEq cells do not
@@ -179,10 +222,14 @@ private[graft] object InfluxRollup {
         foldLocal[Long](samples, i, s => Some(s.timeMs), math.min, Long.box)
       case InfluxScan.AggMaxTime =>
         foldLocal[Long](samples, i, s => Some(s.timeMs), math.max, Long.box)
+      // Spark's double order: NaN above every number (math.min would let
+      // a NaN-valued sample win the min)
       case InfluxScan.AggMinValue =>
-        foldLocal[Double](samples, i, _.value, math.min, Double.box)
+        foldLocal[Double](samples, i, _.value,
+          (a, b) => if (java.lang.Double.compare(a, b) <= 0) a else b, Double.box)
       case InfluxScan.AggMaxValue =>
-        foldLocal[Double](samples, i, _.value, math.max, Double.box)
+        foldLocal[Double](samples, i, _.value,
+          (a, b) => if (java.lang.Double.compare(a, b) >= 0) a else b, Double.box)
       case InfluxScan.AggCountStar =>
         foldLocal[Long](samples, i, _ => Some(1L), _ + _, Long.box)
       case InfluxScan.AggCountValue =>
@@ -241,13 +288,17 @@ private[graft] object InfluxRollup {
           s => s.value.map(v => List((s.timeMs, v))), _ ++ _, x => x)
     }
 
-    // parse-or-None of a TRUSTED windowed aggregate response for a
-    // count/sum spec (shared by the single-spec path and fused branches)
+    // parse-or-None of a TRUSTED aggregate response for a count/sum spec
+    // (shared by the single-spec path and fused branches): windowed
+    // responses key each row by its window, unwindowed ones by the shard
+    def atStart[T](m: Option[Map[Seq[String], T]])
+        : Option[Map[(Seq[String], Long), T]] =
+      m.map(_.map { case (g, n) => (g, startMs) -> n })
     def foldTrustedAgg(spec: InfluxScan.AggSpec, i: Int,
                        rows: Iterable[FluxCsv.Row]): Boolean = spec match {
       case InfluxScan.AggCountStar | InfluxScan.AggCountValue =>
-        InfluxScan.parseWindowedCounts(rows, bucketMs, startMs, aggGroupCols,
-            offsetMs)
+        bucketMs.fold(atStart(InfluxScan.parseGroupedCounts(rows, aggGroupCols)))(
+            InfluxScan.parseWindowedCounts(rows, _, startMs, aggGroupCols, offsetMs))
           .flatMap(canonBins[Long](_, _ + _)) match {
           case Some(m) => foldTrusted[Long](m, i, _ + _, Long.box); true
           case None => false
@@ -255,8 +306,8 @@ private[graft] object InfluxRollup {
       case InfluxScan.AggSumValue | InfluxScan.AggSumSq |
            InfluxScan.AggIncrease | InfluxScan.AggIntegral |
            InfluxScan.AggLocfArea =>
-        InfluxScan.parseWindowedSums(rows, bucketMs, startMs, aggGroupCols,
-            offsetMs)
+        bucketMs.fold(atStart(InfluxScan.parseGroupedSums(rows, aggGroupCols)))(
+            InfluxScan.parseWindowedSums(rows, _, startMs, aggGroupCols, offsetMs))
           .flatMap(canonBins[Double](_, _ + _)) match {
           case Some(m) => foldTrusted[Double](m, i, _ + _, Double.box); true
           case None => false
@@ -265,52 +316,14 @@ private[graft] object InfluxRollup {
     }
 
     // ONE spec, its own POST — the single-spec protocol (also the per-spec
-    // fallback when a fused branch fails its trust check)
-    def runSpec(spec: InfluxScan.AggSpec, i: Int): Unit = spec match {
-      case InfluxScan.AggMinTime =>
-        foldLocalFor(spec, i, minMaxWindowed("_time", desc = false))
-      case InfluxScan.AggMaxTime =>
-        foldLocalFor(spec, i, minMaxWindowed("_time", desc = true))
-      case InfluxScan.AggMinValue =>
-        foldLocalFor(spec, i, minMaxWindowed("_value", desc = false))
-      case InfluxScan.AggMaxValue =>
-        foldLocalFor(spec, i, minMaxWindowed("_value", desc = true))
-      case InfluxScan.AggCountStar | InfluxScan.AggCountValue |
-           InfluxScan.AggSumValue | InfluxScan.AggSumSq |
-           InfluxScan.AggIncrease | InfluxScan.AggIntegral |
-           InfluxScan.AggLocfArea =>
-        val rows = post(InfluxScan.flux(cfg.bucket, startMs, stopMs,
-          measurement, field,
-          count = spec == InfluxScan.AggCountStar,
-          countValue = spec == InfluxScan.AggCountValue,
-          sumValue = spec == InfluxScan.AggSumValue,
-          sumSq = spec == InfluxScan.AggSumSq,
-          increase = spec == InfluxScan.AggIncrease,
-          integral = spec == InfluxScan.AggIntegral,
-          locfArea = spec == InfluxScan.AggLocfArea,
-          groupCols = aggGroupCols,
-          windowEveryMs = Some(bucketMs), tagEq = tagEq, tagRegex = tagRegex,
-          windowOffsetMs = offsetMs))
-        // untrusted response: bucket + fold the re-enforced samples locally
-        if (!foldTrustedAgg(spec, i, rows)) foldLocalFor(spec, i, reEnforced(rows))
-      // the "value_str" prep keeps string samples in play — a bucket whose
-      // newest sample is a string must yield a NULL value, not skip to
-      // the newest numeric
-      case InfluxScan.AggLastValue =>
-        foldLocalFor(spec, i,
-          minMaxWindowed("_time", desc = true, prep = "value_str"))
-      case InfluxScan.AggFirstValue =>
-        foldLocalFor(spec, i,
-          minMaxWindowed("_time", desc = false, prep = "value_str"))
-      // numeric boundary pulls: earliest/latest NUMERIC sample per window
-      // (prep "value" filters strings server-side; re-enforcement and the
-      // numeric-only folds keep the contract when a server ignores it)
-      case InfluxScan.AggFirstNumTime | InfluxScan.AggFirstNumValue =>
-        foldLocalFor(spec, i,
-          minMaxWindowed("_time", desc = false, prep = "value"))
-      case InfluxScan.AggLastNumTime | InfluxScan.AggLastNumValue =>
-        foldLocalFor(spec, i,
-          minMaxWindowed("_time", desc = true, prep = "value"))
+    // fallback when a fused branch fails its trust check): an aggregate
+    // response that fails its trust check, like a sample pull, folds its
+    // re-enforced samples locally
+    def runSpec(i: Int): Unit = {
+      val rows = post(InfluxScan.branchFlux(cfg.bucket, startMs, stopMs,
+        measurement, field, branches(i), tagEq, tagRegex))
+      if (samplePull(i) || !foldTrustedAgg(specs(i), i, rows))
+        foldLocalFor(specs(i), i, reEnforced(rows))
     }
 
     if (specs.length >= 2) {
@@ -319,7 +332,7 @@ private[graft] object InfluxRollup {
       // max rollup posts once per shard, not four times. Trust is
       // per-branch and falls back per-branch:
       //  - marked response → each count/sum branch parses under the same
-      //    windowed trust checks as its single-spec twin (a failing branch
+      //    trust checks as its single-spec twin (a failing branch
       //    re-POSTs its own single-spec query); min/max/last/first
       //    branches fold their re-enforced sample rows;
       //  - unmarked response WITH samples → the server ignored the fused
@@ -331,30 +344,21 @@ private[graft] object InfluxRollup {
       //    trusted aggregate shape): re-POST every spec singly, whose
       //    responses the per-spec trust checks adjudicate.
       InfluxScan.classifyFused(postFlux(cfg, InfluxScan.fusedFlux(cfg.bucket,
-        startMs, stopMs, measurement, field, tagEq,
-        specs.map(InfluxScan.branchOf(_, groupCols, aggGroupCols,
-          Some(bucketMs), offsetMs)),
-        tagRegex)), specs.length, keep) match {
-        case InfluxScan.Marked(branches) =>
-          specs.zipWithIndex.foreach { case (spec, i) =>
-            val rows = branches.getOrElse(i, Nil)
-            spec match {
-              case InfluxScan.AggCountStar | InfluxScan.AggCountValue |
-                   InfluxScan.AggSumValue | InfluxScan.AggSumSq |
-                   InfluxScan.AggIncrease | InfluxScan.AggIntegral |
-                   InfluxScan.AggLocfArea =>
-                if (!foldTrustedAgg(spec, i, rows)) runSpec(spec, i)
-              case _ => foldLocalFor(spec, i, reEnforced(rows))
-            }
+        startMs, stopMs, measurement, field, tagEq, branches, tagRegex)),
+        specs.length, keep) match {
+        case InfluxScan.Marked(marked) =>
+          specs.indices.foreach { i =>
+            val rows = marked.getOrElse(i, Nil)
+            if (samplePull(i)) foldLocalFor(specs(i), i, reEnforced(rows))
+            else if (!foldTrustedAgg(specs(i), i, rows)) runSpec(i)
           }
         case InfluxScan.RawDump(samples) =>
           specs.zipWithIndex.foreach { case (spec, i) =>
             foldLocalFor(spec, i, samples)
           }
-        case InfluxScan.AskEach =>
-          specs.zipWithIndex.foreach { case (spec, i) => runSpec(spec, i) }
+        case InfluxScan.AskEach => specs.indices.foreach(runSpec)
       }
-    } else specs.zipWithIndex.foreach { case (spec, i) => runSpec(spec, i) }
+    } else specs.indices.foreach(runSpec)
     // a bucket discovered only by a min/max query still needs its count
     // slots non-null (the final merge sums them)
     val countIdx = specs.zipWithIndex.collect {

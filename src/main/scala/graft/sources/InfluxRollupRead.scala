@@ -1165,7 +1165,7 @@ final class InfluxRollupScan(cfg: InfluxSink.Config, readPartitions: Int,
       spec.stopMs.map(e => s", stop=$e").getOrElse("") + ")"
 
   override def planInputPartitions(): Array[InputPartition] =
-    InfluxRollupScan.shards(spec.startMs, spec.stopMs, readPartitions)
+    InfluxScan.shards(spec.startMs, spec.stopMs, readPartitions).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     InfluxRollupReaderFactory(cfg, spec)
@@ -1175,91 +1175,45 @@ final class InfluxRollupScan(cfg: InfluxSink.Config, readPartitions: Int,
     new InfluxRollupMicroBatchStream(cfg, readPartitions, spec, streamLagMs)
 }
 
-object InfluxRollupScan {
-  /** The scan's house sharding rule ([[InfluxScan.splitRange]]);
-    * contradictory ranges yield zero shards — no groups IS the right
-    * empty-range rollup answer. */
-  private[sources] def shards(startMs: Long, stopMs: Option[Long],
-                              readPartitions: Int): Array[InputPartition] =
-    stopMs match {
-      case Some(stop) if stop <= startMs => Array.empty
-      case Some(stop) =>
-        InfluxScan.splitRange(startMs, stop, readPartitions)
-          .map { case (s, e) => InfluxInputPartition(s, e): InputPartition }
-          .toArray
-      case None => Array(InfluxInputPartition(startMs, None))
-    }
-}
-
 final case class InfluxRollupReaderFactory(cfg: InfluxSink.Config,
                                            spec: InfluxRollupRead.Spec)
   extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[InfluxInputPartition]
-    new PartitionReader[InternalRow] {
-      private lazy val rows: Iterator[InternalRow] =
-        InfluxRollup.partials(cfg, spec.aggs.map(_._1), spec.everyMs,
-          part.startMs, part.stopMs, spec.measurement, spec.field,
-          spec.groupCols, spec.tagEq, spec.tagRegex, spec.offsetMs)
-      private var row: InternalRow = _
-      override def next(): Boolean =
-        if (!rows.hasNext) false else { row = rows.next(); true }
-      override def get(): InternalRow = row
-      override def close(): Unit = ()
-    }
+    new InfluxPartitionReader(() => InfluxRollup.partials(cfg,
+      spec.aggs.map(_._1), Some(spec.everyMs), part.startMs, part.stopMs,
+      spec.measurement, spec.field, spec.groupCols, spec.tagEq, spec.tagRegex,
+      spec.offsetMs))
   }
 }
 
 /** The streaming half: the same epoch-ms high-water offsets as the raw
-  * sample stream ([[InfluxMicroBatchStream]]), but each trigger's
-  * half-open range POSTs windowed rollup partials instead of raw samples
-  * — bytes moved per trigger scale with BUCKETS, not samples. Restart
-  * resumes from the committed offset; a bucket cut by a trigger boundary
-  * simply contributes one partial per side, folded by the consumer's
-  * maintained aggregate. */
+  * sample stream ([[InfluxOffsetStream]]), but each trigger's half-open
+  * range POSTs windowed rollup partials instead of raw samples — bytes
+  * moved per trigger scale with BUCKETS, not samples. Restart resumes
+  * from the committed offset; a bucket cut by a trigger boundary simply
+  * contributes one partial per side, folded by the consumer's maintained
+  * aggregate. */
 final class InfluxRollupMicroBatchStream(cfg: InfluxSink.Config,
                                          readPartitions: Int,
                                          spec: InfluxRollupRead.Spec,
                                          lagMs: Long)
-  extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
+  extends InfluxOffsetStream(readPartitions, spec.startMs, spec.stopMs, lagMs) {
 
-  override def initialOffset(): Offset = InfluxOffset(spec.startMs)
-
-  override def latestOffset(): Offset = {
-    val now = InfluxReadTransports.clockOverride.map(_())
-      .getOrElse(System.currentTimeMillis()) - lagMs
-    val clamped = math.max(spec.startMs,
-      spec.stopMs.fold(now)(math.min(now, _)))
-    // alignTriggers: snap down to the bucket boundary so a bucket is read
-    // whole by one trigger — EXCEPT when the declared stop bound has been
-    // reached, where the final partial bucket must still be emitted (the
-    // snap would otherwise strand [lastBoundary, stop) forever). The snap
-    // runs on the SPEC'S grid: with a shifted-bucket read (offsetMs) an
-    // epoch-grid snap would land mid-bucket and quietly void the option's
-    // one-partial-per-bucket guarantee.
-    val aligned =
-      if (spec.alignTriggers && !spec.stopMs.contains(clamped))
-        math.max(spec.startMs,
-          Math.floorDiv(clamped - spec.offsetMs, spec.everyMs) *
-            spec.everyMs + spec.offsetMs)
-      else clamped
-    InfluxOffset(aligned)
-  }
-
-  override def deserializeOffset(json: String): Offset =
-    InfluxOffset(json.trim.toLong)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[InfluxOffset].ms
-    val e = end.asInstanceOf[InfluxOffset].ms
-    if (e <= s) Array.empty
-    else InfluxRollupScan.shards(s, Some(e), readPartitions)
-  }
+  // alignTriggers: snap down to the bucket boundary so a bucket is read
+  // whole by one trigger — EXCEPT when the declared stop bound has been
+  // reached, where the final partial bucket must still be emitted (the
+  // snap would otherwise strand [lastBoundary, stop) forever). The snap
+  // runs on the SPEC'S grid: with a shifted-bucket read (offsetMs) an
+  // epoch-grid snap would land mid-bucket and quietly void the option's
+  // one-partial-per-bucket guarantee.
+  override protected def snap(clamped: Long): Long =
+    if (spec.alignTriggers && !spec.stopMs.contains(clamped))
+      math.max(spec.startMs,
+        Math.floorDiv(clamped - spec.offsetMs, spec.everyMs) *
+          spec.everyMs + spec.offsetMs)
+    else clamped
 
   override def createReaderFactory(): PartitionReaderFactory =
     InfluxRollupReaderFactory(cfg, spec)
-
-  override def commit(end: Offset): Unit = () // offset log IS the state
-  override def stop(): Unit = ()
 }

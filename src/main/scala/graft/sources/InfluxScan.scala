@@ -81,6 +81,42 @@ object InfluxScan {
         tags = r.tags))
     }
 
+  /** The raw scan's rows: one POST per (program, population predicate),
+    * lazily, each program's parsed samples re-enforced against the fully
+    * pushed predicates (the Flux translation is believed exact, but the
+    * engine's correctness must not hinge on a server's boundary
+    * behavior) and kept only in its own population — the value-TopN path
+    * pairs a numeric top()/bottom() pull with the NULL-value pad pull, so
+    * the concatenation stays duplicate-free even against a server that
+    * answers every program with the same raw dump. Projected onto
+    * `required`, whose columns resolve to their cell getters once per
+    * read. */
+  private[sources] def sampleRows(cfg: InfluxSink.Config, required: StructType,
+                                  programs: Seq[(String, Sample => Boolean)],
+                                  startMs: Long, stopMs: Option[Long],
+                                  measurement: Option[String],
+                                  field: Option[String]): Iterator[InternalRow] = {
+    val cells: Array[Sample => Any] = required.fieldNames.map {
+      case "measurement" => (s: Sample) => UTF8String.fromString(s.measurement)
+      case "field" => (s: Sample) => UTF8String.fromString(s.field)
+      case "value" => (s: Sample) => s.value.map(Double.box).orNull
+      case "time_ms" => (s: Sample) => Long.box(s.timeMs)
+      case "tags" => (s: Sample) => ArrayBasedMapData(s.tags,
+        (k: Any) => UTF8String.fromString(k.asInstanceOf[String]),
+        (v: Any) => UTF8String.fromString(v.asInstanceOf[String]))
+      case other => throw new IllegalArgumentException(s"unknown column $other")
+    }
+    programs.iterator.flatMap { case (flux, keep) =>
+      parseSamples(FluxCsv(InfluxWatermarkSource.postFlux(cfg, flux)))
+        .filter(s => keep(s) && s.within(startMs, stopMs, measurement, field))
+    }.map { s =>
+      val values = new Array[Any](cells.length)
+      var i = 0
+      while (i < cells.length) { values(i) = cells(i)(s); i += 1 }
+      new GenericInternalRow(values)
+    }
+  }
+
   /** Influx's minimum representable time (1677-09-21), rounded up a
     * second: the unbounded lower bound. Epoch 0 would silently hide
     * pre-1970 samples the residual filter could never restore. */
@@ -231,12 +267,23 @@ object InfluxScan {
     math.floor(if (op == '*') value * x else value / x).toLong
   }
 
-  /** The scan's house sharding rule, shared by the raw scan, the rollup
-    * leaf and the rollup read mode: split a BOUNDED range into `parts`
-    * disjoint half-open sub-ranges (the last takes the remainder); a
-    * range narrower than the part count stays whole. Degenerate
-    * (stop ≤ start) ranges are each CALLER's decision — empty vs a
-    * synthetic empty-range partial — and never reach this splitter. */
+  /** The scan's house sharding rule, shared by the raw scan, the flat
+    * aggregate push, the rollup leaf, the rollup read mode and both
+    * micro-batch streams: a contradictory range (stop ≤ start) has no
+    * shards — Flux rejects it with HTTP 400, and zero rows (zero groups)
+    * is its answer; a bounded range splits by [[splitRange]]; an open
+    * one stays whole (nothing sound to split on). */
+  private[graft] def shards(startMs: Long, stopMs: Option[Long],
+                            parts: Int): Seq[InfluxInputPartition] =
+    (stopMs match {
+      case Some(stop) if stop <= startMs => Nil
+      case Some(stop) => splitRange(startMs, stop, parts)
+      case None => Seq((startMs, None))
+    }).map { case (s, e) => InfluxInputPartition(s, e) }
+
+  /** Split a BOUNDED range into `parts` disjoint half-open sub-ranges
+    * (the last takes the remainder); a range narrower than the part
+    * count stays whole. */
   private[graft] def splitRange(startMs: Long, stop: Long,
                                 parts: Int): Seq[(Long, Option[Long])] =
     if (parts > 1 && stop - startMs >= parts) {
@@ -284,19 +331,6 @@ object InfluxScan {
   private[graft] def parseGroupedSums(rows: Iterable[FluxCsv.Row], groupCols: Seq[String])
       : Option[Map[Seq[String], Double]] =
     parseGroupedAgg[Double](rows, groupCols, v => parsed(v.toDouble), _ + _)
-
-  /** Parse a Flux `count()` response: a count table carries `_value` but no
-    * `_time` column (aggregates drop the time axis; our count pipeline
-    * renames the counted `_time` slot back to `_value`). Returns None when
-    * the response looks like raw samples instead — the caller then counts
-    * the re-enforced parsed samples (a server that ignored the pushed
-    * aggregate, or the test stub, still yields a correct count). Delegates
-    * to the grouped parser with an empty key so a server that applied
-    * count() per series (several count tables) SUMS across tables instead
-    * of returning the first — one table-walk, no drift between the two. */
-  private[graft] def parseCountResponse(rows: Iterable[FluxCsv.Row]): Option[Long] =
-    parseGroupedCounts(rows, Nil).map(_.values.sum)
-    // count over an empty range returns no tables at all → empty map → 0
 
   /** Parse a WINDOWED (optionally grouped) Flux aggregate response: one
     * row per window per group, result in `_value`, window start in
@@ -650,11 +684,20 @@ object InfluxScan {
                           windowOffsetMs: Long = 0L,
                           integral: Boolean = false,
                           sumSq: Boolean = false,
-                          locfArea: Boolean = false): String = {
-    val b = FluxBranch(limit, sortDesc, sortCol, count, sumValue, countValue,
-      groupCols, aggPrep, windowEveryMs, topN, increase, windowOffsetMs,
-      integral, sumSq, locfArea)
-    val binTok = groupCols.find(_.startsWith("bin:"))
+                          locfArea: Boolean = false): String =
+    branchFlux(bucket, startMs, stopMs, measurement, field,
+      FluxBranch(limit, sortDesc, sortCol, count, sumValue, countValue,
+        groupCols, aggPrep, windowEveryMs, topN, increase, windowOffsetMs,
+        integral, sumSq, locfArea), tagEq, tagRegex)
+
+  /** The whole program of ONE branch: the single-spec program. */
+  private[graft] def branchFlux(bucket: String, startMs: Long,
+                                stopMs: Option[Long],
+                                measurement: Option[String],
+                                field: Option[String], b: FluxBranch,
+                                tagEq: Seq[(String, Seq[String])],
+                                tagRegex: Seq[(String, String)]): String = {
+    val binTok = b.groupCols.find(_.startsWith("bin:"))
     val (needsTypes, lines) = branchStages(b, tagEq, binTok, tagRegex)
     (importsFor(needsTypes, binTok, needsEventsImport(lines)) ++
       sourceStages(bucket, startMs, stopMs, measurement, field, tagEq, binTok,
@@ -709,8 +752,8 @@ object InfluxScan {
     * unattributable — re-POST each spec singly. */
   private[graft] case object AskEach extends Fused
 
-  /** The one decision over a fused-program response, shared by the
-    * pushed-aggregate reader and the rollup: rows are routed by the
+  /** The one decision over a fused-program response, made by the
+    * pushed-aggregate engine ([[InfluxRollup.partials]]): rows are routed by the
     * [[FusedMarkerCol]] each branch stamps. A data row without a valid
     * marker means the response did not come from the fused program
     * intact, and attributing it would be guesswork. */
@@ -734,7 +777,7 @@ object InfluxScan {
 
 final class InfluxScanBuilder(cfg: InfluxSink.Config, readPartitions: Int,
                               tableSchema: StructType = InfluxScan.schema,
-                              streamLagMs: Long = 0L,
+                              streamLagMs: Long,
                               tagEq: Seq[(String, Seq[String])] = Nil,
                               groupTopN: Option[(Int, Boolean, Seq[String])] = None,
                               tagRegex: Seq[(String, String)] = Nil)
@@ -760,13 +803,17 @@ final class InfluxScanBuilder(cfg: InfluxSink.Config, readPartitions: Int,
   // residual-kept measurement/field regex narrowings ((flux column, regex))
   private var colRegex: Seq[(String, String)] = Nil
 
-  /** min/max over time_ms/value and count(*) push as server-side Flux
-    * aggregates (PARTIAL push: each range partition emits one partial row
-    * per group; Spark merges with min/min, max/max, count→sum). GROUP BY
-    * measurement and/or field pushes too — Flux `group(columns:)` runs the
-    * same sort|>limit / count once per group server-side, so a grouped
-    * series inventory never pulls raw samples. Anything else stays in
-    * Spark.
+  /** min/max over time_ms/value, count(*), sum(value) and count(value)
+    * push as server-side Flux aggregates (PARTIAL push: each range
+    * partition emits one partial row per group; Spark merges with
+    * min/min, max/max, count→sum, sum→sum). GROUP BY measurement and/or
+    * field pushes too — Flux `group(columns:)` runs the same sort|>limit /
+    * count once per group server-side, so a grouped series inventory never
+    * pulls raw samples. Anything else stays in Spark. Each partition runs
+    * the rollup's engine without a window ([[InfluxRollup.flat]]): one
+    * fused POST per shard for several specs, the same trust checks and
+    * fallbacks. This is the entry point for every session, graft's
+    * extensions installed or not.
     *
     * Boundary (probed empirically on Spark 4.1): TIME-BUCKET grouping
     * (`group by time_ms div 3600000` — the Flux `aggregateWindow` shape)
@@ -947,7 +994,7 @@ final class InfluxScanImpl(val cfg: InfluxSink.Config, val readPartitions: Int,
                            val sortDesc: Option[Boolean],
                            val aggSpecs: Seq[InfluxScan.AggSpec] = Nil,
                            aggGroupCols: Seq[String] = Nil,
-                           streamLagMs: Long = 0L,
+                           streamLagMs: Long,
                            val tagEq: Seq[(String, Seq[String])] = Nil,
                            val sortCol: String = "_time",
                            val groupTopN: Option[(Int, Boolean, Seq[String])] = None,
@@ -995,26 +1042,15 @@ final class InfluxScanImpl(val cfg: InfluxSink.Config, val readPartitions: Int,
     s"influx range(start=$startMs$stop) measurement=$measurement field=$field$agg$grp$topn$gtopn$teq$tre"
   }
 
-  override def planInputPartitions(): Array[InputPartition] = stopMs match {
-    // contradictory predicates (t >= x && t < x) push an empty/inverted
-    // range; Flux rejects stop <= start with HTTP 400, and the right
-    // answer is zero rows, not a crash. With aggregates pushed, keep ONE
-    // partition that emits the empty-range partial (count=0, min/max=NULL)
-    // without a POST — a zero-partition aggregated scan would make the
-    // final merge's sum-of-counts NULL instead of 0
-    case Some(stop) if stop <= startMs =>
-      // grouped: zero groups IS the correct empty-range answer (no
-      // synthetic row needed — a final agg over zero partials per group
-      // yields no groups); global: one partial row keeps sum-of-counts 0
-      if (aggSpecs.nonEmpty && aggGroupCols.isEmpty)
-        Array(InfluxInputPartition(startMs, Some(startMs)))
-      else Array.empty
-    case Some(stop) =>
-      InfluxScan.splitRange(startMs, stop, readPartitions)
-        .map { case (s, e) => InfluxInputPartition(s, e): InputPartition }
-        .toArray
-    case None => Array(InfluxInputPartition(startMs, None))
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    // a flat GLOBAL aggregate over a contradictory range keeps ONE
+    // partition, which emits the empty-range partial (count=0,
+    // min/max=NULL) without a POST — a zero-partition aggregated scan
+    // would make the final merge's sum-of-counts NULL instead of 0.
+    // Grouped, zero groups IS the correct empty-range answer
+    if (aggSpecs.nonEmpty && aggGroupCols.isEmpty && stopMs.exists(_ <= startMs))
+      Array(InfluxInputPartition(startMs, Some(startMs)))
+    else InfluxScan.shards(startMs, stopMs, readPartitions).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     InfluxReaderFactory(cfg, required, measurement, field, limit, sortDesc,
@@ -1040,9 +1076,12 @@ final case class InfluxReaderFactory(cfg: InfluxSink.Config,
   extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[InfluxInputPartition]
+    def samples(programs: (String, InfluxScan.Sample => Boolean)*) =
+      new InfluxPartitionReader(() => InfluxScan.sampleRows(cfg, required,
+        programs, part.startMs, part.stopMs, measurement, field))
     if (aggSpecs.nonEmpty)
-      new InfluxAggregateReader(cfg, aggSpecs, part.startMs, part.stopMs,
-        measurement, field, aggGroupCols)
+      new InfluxPartitionReader(() => InfluxRollup.flat(cfg, aggSpecs,
+        part.startMs, part.stopMs, measurement, field, aggGroupCols))
     else if (groupTopN.isDefined && sortCol != "_value") {
       // grouped TopN narrowing (the injected InfluxGroupTopNRule): per
       // shard, per GROUP, the k numeric extremes via `group(columns:) |>
@@ -1052,17 +1091,15 @@ final case class InfluxReaderFactory(cfg: InfluxSink.Config,
       // Window+Filter stay in the plan and recompute the ranks exactly,
       // so a lying server changes bytes moved, never results.
       val (n, desc, gcols) = groupTopN.get
-      new InfluxPartitionReader(cfg, required,
-        Seq(
-          (InfluxScan.flux(cfg.bucket, part.startMs, part.stopMs, measurement,
-            field, sortDesc = Some(desc), sortCol = "_value", tagEq = tagEq,
-            topN = Some(n), groupCols = gcols, tagRegex = tagRegex),
-            (s: InfluxScan.Sample) => s.value.nonEmpty),
-          (InfluxScan.flux(cfg.bucket, part.startMs, part.stopMs, measurement,
-            field, limit = Some(n), aggPrep = Some("nonnum"), tagEq = tagEq,
-            groupCols = gcols, tagRegex = tagRegex),
-            (s: InfluxScan.Sample) => s.value.isEmpty)),
-        part.startMs, part.stopMs, measurement, field)
+      samples(
+        (InfluxScan.flux(cfg.bucket, part.startMs, part.stopMs, measurement,
+          field, sortDesc = Some(desc), sortCol = "_value", tagEq = tagEq,
+          topN = Some(n), groupCols = gcols, tagRegex = tagRegex),
+          _.value.nonEmpty),
+        (InfluxScan.flux(cfg.bucket, part.startMs, part.stopMs, measurement,
+          field, limit = Some(n), aggPrep = Some("nonnum"), tagEq = tagEq,
+          groupCols = gcols, tagRegex = tagRegex),
+          _.value.isEmpty))
     }
     else if (sortCol == "_value" && limit.isDefined)
       // value-ranked TopN: two POSTs whose union is a per-shard superset
@@ -1072,243 +1109,34 @@ final case class InfluxReaderFactory(cfg: InfluxSink.Config,
       // its own population (numeric vs not), so the union is disjoint by
       // construction; Spark's final TakeOrderedAndProject re-merges
       // (isPartiallyPushed)
-      new InfluxPartitionReader(cfg, required,
-        Seq(
-          (InfluxScan.flux(cfg.bucket, part.startMs, part.stopMs, measurement,
-            field, sortDesc = sortDesc, sortCol = sortCol, tagEq = tagEq,
-            topN = limit, tagRegex = tagRegex),
-            (s: InfluxScan.Sample) => s.value.nonEmpty),
-          (InfluxScan.flux(cfg.bucket, part.startMs, part.stopMs, measurement,
-            field, limit = limit, aggPrep = Some("nonnum"), tagEq = tagEq,
-            tagRegex = tagRegex),
-            (s: InfluxScan.Sample) => s.value.isEmpty)),
-        part.startMs, part.stopMs, measurement, field)
-    else new InfluxPartitionReader(cfg, required,
-      Seq((InfluxScan.flux(cfg.bucket, part.startMs, part.stopMs, measurement,
+      samples(
+        (InfluxScan.flux(cfg.bucket, part.startMs, part.stopMs, measurement,
+          field, sortDesc = sortDesc, sortCol = sortCol, tagEq = tagEq,
+          topN = limit, tagRegex = tagRegex),
+          _.value.nonEmpty),
+        (InfluxScan.flux(cfg.bucket, part.startMs, part.stopMs, measurement,
+          field, limit = limit, aggPrep = Some("nonnum"), tagEq = tagEq,
+          tagRegex = tagRegex),
+          _.value.isEmpty))
+    else samples(
+      (InfluxScan.flux(cfg.bucket, part.startMs, part.stopMs, measurement,
         field, limit, sortDesc, tagEq = tagEq, tagRegex = tagRegex),
-        (_: InfluxScan.Sample) => true)),
-      part.startMs, part.stopMs, measurement, field)
+        _ => true))
   }
 }
 
-/** Partial-aggregate reader: one row per partition per GROUP (one total
-  * when no grouping is pushed), one slot per pushed aggregate. min/max run
-  * as the TopN Flux pipeline (`group(...) |> sort |> limit(n:1)` over
-  * `_time`/`_value` — with pushed grouping the limit applies per group
-  * table, which is exactly the per-group min/max), count as Flux
-  * `group(...) |> count()` — the server reduces its side to group-count
-  * rows per POST, so the partition never streams raw samples. Belt and
-  * braces as everywhere in this source: min/max responses are re-filtered
-  * and re-reduced over whatever samples came back (a server that ignored
-  * the sort/limit still yields the exact answer), and a count response
-  * that looks like raw samples is counted locally after re-enforcement. */
-final class InfluxAggregateReader(cfg: InfluxSink.Config,
-                                  specs: Seq[InfluxScan.AggSpec],
-                                  startMs: Long, stopMs: Option[Long],
-                                  measurement: Option[String],
-                                  field: Option[String],
-                                  groupCols: Seq[String] = Nil)
+/** The one PartitionReader of the Influx source — raw samples, flat
+  * aggregate partials and rollup partials alike: it drains a row
+  * iterator built on the first `next()`, so a task POSTs only once it
+  * runs. */
+final class InfluxPartitionReader(rows: () => Iterator[InternalRow])
   extends PartitionReader[InternalRow] {
-
-  private var rows: Iterator[InternalRow] = _
-  private var row: InternalRow = _
-
-  private def post(fluxSrc: String): Iterable[FluxCsv.Row] =
-    FluxCsv(InfluxWatermarkSource.postFlux(cfg, fluxSrc))
-
-  private def reEnforced(rows: Iterable[FluxCsv.Row]): Seq[InfluxScan.Sample] =
-    InfluxScan.parseSamples(rows)
-      .filter(_.within(startMs, stopMs, measurement, field)).toSeq
-
-  private def minMax(sortCol: String, desc: Boolean): Seq[InfluxScan.Sample] =
-    reEnforced(post(InfluxScan.flux(cfg.bucket, startMs, stopMs, measurement,
-      field, limit = Some(1), sortDesc = Some(desc), sortCol = sortCol,
-      groupCols = groupCols,
-      // time sorts drop `_value` before group() (type-collision hygiene);
-      // value sorts keep only numeric samples, floated — see flux()
-      aggPrep = Some(if (sortCol == "_value") "value" else "time"))))
-
-  private def key(s: InfluxScan.Sample): Seq[String] = groupCols.map {
-    case "measurement" => s.measurement
-    case "field" => s.field
-    case other => throw new IllegalArgumentException(s"ungroupable $other")
-  }
-
-  private def fusedFetch(fetchSpecs: Seq[InfluxScan.AggSpec]): InfluxScan.Fused =
-    InfluxScan.classifyFused(InfluxWatermarkSource.postFlux(cfg,
-      InfluxScan.fusedFlux(cfg.bucket, startMs, stopMs, measurement, field,
-        Nil, fetchSpecs.map(InfluxScan.branchOf(_, groupCols, groupCols)))),
-      fetchSpecs.length,
-      _.within(startMs, stopMs, measurement, field))
-
-  /** Per-group partials. Each spec's response is reduced per group key;
-    * the emitted key set is the union across specs (with one sample set
-    * behind all responses they agree; under a degenerate server a missing
-    * count is 0 and a missing min/max NULL — both merge-neutral). With no
-    * pushed grouping the one key is the empty key, and its row is emitted
-    * even when no sample answered (count 0, min/max/sum NULL). */
-  private def compute(): Iterator[InternalRow] = {
-    def localMap(spec: InfluxScan.AggSpec, ss: Seq[InfluxScan.Sample])
-        : Map[Seq[String], Any] = spec match {
-      case InfluxScan.AggMinTime => ss.groupBy(key)
-        .map { case (k, g) => k -> (Long.box(g.map(_.timeMs).min): Any) }
-      case InfluxScan.AggMaxTime => ss.groupBy(key)
-        .map { case (k, g) => k -> (Long.box(g.map(_.timeMs).max): Any) }
-      case InfluxScan.AggMinValue => ss.groupBy(key).collect {
-        case (k, g) if g.flatMap(_.value).nonEmpty =>
-          k -> (Double.box(g.flatMap(_.value).min): Any)
-      }
-      case InfluxScan.AggMaxValue => ss.groupBy(key).collect {
-        case (k, g) if g.flatMap(_.value).nonEmpty =>
-          k -> (Double.box(g.flatMap(_.value).max): Any)
-      }
-      case InfluxScan.AggCountStar => ss.groupBy(key)
-        .map { case (k, g) => k -> (Long.box(g.size.toLong): Any) }
-      case InfluxScan.AggCountValue => ss.groupBy(key)
-        .map { case (k, g) =>
-          k -> (Long.box(g.count(_.value.nonEmpty).toLong): Any) }
-      case InfluxScan.AggSumValue => ss.groupBy(key).collect {
-        case (k, g) if g.flatMap(_.value).nonEmpty =>
-          k -> (Double.box(g.flatMap(_.value).sum): Any)
-      }
-      case other => throw new IllegalStateException(s"rollup-only $other")
-    }
-    def fromRows(spec: InfluxScan.AggSpec, rows: Iterable[FluxCsv.Row])
-        : Map[Seq[String], Any] = spec match {
-      case InfluxScan.AggCountStar | InfluxScan.AggCountValue =>
-        InfluxScan.parseGroupedCounts(rows, groupCols) match {
-          case Some(m) => m.view.mapValues(Long.box(_): Any).toMap
-          case None => localMap(spec, reEnforced(rows))
-        }
-      case InfluxScan.AggSumValue =>
-        InfluxScan.parseGroupedSums(rows, groupCols) match {
-          case Some(m) => m.view.mapValues(Double.box(_): Any).toMap
-          case None => localMap(spec, reEnforced(rows))
-        }
-      case minmax => localMap(minmax, reEnforced(rows))
-    }
-    def singleSpec(spec: InfluxScan.AggSpec): Map[Seq[String], Any] =
-      spec match {
-        case InfluxScan.AggMinTime =>
-          localMap(spec, minMax("_time", desc = false))
-        case InfluxScan.AggMaxTime =>
-          localMap(spec, minMax("_time", desc = true))
-        case InfluxScan.AggMinValue =>
-          localMap(spec, minMax("_value", desc = false))
-        case InfluxScan.AggMaxValue =>
-          localMap(spec, minMax("_value", desc = true))
-        case agg => fromRows(agg, post(InfluxScan.flux(cfg.bucket, startMs,
-          stopMs, measurement, field,
-          count = agg == InfluxScan.AggCountStar,
-          countValue = agg == InfluxScan.AggCountValue,
-          sumValue = agg == InfluxScan.AggSumValue,
-          groupCols = groupCols)))
-      }
-    // a partial-pushed GROUPED aggregate must emit a row for every group
-    // Spark's unpushed aggregate would: STRING samples occupy a group
-    // while contributing to no numeric-population spec, so a spec set
-    // made only of min/max/sum/count over `value` would lose string-only
-    // groups (the unpushed twin emits them with NULL aggregates and 0
-    // counts — exactly what the slot defaulting below produces, once the
-    // KEY materializes). When no spec sees all samples, ride a hidden
-    // count-star branch in the SAME fused POST purely for its key set
-    // (or one extra POST on the single-spec path). The ungrouped row
-    // always exists, so it needs no such branch.
-    val occupancyBearing = groupCols.isEmpty || specs.exists {
-      case InfluxScan.AggCountStar | InfluxScan.AggMinTime |
-           InfluxScan.AggMaxTime => true
-      case _ => false
-    }
-    var occKeys: Seq[Seq[String]] = Nil
-    val perSpec: Seq[Map[Seq[String], Any]] =
-      if (stopMs.exists(_ <= startMs)) specs.map(_ => Map.empty) // no POST
-      else if (specs.length >= 2 || !occupancyBearing) {
-        val fetchSpecs =
-          if (occupancyBearing) specs else specs :+ InfluxScan.AggCountStar
-        fusedFetch(fetchSpecs) match {
-          case InfluxScan.Marked(branches) =>
-            if (!occupancyBearing) occKeys = fromRows(InfluxScan.AggCountStar,
-              branches.getOrElse(specs.length, Nil)).keys.toSeq
-            specs.zipWithIndex.map { case (spec, i) =>
-              fromRows(spec, branches.getOrElse(i, Nil))
-            }
-          case InfluxScan.RawDump(samples) =>
-            if (!occupancyBearing)
-              occKeys = localMap(InfluxScan.AggCountStar, samples).keys.toSeq
-            specs.map(localMap(_, samples))
-          case InfluxScan.AskEach =>
-            if (!occupancyBearing)
-              occKeys = singleSpec(InfluxScan.AggCountStar).keys.toSeq
-            specs.map(singleSpec)
-        }
-      }
-      else specs.map(singleSpec)
-    val keys =
-      if (groupCols.isEmpty) Seq(Nil) else (perSpec.flatMap(_.keys) ++ occKeys).distinct
-    keys.iterator.map { k =>
-      val vals: Array[Any] =
-        (k.map(s => UTF8String.fromString(s): Any) ++
-          specs.zip(perSpec).map { case (spec, m) =>
-            m.getOrElse(k, spec match {
-              case InfluxScan.AggCountStar | InfluxScan.AggCountValue =>
-                Long.box(0L)
-              case _ => null
-            })
-          }).toArray
-      new GenericInternalRow(vals)
-    }
-  }
-
-  override def next(): Boolean = {
-    if (rows == null) rows = compute()
-    if (!rows.hasNext) false
-    else { row = rows.next(); true }
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = ()
-}
-
-final class InfluxPartitionReader(cfg: InfluxSink.Config,
-                                  required: StructType,
-                                  programs: Seq[(String, InfluxScan.Sample => Boolean)],
-                                  startMs: Long, stopMs: Option[Long],
-                                  measurement: Option[String],
-                                  field: Option[String])
-  extends PartitionReader[InternalRow] {
-
-  private lazy val samples: Iterator[InfluxScan.Sample] =
-    // one POST per (program, population predicate) — the value-TopN path
-    // pairs a numeric top()/bottom() pull with the NULL-value pad pull,
-    // and each program's re-check keeps ONLY its own population, so the
-    // concatenation stays duplicate-free even against a server that
-    // answers every program with the same raw dump. Re-enforce the
-    // fully-pushed predicates on the parsed samples: the Flux translation
-    // is believed exact, but the engine's correctness must not hinge on a
-    // server's boundary behavior
-    programs.iterator.flatMap { case (flux, keep) =>
-      InfluxScan.parseSamples(FluxCsv(InfluxWatermarkSource.postFlux(cfg, flux)))
-        .filter(s => keep(s) && s.within(startMs, stopMs, measurement, field))
-    }
+  private lazy val it = rows()
   private var row: InternalRow = _
 
   override def next(): Boolean =
-    if (!samples.hasNext) false
-    else { row = toRow(samples.next()); true }
-
-  private def toRow(s: InfluxScan.Sample): InternalRow = {
-    val values = required.fields.map(_.name).map {
-      case "measurement" => UTF8String.fromString(s.measurement)
-      case "field" => UTF8String.fromString(s.field)
-      case "value" => s.value.map(Double.box).orNull
-      case "time_ms" => Long.box(s.timeMs)
-      case "tags" => ArrayBasedMapData(s.tags,
-        (k: Any) => UTF8String.fromString(k.asInstanceOf[String]),
-        (v: Any) => UTF8String.fromString(v.asInstanceOf[String]))
-      case other => throw new IllegalArgumentException(s"unknown column $other")
-    }
-    new GenericInternalRow(values.asInstanceOf[Array[Any]])
-  }
+    if (!it.hasNext) false
+    else { row = it.next(); true }
 
   override def get(): InternalRow = row
   override def close(): Unit = ()
@@ -1331,13 +1159,46 @@ final case class InfluxOffset(ms: Long)
   override def json(): String = ms.toString
 }
 
+/** The epoch-ms offset protocol of both Influx micro-batch streams (raw
+  * samples and rollup partials): each trigger advances the offset to
+  * "now" less `lagMs`, clamped to [startMs, stopMs] — never before the
+  * initial offset, never past a pushed/declared upper bound — and passed
+  * through [[snap]]; its half-open range since the last offset shards by
+  * [[InfluxScan.shards]]. The offset log IS the state: commit and stop
+  * hold nothing. */
+abstract class InfluxOffsetStream(readPartitions: Int, startMs: Long,
+                                  stopMs: Option[Long], lagMs: Long)
+  extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
+  import org.apache.spark.sql.connector.read.streaming.Offset
+
+  /** Where a trigger ending at the clamped `ms` may end instead. */
+  protected def snap(ms: Long): Long = ms
+
+  override def initialOffset(): Offset = InfluxOffset(startMs)
+
+  override def latestOffset(): Offset = {
+    val now = InfluxReadTransports.clockOverride.map(_())
+      .getOrElse(System.currentTimeMillis()) - lagMs
+    InfluxOffset(snap(math.max(startMs, stopMs.fold(now)(math.min(now, _)))))
+  }
+
+  override def deserializeOffset(json: String): Offset =
+    InfluxOffset(json.trim.toLong)
+
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    InfluxScan.shards(start.asInstanceOf[InfluxOffset].ms,
+      Some(end.asInstanceOf[InfluxOffset].ms), readPartitions).toArray
+
+  override def commit(end: Offset): Unit = ()
+  override def stop(): Unit = ()
+}
+
 /** S2 as a STREAMING source (`spark.readStream.format("influx")`): the
   * reference's `while True: poll(newer-than-watermark)` loop
   * (sqllite2influxdb.py:183-189) expressed as a DSv2 MicroBatchStream.
-  * Each trigger advances the offset to "now" (bounded by any pushed upper
-  * time bound) and reads the half-open range since the last offset —
-  * split into the same disjoint per-task Flux POSTs as the batch scan, so
-  * a wide catch-up batch after downtime parallelizes instead of
+  * Each trigger reads the half-open range since the last offset, split
+  * into the same disjoint per-task Flux POSTs as the batch scan, so a
+  * wide catch-up batch after downtime parallelizes instead of
   * single-threading. Offsets checkpoint as epoch-ms; restart resumes from
   * the committed high-water mark — exactly-once delivery into an
   * idempotent sink without any source-side state beyond the offset.
@@ -1355,35 +1216,9 @@ final class InfluxMicroBatchStream(cfg: InfluxSink.Config,
                                    tagEq: Seq[(String, Seq[String])] = Nil,
                                    groupTopN: Option[(Int, Boolean, Seq[String])] = None,
                                    tagRegex: Seq[(String, String)] = Nil)
-  extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  override def initialOffset(): Offset = InfluxOffset(startMs)
-
-  override def latestOffset(): Offset = {
-    val now = InfluxReadTransports.clockOverride.map(_())
-      .getOrElse(System.currentTimeMillis()) - lagMs
-    // clamp to [startMs, stopMs]: never regress before the initial offset,
-    // never poll past a pushed/declared upper bound
-    InfluxOffset(math.max(startMs, stopMs.fold(now)(math.min(now, _))))
-  }
-
-  override def deserializeOffset(json: String): Offset =
-    InfluxOffset(json.trim.toLong)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[InfluxOffset].ms
-    val e = end.asInstanceOf[InfluxOffset].ms
-    if (e <= s) Array.empty
-    else InfluxScan.splitRange(s, e, readPartitions).map { case (ps, pe) =>
-      InfluxInputPartition(ps, pe): InputPartition
-    }.toArray
-  }
+  extends InfluxOffsetStream(readPartitions, startMs, stopMs, lagMs) {
 
   override def createReaderFactory(): PartitionReaderFactory =
     InfluxReaderFactory(cfg, required, measurement, field, None, None,
       tagEq = tagEq, groupTopN = groupTopN, tagRegex = tagRegex)
-
-  override def commit(end: Offset): Unit = () // offset log IS the state
-  override def stop(): Unit = ()
 }

@@ -153,8 +153,13 @@ class InfluxReadSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("parseCountResponse on an error table throws, never a trusted zero") {
-    val e = intercept[RuntimeException](InfluxScan.parseCountResponse(FluxCsv(errorTable)))
+  /** The ungrouped count contract: the grouped parser under the empty
+    * key, summed across tables. */
+  private def ungroupedCount(csv: String): Option[Long] =
+    InfluxScan.parseGroupedCounts(FluxCsv(csv), Nil).map(_.values.sum)
+
+  test("an ungrouped count on an error table throws, never a trusted zero") {
+    val e = intercept[RuntimeException](ungroupedCount(errorTable))
     e.getMessage should include("panic: runtime error, index out of range")
   }
 
@@ -413,6 +418,36 @@ class InfluxReadSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("a raw sample whose value cell reads NaN folds like Spark's own " +
+    "min/max (NaN above every number) in the flat push and the rollup") {
+    val nanCsv =
+      """,result,table,_time,_value,_field,_measurement
+        |,_result,0,2024-01-01T00:00:07Z,21.5,value,ha_states
+        |,_result,0,2024-01-01T00:00:09Z,NaN,value,ha_states
+        |,_result,0,2024-01-01T00:00:11Z,22.5,value,ha_states
+        |""".stripMargin
+    withTransport(nanCsv) { _ =>
+      val base = influx(1).filter(col("time_ms") >= t0 && col("time_ms") < t0 + day)
+      // rendered: NaN never equals itself as a boxed double
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq.mkString(",")).toSet
+      val unpushed = base.filter(org.apache.spark.sql.functions.length(col("field")) >= 0)
+      val flat = (d: org.apache.spark.sql.DataFrame) =>
+        d.agg(min("value").as("mn"), max("value").as("mx"))
+      val rollup = (d: org.apache.spark.sql.DataFrame) =>
+        d.groupBy(expr("time_ms div 3600000").as("h"))
+          .agg(min("value").as("mn"), max("value").as("mx"))
+      flat(base).queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+      ) should include("PushedAggregates")
+      rollup(base).queryExecution.optimizedPlan.toString should include(
+        "InfluxBucketRollup")
+      rows(flat(unpushed)) shouldBe Set("21.5,NaN")
+      rows(flat(base)) shouldBe rows(flat(unpushed))
+      rows(rollup(base)) shouldBe rows(rollup(unpushed))
+    }
+  }
+
   test("partial aggregate push: per-partition partials merge to the global " +
     "answer across range shards") {
     withTransport(cannedCsv) { _ =>
@@ -525,8 +560,8 @@ class InfluxReadSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("parseCountResponse: count-shaped CSV (no _time) parses; raw " +
-    "samples defer to local counting") {
+  test("ungrouped count: count CSV parses, raw samples defer, per-series " +
+    "tables sum") {
     val countCsv =
       """#datatype,string,long,dateTime:RFC3339,dateTime:RFC3339,long
         |#group,false,false,true,true,false
@@ -534,9 +569,9 @@ class InfluxReadSpec extends AnyFunSuite with Matchers {
         |,result,table,_start,_stop,_value
         |,_result,0,2024-01-01T00:00:00Z,2024-01-02T00:00:00Z,12345
         |""".stripMargin
-    InfluxScan.parseCountResponse(FluxCsv(countCsv)) shouldBe Some(12345L)
-    InfluxScan.parseCountResponse(FluxCsv(cannedCsv)) shouldBe None
-    InfluxScan.parseCountResponse(FluxCsv("")) shouldBe Some(0L)
+    ungroupedCount(countCsv) shouldBe Some(12345L)
+    ungroupedCount(cannedCsv) shouldBe None
+    ungroupedCount("") shouldBe Some(0L)
     // a server that applied count() per series returns one count table per
     // series key: the counts must SUM across tables, not first-table-wins
     val perSeriesCsv = countCsv + "\n" +
@@ -546,7 +581,7 @@ class InfluxReadSpec extends AnyFunSuite with Matchers {
         |,result,table,_start,_stop,_value
         |,_result,1,2024-01-01T00:00:00Z,2024-01-02T00:00:00Z,55
         |""".stripMargin
-    InfluxScan.parseCountResponse(FluxCsv(perSeriesCsv)) shouldBe Some(12400L)
+    ungroupedCount(perSeriesCsv) shouldBe Some(12400L)
   }
 
   test("a user-specified read schema fails at analysis time on unknown " +
